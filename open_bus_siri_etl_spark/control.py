@@ -12,19 +12,26 @@ daily compact() collapses the log — so status writes never rewrite the table
 or take a lock, removing the last per-snapshot serialization point at
 100x ingest fan-in.  At production scale the log becomes a Delta table with
 MERGE; the dataflow tables are unaffected by that choice.
+
+Each write builds its rows as Python dicts and hands them to Spark as an
+Arrow local relation (``sources.tables.local_frame``), so a status
+transition costs one Spark job: the log append.  Callers that already hold a row pass it on
+instead of reading it back (``start_loading(existing=...)``).  The
+amortized heartbeat (``heartbeat`` / ``heartbeat_bulk``) fires at most once
+per ``HEARTBEAT_AMORTIZE_SECONDS``, counted from the ``last_heartbeat`` the
+loading transition wrote, so a load shorter than that writes no beat.
 """
 
 from __future__ import annotations
 
 import datetime
 
-from pyspark.sql import Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import schemas
 from .functions import snapshot_control_id
-from .sources.tables import Warehouse
+from .sources.tables import Warehouse, local_frame
 
 HEARTBEAT_TAKEOVER_SECONDS = 120  # reference process_snapshot.py:261-268
 HEARTBEAT_AMORTIZE_SECONDS = 5  # reference process_snapshot.py:315-321
@@ -56,11 +63,12 @@ def _control_row(snapshot_id: str, **kw) -> dict:
 _CREATE_SCHEMA = T.StructType(
     [T.StructField(f.name, f.dataType, True) for f in schemas.SIRI_SNAPSHOT_CONTROL_SCHEMA.fields]
 )
+_ID_SCHEMA = T.StructType([T.StructField("snapshot_id", T.StringType())])
+_UNREAD = object()
 
 
 def _write_rows(wh: Warehouse, rows: list[dict]) -> None:
-    spark = wh.spark
-    df = spark.createDataFrame([Row(**r) for r in rows], _CREATE_SCHEMA).withColumn(
+    df = local_frame(wh.spark, rows, _CREATE_SCHEMA).withColumn(
         "id", snapshot_control_id("snapshot_id")
     )
     wh.upsert_rows(_CONTROL, df, ["snapshot_id"])
@@ -77,7 +85,10 @@ def get_control_row(wh: Warehouse, snapshot_id: str) -> dict | None:
 
 
 def start_loading(
-    wh: Warehouse, snapshot_id: str, force_reload: bool = False
+    wh: Warehouse,
+    snapshot_id: str,
+    force_reload: bool = False,
+    existing: dict | None = _UNREAD,
 ) -> tuple[dict, bool]:
     """pending/new/error → loading; returns (row, is_reload).
 
@@ -85,8 +96,11 @@ def start_loading(
     concurrent loader's heartbeat is younger than 120 s (unless force),
     resets counters, and (for reloads) the caller must delete the snapshot's
     old facts (Warehouse.delete_fact_snapshots / write_facts reload path).
+    ``existing``: the snapshot's current control row (None if it has none)
+    when the caller has just read it; otherwise it is read here.
     """
-    existing = get_control_row(wh, snapshot_id)
+    if existing is _UNREAD:
+        existing = get_control_row(wh, snapshot_id)
     now = _now()
     is_reload = False
     if existing is not None:
@@ -148,12 +162,15 @@ def mark_loaded_bulk(wh: Warehouse, stats_by_id: dict[str, dict]) -> None:
     _write_rows(wh, [_loaded_row(sid, s, now) for sid, s in stats_by_id.items()])
 
 
-def start_loading_bulk(wh: Warehouse, snapshot_ids: list[str]) -> None:
+def start_loading_bulk(
+    wh: Warehouse, snapshot_ids: list[str]
+) -> datetime.datetime | None:
     """Bulk loading-status write for force-reload batch paths (backfill /
     streaming foreachBatch): skips the per-snapshot guard — batch callers
-    own the whole id range — and writes one control update for all ids."""
+    own the whole id range — and writes one control update for all ids.
+    Returns the ``last_heartbeat`` written (None for no ids)."""
     if not snapshot_ids:
-        return
+        return None
     now = _now()
     rows = [
         _control_row(
@@ -172,6 +189,7 @@ def start_loading_bulk(wh: Warehouse, snapshot_ids: list[str]) -> None:
         for sid in snapshot_ids
     ]
     _write_rows(wh, rows)
+    return now
 
 
 def mark_error(wh: Warehouse, snapshot_id: str, error: str, stats: dict | None = None) -> None:
@@ -202,7 +220,8 @@ def register_pending(
     (reference update_pending_snapshots.py:47-68).  Anti-join replaces the
     reference's select-existing + set-difference + 1000-row insert batching —
     at scale the listing side is a DataFrame and this is one shuffle-free
-    broadcast anti join.
+    broadcast anti join.  Any logged row makes an id known, so the join
+    reads the raw log (``Warehouse.logged_keys``), not its latest versions.
 
     ``min_date`` is the GTFS-data clamp (reference
     update_pending_snapshots.py:88-97: only snapshots dated at-or-after the
@@ -211,18 +230,20 @@ def register_pending(
     table exists; None disables the clamp."""
     if not snapshot_ids:
         return 0
-    spark = wh.spark
     now = _now()
-    candidates = spark.createDataFrame(
-        [(s,) for s in snapshot_ids], "snapshot_id string"
+    candidates = local_frame(
+        wh.spark, [{"snapshot_id": s} for s in snapshot_ids], _ID_SCHEMA
     )
     if min_date is not None:
         candidates = candidates.filter(
             F.to_date(F.substring("snapshot_id", 1, 10), "yyyy/MM/dd")
             >= F.lit(min_date)
         )
-    existing = wh.read(_CONTROL).select("snapshot_id")
-    new = [r["snapshot_id"] for r in candidates.join(existing, "snapshot_id", "left_anti").collect()]
+    if wh.exists(_CONTROL):
+        candidates = candidates.join(
+            wh.logged_keys(_CONTROL), "snapshot_id", "left_anti"
+        )
+    new = [r["snapshot_id"] for r in candidates.collect()]
     if not new:
         return 0
     rows = [

@@ -91,11 +91,12 @@ def run_core(
     visits = iterate_monitored_stop_visits(
         snapshots_df.filter(F.col("Siri").isNotNull())
     )
-    parsed = parse_monitored_stop_visits(visits)
-    keyed = with_surrogate_ids(valid_pmsv(parsed)).localCheckpoint(eager=True)
+    # one scan of the JSON: the parsed rows carry ``_valid``, so both flows
+    # split off the same checkpoint
+    parsed = parse_monitored_stop_visits(visits).localCheckpoint(eager=True)
     _beat()
-    invalid = dead_letters(parsed).localCheckpoint(eager=True)
-    _beat()
+    keyed = with_surrogate_ids(valid_pmsv(parsed))
+    invalid = dead_letters(parsed)
 
     # dims: four anti-join appends; novelty attributed back to the earliest
     # contributing snapshot so bulk runs keep per-snapshot num_added_* parity
@@ -111,7 +112,7 @@ def run_core(
     # and collect once.  Six sequential collects cost six job launches per
     # ingest batch — pure driver latency that compounds at 1-day backfill
     # scale (1,440 snapshots); the branches all read the already-checkpointed
-    # `keyed`/`invalid`, so folding them changes job count, not results.
+    # parse, so folding them changes job count, not results.
     counter_frames = [
         keyed.groupBy(F.col(key_col).alias("id"))
         .agg(F.min("snapshot_id").alias("snapshot_id"))
@@ -149,11 +150,8 @@ def run_core(
 
     # dead letters: clear-and-write per snapshot (reference :409-414,232-234)
     if save_parse_errors:
-        dl_ids = wh.spark.createDataFrame(
-            [(s,) for s in snapshot_ids], "snapshot_id string"
-        )
         existing_dl = wh.read(_DEAD_LETTER_TABLE, invalid.schema)
-        keep = existing_dl.join(dl_ids, "snapshot_id", "left_anti")
+        keep = existing_dl.filter(~F.col("snapshot_id").isin(snapshot_ids))
         out = keep.unionByName(invalid).localCheckpoint(eager=True)
         wh.overwrite(_DEAD_LETTER_TABLE, out)
 
@@ -168,7 +166,7 @@ def run_core(
             "num_added_siri_rides": added["siri_ride"].get(sid, 0),
             "num_added_siri_ride_stops": added["siri_ride_stop"].get(sid, 0),
         }
-    keyed.unpersist()
+    parsed.unpersist()
     return stats
 
 
@@ -193,7 +191,9 @@ def process_snapshot(
     existing = control.get_control_row(wh, snapshot_id)
     if only_missing and existing is not None and existing["etl_status"] == control.ETL_LOADED and not force_reload:
         return None
-    row, _is_reload = control.start_loading(wh, snapshot_id, force_reload=force_reload)
+    row, _is_reload = control.start_loading(
+        wh, snapshot_id, force_reload=force_reload, existing=existing
+    )
     try:
         path, is_br = resolve_or_download_snapshot_path(
             landing_root, snapshot_id, url_template=download_url
@@ -206,7 +206,7 @@ def process_snapshot(
         corrupt = snapshots_df.filter(F.col("Siri").isNull()).count()
         if corrupt:
             raise ValueError(f"snapshot {snapshot_id}: corrupt document")
-        hb_last: list = [None]
+        hb_last = [row["last_heartbeat"]]
 
         def _hb():
             hb_last[0] = control.heartbeat(wh, snapshot_id, hb_last[0])
@@ -248,7 +248,7 @@ def process_snapshots_bulk(
     """
     if not snapshot_ids:
         return {}
-    control.start_loading_bulk(wh, snapshot_ids)
+    hb_last = [control.start_loading_bulk(wh, snapshot_ids)]
     paths = [snapshot_path(landing_root, s) for s in snapshot_ids]
     try:
         snapshots_df = read_snapshots(spark, paths)
@@ -259,7 +259,6 @@ def process_snapshots_bulk(
             .collect()
         }
         good_ids = [s for s in snapshot_ids if s not in corrupt_ids]
-        hb_last: list = [None]
 
         def _hb():
             hb_last[0] = control.heartbeat_bulk(wh, good_ids, hb_last[0])

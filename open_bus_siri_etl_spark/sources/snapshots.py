@@ -273,19 +273,20 @@ def list_snapshot_ids(root: str, limit_prefix: str = "") -> list[str]:
 
     Local-filesystem analog of the reference's hierarchical S3 prefix walk
     (update_pending_snapshots.py:15-44); on a real lake this is the file
-    index / partition discovery of the object store.
+    index / partition discovery of the object store.  A minute landed as
+    both ``.json`` and ``.json.br`` is listed once.
     """
-    found: list[str] = []
+    found: set[str] = set()
     base = os.path.join(root, limit_prefix) if limit_prefix else root
     if not os.path.isdir(base):
-        return found
+        return []
     for dirpath, _dirnames, filenames in os.walk(base):
-        for fn in sorted(filenames):
+        for fn in filenames:
             if fn.endswith(".json") or fn.endswith(".json.br"):
                 rel = os.path.relpath(os.path.join(dirpath, fn), root)
                 sid = rel.replace(".json.br", "").replace(".json", "")
                 if len(sid.split("/")) == 5:
-                    found.append(sid)
+                    found.add(sid)
     return sorted(found)
 
 

@@ -5,6 +5,9 @@ Replaces the reference's SQLAlchemy/Postgres row-at-a-time writes
 
 - dims: append-only, novelty discovered by LEFT ANTI join on the natural key
   (the reference never updates dims, only inserts — SURVEY §2.5 J1).
+  ``upsert_dim`` counts the novelty with an ``Observation`` on the eager
+  checkpoint that materializes it, so deciding whether to append costs no
+  ``count()`` job of its own.
 - facts: partitioned by ``snapshot_date`` with per-snapshot FILE GROUPS
   inside each date partition (``snap-<id>-*.parquet``); idempotent reload =
   unlink the group + append the new one (the reference's per-snapshot
@@ -12,6 +15,10 @@ Replaces the reference's SQLAlchemy/Postgres row-at-a-time writes
 - control: append-only LOG of versioned status rows (last-writer-wins by
   ``log_seq``, resolved on read, collapsed by compact()) — see LOG_TABLES.
 - dead-letter: small table, read-modify-write.
+
+Small frames the driver builds itself (control rows, id lists) go through
+``local_frame``: an Arrow table becomes a local relation, so writing one row
+costs the write job only, not Python workers deserializing pickled rows.
 
 Scale notes: date-granular partitions keep the partition count sane at years
 of minute-cadence data (~365 partitions/year vs 525k for minute-granular)
@@ -27,16 +34,20 @@ kept here so nothing depends on a lakehouse runtime.
 from __future__ import annotations
 
 import contextlib
+import datetime
 import os
 import shutil
 import threading
 import time
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .. import schemas
+from ..metrics import observed
 
 # Tables stored as append-only logs of versioned rows: every write APPENDS
 # full replacement rows stamped with a monotonic ``log_seq``; readers resolve
@@ -80,6 +91,25 @@ def _bump_log_seq_floor(seen: int) -> None:
     global _log_seq_last
     with _log_seq_lock:
         _log_seq_last = max(_log_seq_last, seen)
+
+
+def local_frame(spark: SparkSession, rows: list[dict], schema: T.StructType) -> DataFrame:
+    """A DataFrame of driver-side ``rows`` as an Arrow local relation.
+
+    ``createDataFrame([Row, ...])`` ships pickled rows to Python workers in
+    every task that reads them; an Arrow table is handed to the JVM whole.
+    Naive datetimes are read as local wall time, as ``createDataFrame``
+    reads them, so values survive a ``collect()`` unchanged.
+    """
+
+    def instant(v):
+        return v.astimezone(datetime.timezone.utc) if isinstance(v, datetime.datetime) else v
+
+    table = pa.Table.from_pylist(
+        [{k: instant(v) for k, v in r.items()} for r in rows],
+        schema=to_arrow_schema(schema),
+    )
+    return spark.createDataFrame(table)
 
 
 class TableFS:
@@ -275,11 +305,14 @@ class Warehouse:
         """
         with self._table_lock(name):
             existing = self.read(name).select(*key_cols)
-            novelty = candidates.join(existing, on=key_cols, how="left_anti")
+            novelty, added = observed(
+                candidates.join(existing, on=key_cols, how="left_anti"),
+                f"{name}_novelty",
+            )
             # materialize novelty exactly once before appending to the files
-            # the anti join reads from
+            # the anti join reads from; the checkpoint's job also counts it
             novelty = novelty.localCheckpoint(eager=True)
-            if novelty.count():
+            if added.get["rows"]:
                 self.append(name, novelty)
         return novelty
 
@@ -436,6 +469,15 @@ class Warehouse:
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
+
+    def logged_keys(self, name: str) -> DataFrame:
+        """The key columns of every row in a log table, all versions.
+
+        For an existence check any logged row is enough, so this skips the
+        latest-version window ``read`` resolves.  The table must exist."""
+        schema = schemas.ALL_TABLES[name]
+        keys = T.StructType([schema[k] for k in LOG_TABLES[name]])
+        return self.spark.read.schema(keys).parquet(self.table_path(name))
 
     def read_as_of(self, name: str, as_of_seq: int,
                    schema: T.StructType | None = None) -> DataFrame:

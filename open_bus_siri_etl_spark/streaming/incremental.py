@@ -10,6 +10,7 @@ set-oriented Spark pipeline.
 from __future__ import annotations
 
 import datetime
+import os
 import signal
 import time
 
@@ -17,7 +18,7 @@ from pyspark.sql import SparkSession
 
 from .. import control
 from ..pipeline import process_snapshot
-from ..sources.snapshots import list_snapshot_ids, snapshot_path
+from ..sources.snapshots import list_snapshot_ids, resolve_snapshot_path
 from ..sources.tables import Warehouse
 
 DEFAULT_SNAPSHOTS_TIMEDELTA = datetime.timedelta(minutes=10)  # reference :28
@@ -83,9 +84,7 @@ def process_new_snapshots(
     while cur <= now:
         sid = _dt_to_id(cur)
         attempted += 1
-        import os
-
-        if os.path.exists(snapshot_path(landing_root, sid)):
+        if os.path.exists(resolve_snapshot_path(landing_root, sid)[0]):
             process_snapshot(
                 spark, wh, sid, landing_root, only_missing=True, force_reload=False
             )

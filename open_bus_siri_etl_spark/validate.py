@@ -11,6 +11,11 @@ the reference's key at :28-35,58-65); the comparison is a full-outer join —
 unmatched rows ⇒ key-mismatch findings, matched rows filtered per field ⇒
 field findings.  One shuffle on the key; everything per-snapshot groupable,
 so validating a year of snapshots is a single job.
+
+``validate_snapshots`` materializes each side once (an eager local
+checkpoint) before building the report: the report is a union of about nine
+branches, and without it every branch would re-run the 4-way join and the
+JSON re-parse.
 """
 
 from __future__ import annotations
@@ -217,8 +222,9 @@ def validate_snapshots(
     ]
     raw = raw_derived(
         read_snapshots(spark, paths).filter(F.col("Siri").isNotNull())
-    )
-    report = validate(db_derived(wh, snapshot_ids), raw)
+    ).localCheckpoint(eager=True)
+    db = db_derived(wh, snapshot_ids).localCheckpoint(eager=True)
+    report = validate(db, raw)
     if report_path:
         write_report(report, report_path)
     return report

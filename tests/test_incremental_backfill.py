@@ -171,6 +171,40 @@ def test_read_snapshots_brotli_multi_file(spark, tmp_path):
         assert n_visits == 5
 
 
+def test_tick_processes_brotli_only_minute(spark, warehouse, tmp_path):
+    """A minute landed only as ``.json.br`` (the reference's native codec)
+    is found by the daemon walk and loaded."""
+    landing = str(tmp_path / "landing")
+    write_snapshot_fixture(
+        landing, "2019/05/05/16/00", TEST_SNAPSHOT_DATA, compressed=True
+    )
+    stats = process_new_snapshots(
+        spark, warehouse, landing, now=datetime.datetime(2019, 5, 5, 16, 0)
+    )
+    assert stats["processed"] == 1
+    row = control.get_control_row(warehouse, "2019/05/05/16/00")
+    assert row["etl_status"] == control.ETL_LOADED
+    assert row["num_successful_parse_vehicle_locations"] == 3
+
+
+def test_listing_dedups_minute_landed_twice(spark, warehouse, tmp_path):
+    """A minute landed as both ``.json`` and ``.json.br`` is one snapshot:
+    listed once, and registered as one pending row."""
+    from open_bus_siri_etl_spark.sources.snapshots import list_snapshot_ids
+
+    landing = str(tmp_path / "landing")
+    for compressed in (False, True):
+        write_snapshot_fixture(
+            landing, "2019/05/05/16/00", TEST_SNAPSHOT_DATA, compressed=compressed
+        )
+    write_snapshot_fixture(landing, "2019/05/05/16/01", TEST_SNAPSHOT_DATA)
+    ids = list_snapshot_ids(landing)
+    assert ids == ["2019/05/05/16/00", "2019/05/05/16/01"]
+    assert control.register_pending(warehouse, ids) == 2
+    log = spark.read.parquet(warehouse.table_path("siri_snapshot"))
+    assert log.count() == 2
+
+
 @pytest.mark.slow
 def test_streaming_restart_with_new_files(spark, warehouse, tmp_path):
     """Exactly-once across a stop/restart: the checkpoint skips files the
