@@ -10,6 +10,8 @@ averages under DEBUG.  Spark-side equivalents:
   sums computed *inside* the job at no extra pass, the set-oriented analog
   of the reference's per-row counters.  Metrics are read from the collected
   observation after an action.
+- :class:`SparkJobs` — the number of Spark jobs a block launches, the cost
+  unit of small-input ingest calls (job budgets in the tests read it).
 
 Task/stage timing beyond this is Spark UI / event-log territory — already
 richer than the reference's instrumentation.
@@ -18,9 +20,10 @@ richer than the reference's instrumentation.
 from __future__ import annotations
 
 import time
+import uuid
 from collections import defaultdict
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 _stats: dict[str, dict[str, float]] = defaultdict(lambda: {"total_seconds": 0.0, "total_calls": 0})
@@ -66,3 +69,26 @@ def observed(df: DataFrame, name: str, **metrics) -> tuple[DataFrame, Observatio
     if not metrics:
         metrics = {"rows": F.count(F.lit(1))}
     return df.observe(obs, *[m.alias(k) for k, m in metrics.items()]), obs
+
+
+class SparkJobs:
+    """with SparkJobs(spark) as jobs: ... — ``jobs.n`` is the number of Spark
+    jobs launched inside the block, counted through a job group and the
+    status tracker.  Jobs started by other threads meanwhile are not
+    counted."""
+
+    def __init__(self, spark: SparkSession):
+        self.sc = spark.sparkContext
+        self.group = f"jobs-{uuid.uuid4().hex}"
+        self.n: int | None = None
+
+    def __enter__(self):
+        self.sc.setJobGroup(self.group, self.group)
+        return self
+
+    def __exit__(self, *exc):
+        self.sc.setLocalProperty("spark.jobGroup.id", None)
+        # the status store is fed by the listener bus: drain it first
+        self.sc._jsc.sc().listenerBus().waitUntilEmpty()
+        self.n = len(self.sc.statusTracker().getJobIdsForGroup(self.group))
+        return False

@@ -7,6 +7,14 @@ xxhash64 surrogate keys (functions.py) the child key is computable without
 waiting for the parent write, so the three levels become three independent
 anti-join appends over the *same* deduplicated batch — no barriers needed for
 id assignment, only append ordering for referential integrity of readers.
+
+Each ``derive_*`` row carries ``_first_snapshot_id``: the minimum
+``snapshot_id`` among the rows that contribute its id.  The tag rides through
+``Warehouse.upsert_dim``'s anti join into the novelty rows it returns (it is
+never written to the table), so a batch of many snapshots counts each
+snapshot's ``num_added_*`` from the novelty itself — a new id belongs to the
+earliest snapshot that carries it, exactly as if the snapshots had been
+loaded one by one in id order.
 """
 
 from __future__ import annotations
@@ -16,6 +24,8 @@ from pyspark.sql import functions as F
 
 from .. import functions as fn
 from ..sources.tables import Warehouse
+
+FIRST_SNAPSHOT_COL = "_first_snapshot_id"
 
 
 def with_surrogate_ids(pmsv: DataFrame) -> DataFrame:
@@ -35,20 +45,16 @@ def with_surrogate_ids(pmsv: DataFrame) -> DataFrame:
 
 def derive_routes(keyed: DataFrame) -> DataFrame:
     """D1: distinct (operator_ref, line_ref) — reference process_snapshot.py:114-125."""
-    return (
-        keyed.select(
-            F.col("siri_route_id").alias("id"), "operator_ref", "line_ref"
-        ).dropDuplicates(["id"])
-    )
+    return keyed.groupBy(
+        F.col("siri_route_id").alias("id"), "operator_ref", "line_ref"
+    ).agg(F.min("snapshot_id").alias(FIRST_SNAPSHOT_COL))
 
 
 def derive_stops(keyed: DataFrame) -> DataFrame:
     """D1: distinct stop codes — reference process_snapshot.py:127-130."""
-    return (
-        keyed.select(
-            F.col("siri_stop_id").alias("id"), F.col("stop_point_ref").alias("code")
-        ).dropDuplicates(["id"])
-    )
+    return keyed.groupBy(
+        F.col("siri_stop_id").alias("id"), F.col("stop_point_ref").alias("code")
+    ).agg(F.min("snapshot_id").alias(FIRST_SNAPSHOT_COL))
 
 
 def derive_rides(keyed: DataFrame) -> DataFrame:
@@ -59,13 +65,14 @@ def derive_rides(keyed: DataFrame) -> DataFrame:
     occurrence in document order.  Document order is not stable under
     distributed reads, so the engine picks the earliest
     (recorded_at_time, scheduled_start_time) — deterministic across runs and
-    partitionings.
+    partitionings.  The ride's first snapshot is a ``min`` over the same
+    partition, so both windows share one shuffle.
     """
-    w = Window.partitionBy("siri_ride_id").orderBy(
-        "recorded_at_time", "scheduled_start_time"
-    )
+    by_ride = Window.partitionBy("siri_ride_id")
+    w = by_ride.orderBy("recorded_at_time", "scheduled_start_time")
     return (
         keyed.withColumn("_rn", F.row_number().over(w))
+        .withColumn(FIRST_SNAPSHOT_COL, F.min("snapshot_id").over(by_ride))
         .filter("_rn = 1")
         .select(
             F.col("siri_ride_id").alias("id"),
@@ -73,20 +80,19 @@ def derive_rides(keyed: DataFrame) -> DataFrame:
             "journey_ref",
             "vehicle_ref",
             "scheduled_start_time",
+            FIRST_SNAPSHOT_COL,
         )
     )
 
 
 def derive_ride_stops(keyed: DataFrame) -> DataFrame:
     """D1: distinct (ride, stop, order) — reference process_snapshot.py:184-199."""
-    return (
-        keyed.select(
-            F.col("siri_ride_stop_id").alias("id"),
-            "siri_ride_id",
-            "siri_stop_id",
-            "order",
-        ).dropDuplicates(["id"])
-    )
+    return keyed.groupBy(
+        F.col("siri_ride_stop_id").alias("id"),
+        "siri_ride_id",
+        "siri_stop_id",
+        "order",
+    ).agg(F.min("snapshot_id").alias(FIRST_SNAPSHOT_COL))
 
 
 def merge_frames(
@@ -122,11 +128,11 @@ def merge_frames(
 
 def get_or_create_objects(wh: Warehouse, keyed: DataFrame) -> dict[str, DataFrame]:
     """Upsert all four dims for a pmsv batch; return the novelty rows added
-    per table (callers count them for the num_added_* control counters).
+    per table, each tagged with its ``_first_snapshot_id`` (callers count
+    them per snapshot for the num_added_* control counters).
 
     Matches ObjectsMaker.get_or_create_objects (reference
     process_snapshot.py:205-211) but each level is one anti-join append.
-    ``keyed`` is re-used four times → caller should cache it.
     The anti-join key is the surrogate ``id`` (a pure function of the natural
     key), so one 8-byte column is shuffled/broadcast instead of the full key.
     """

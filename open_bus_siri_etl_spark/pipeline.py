@@ -14,16 +14,23 @@ incremental daemon (streaming.incremental).
 
 from __future__ import annotations
 
+import functools
 import traceback
+from collections import defaultdict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import control
 from .functions import snapshot_control_id
+from .metrics import observed
 from .operators.flatten import iterate_monitored_stop_visits
 from .operators.parse import dead_letters, parse_monitored_stop_visits, valid_pmsv
-from .operators.upsert import get_or_create_objects, with_surrogate_ids
+from .operators.upsert import (
+    FIRST_SNAPSHOT_COL,
+    get_or_create_objects,
+    with_surrogate_ids,
+)
 from .sources.snapshots import (
     read_snapshots,
     read_snapshots_brotli,
@@ -72,13 +79,28 @@ def run_core(
     snapshot_ids: list[str],
     save_parse_errors: bool = True,
     heartbeat_cb=None,
-) -> dict[str, dict]:
-    """Run flatten→parse→dims→facts for a batch; return per-snapshot stats.
+) -> tuple[dict[str, dict], set[str]]:
+    """Run flatten→parse→dims→facts for a batch; return per-snapshot stats
+    and the ids of corrupt documents.
 
     ``snapshots_df``: (snapshot_id, Siri, _corrupt_record) rows.
-    Returns {snapshot_id: {"num_successful", "num_failed",
-    "num_added_siri_*"}} for every id in ``snapshot_ids`` (ids with no rows in
-    the batch get zero stats — an empty snapshot still loads successfully).
+    Returns ``(stats, corrupt_ids)``.  ``corrupt_ids`` are the ids whose
+    document has a NULL ``Siri`` (it did not parse), collected by an
+    observation on the document scan that feeds the parse checkpoint, so
+    finding them costs no scan of their own.  A corrupt id gets no stats
+    and no dim, fact or dead-letter write: its earlier facts and dead
+    letters stay, and a batch of nothing but corrupt documents returns
+    before writing any of them.
+    ``stats`` is {snapshot_id: {"num_successful", "num_failed",
+    "num_added_siri_*"}} for every other id in ``snapshot_ids`` (ids with no
+    rows in the batch get zero stats — an empty snapshot still loads
+    successfully).
+
+    All counters come from ONE collect: ``groupBy(kind, snapshot_id)`` over
+    the four dims' novelty checkpoints (each new id counted for its
+    ``_first_snapshot_id``, see operators.upsert) and the parse checkpoint
+    (``_ok``/``_bad`` by ``_valid``) — two jobs however many snapshots the
+    batch holds.
 
     ``heartbeat_cb`` (T5): invoked between Spark actions so a long batch
     keeps its control-table heartbeat fresh (the reference beats throughout
@@ -88,86 +110,73 @@ def run_core(
     def _beat():
         if heartbeat_cb is not None:
             heartbeat_cb()
-    visits = iterate_monitored_stop_visits(
-        snapshots_df.filter(F.col("Siri").isNotNull())
+
+    docs, doc_obs = observed(
+        snapshots_df,
+        "corrupt_documents",
+        ids=F.collect_set(F.when(F.col("Siri").isNull(), F.col("snapshot_id"))),
     )
+    visits = iterate_monitored_stop_visits(docs.filter(F.col("Siri").isNotNull()))
     # one scan of the JSON: the parsed rows carry ``_valid``, so both flows
     # split off the same checkpoint
     parsed = parse_monitored_stop_visits(visits).localCheckpoint(eager=True)
+    corrupt_ids = set(doc_obs.get["ids"])
+    good_ids = [s for s in snapshot_ids if s not in corrupt_ids]
+    if corrupt_ids and not good_ids:
+        parsed.unpersist()
+        return {}, corrupt_ids
     _beat()
     keyed = with_surrogate_ids(valid_pmsv(parsed))
     invalid = dead_letters(parsed)
 
-    # dims: four anti-join appends; novelty attributed back to the earliest
-    # contributing snapshot so bulk runs keep per-snapshot num_added_* parity
     novelty = get_or_create_objects(wh, keyed)
-    attribution = {
-        "siri_route": "siri_route_id",
-        "siri_stop": "siri_stop_id",
-        "siri_ride": "siri_ride_id",
-        "siri_ride_stop": "siri_ride_stop_id",
-    }
-    # ONE action for all per-snapshot counters (4 dim novelty attributions +
-    # ok + bad): union the six snapshot-id-sized branches under a `kind` tag
-    # and collect once.  Six sequential collects cost six job launches per
-    # ingest batch — pure driver latency that compounds at 1-day backfill
-    # scale (1,440 snapshots); the branches all read the already-checkpointed
-    # parse, so folding them changes job count, not results.
-    counter_frames = [
-        keyed.groupBy(F.col(key_col).alias("id"))
-        .agg(F.min("snapshot_id").alias("snapshot_id"))
-        .join(novelty[table].select("id"), "id", "left_semi")
-        .groupBy("snapshot_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.lit(table).alias("kind"), "snapshot_id", "n")
-        for table, key_col in attribution.items()
+    tagged = [
+        rows.select(
+            F.lit(table).alias("kind"), F.col(FIRST_SNAPSHOT_COL).alias("snapshot_id")
+        )
+        for table, rows in novelty.items()
     ]
-    counter_frames.append(
-        keyed.groupBy("snapshot_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.lit("_ok").alias("kind"), "snapshot_id", "n")
+    tagged.append(
+        parsed.select(
+            F.when(F.col("_valid"), "_ok").otherwise("_bad").alias("kind"),
+            "snapshot_id",
+        )
     )
-    counter_frames.append(
-        invalid.groupBy("snapshot_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.lit("_bad").alias("kind"), "snapshot_id", "n")
-    )
-    unioned = counter_frames[0]
-    for frame in counter_frames[1:]:
-        unioned = unioned.unionByName(frame)
-    counters: dict[str, dict[str, int]] = {
-        t: {} for t in list(attribution) + ["_ok", "_bad"]
-    }
-    for r in unioned.collect():
-        counters[r["kind"]][r["snapshot_id"]] = r["n"]
-    added = {table: counters[table] for table in attribution}
+    counters: dict[str, dict[str, int]] = defaultdict(dict)
+    for r in (
+        functools.reduce(DataFrame.unionByName, tagged)
+        .groupBy("kind", "snapshot_id")
+        .count()
+        .collect()
+    ):
+        counters[r["kind"]][r["snapshot_id"]] = r["count"]
     _beat()
 
     # facts: idempotent per-snapshot replace
     facts = build_facts(keyed)
-    wh.write_facts(facts, reload_snapshot_ids=snapshot_ids)
+    wh.write_facts(facts, reload_snapshot_ids=good_ids)
     _beat()
 
     # dead letters: clear-and-write per snapshot (reference :409-414,232-234)
     if save_parse_errors:
         existing_dl = wh.read(_DEAD_LETTER_TABLE, invalid.schema)
-        keep = existing_dl.filter(~F.col("snapshot_id").isin(snapshot_ids))
+        keep = existing_dl.filter(~F.col("snapshot_id").isin(good_ids))
         out = keep.unionByName(invalid).localCheckpoint(eager=True)
         wh.overwrite(_DEAD_LETTER_TABLE, out)
 
-    ok, bad = counters["_ok"], counters["_bad"]
-    stats = {}
-    for sid in snapshot_ids:
-        stats[sid] = {
-            "num_successful": ok.get(sid, 0),
-            "num_failed": bad.get(sid, 0),
-            "num_added_siri_routes": added["siri_route"].get(sid, 0),
-            "num_added_siri_stops": added["siri_stop"].get(sid, 0),
-            "num_added_siri_rides": added["siri_ride"].get(sid, 0),
-            "num_added_siri_ride_stops": added["siri_ride_stop"].get(sid, 0),
+    stats = {
+        sid: {
+            "num_successful": counters["_ok"].get(sid, 0),
+            "num_failed": counters["_bad"].get(sid, 0),
+            **{
+                f"num_added_{table}s": counters[table].get(sid, 0)
+                for table in novelty
+            },
         }
+        for sid in good_ids
+    }
     parsed.unpersist()
-    return stats
+    return stats, corrupt_ids
 
 
 def process_snapshot(
@@ -203,21 +212,21 @@ def process_snapshot(
             if is_br
             else read_snapshots(spark, path)
         )
-        corrupt = snapshots_df.filter(F.col("Siri").isNull()).count()
-        if corrupt:
-            raise ValueError(f"snapshot {snapshot_id}: corrupt document")
         hb_last = [row["last_heartbeat"]]
 
         def _hb():
             hb_last[0] = control.heartbeat(wh, snapshot_id, hb_last[0])
 
-        stats = run_core(
+        stats_by_id, corrupt_ids = run_core(
             wh,
             snapshots_df,
             [snapshot_id],
             save_parse_errors=save_parse_errors,
             heartbeat_cb=_hb,
-        )[snapshot_id]
+        )
+        if corrupt_ids:
+            raise ValueError(f"snapshot {snapshot_id}: corrupt document")
+        stats = stats_by_id[snapshot_id]
         stats["etl_start_time"] = row["etl_start_time"]
         stats["etl_pending_time"] = row["etl_pending_time"]
         control.mark_loaded(wh, snapshot_id, stats)
@@ -244,7 +253,9 @@ def process_snapshots_bulk(
     here a single ``read.json([paths])`` schedules per-file tasks across all
     executors and the set-oriented core amortizes the dim anti-joins over the
     whole batch.  Per-snapshot status granularity is preserved via
-    ``input_file_name()``-derived snapshot_id.
+    ``input_file_name()``-derived snapshot_id: a corrupt document ends its
+    own snapshot in ``error`` (``corrupt document``) with its earlier rows
+    untouched, and the rest of the batch loads.
     """
     if not snapshot_ids:
         return {}
@@ -252,20 +263,13 @@ def process_snapshots_bulk(
     paths = [snapshot_path(landing_root, s) for s in snapshot_ids]
     try:
         snapshots_df = read_snapshots(spark, paths)
-        corrupt_ids = {
-            r["snapshot_id"]
-            for r in snapshots_df.filter(F.col("Siri").isNull())
-            .select("snapshot_id")
-            .collect()
-        }
-        good_ids = [s for s in snapshot_ids if s not in corrupt_ids]
 
         def _hb():
-            hb_last[0] = control.heartbeat_bulk(wh, good_ids, hb_last[0])
+            hb_last[0] = control.heartbeat_bulk(wh, snapshot_ids, hb_last[0])
 
-        stats = run_core(wh, snapshots_df, good_ids, heartbeat_cb=_hb)
-        control.mark_loaded_bulk(wh, {sid: stats[sid] for sid in good_ids})
-        for sid in corrupt_ids:
+        stats, corrupt_ids = run_core(wh, snapshots_df, snapshot_ids, heartbeat_cb=_hb)
+        control.mark_loaded_bulk(wh, stats)
+        for sid in sorted(corrupt_ids):
             control.mark_error(wh, sid, "corrupt document")
         return stats
     except Exception:

@@ -12,6 +12,14 @@ local[32]):
   (the reference's delete-by-snapshot, process_snapshot.py:278).
 - shuffle.partitions default 32 for local tests; on a real cluster leave AQE
   to coalesce from a deliberately high initial number (set via --conf).
+- No ``_SUCCESS`` marker: nothing reads it (Spark's readers skip
+  ``_``-prefixed files and ``write_facts`` adopts ``*.parquet``), but every
+  append into an existing table directory re-creates it, and on Hadoop's
+  checksummed local filesystem that overwrite also truncates the old
+  marker's ``.crc`` sidecar.  A 300-row append into an existing directory
+  took a median 0.10 s with the marker and 0.065 s without it (4-core VM,
+  20 appends each, two runs); a daemon tick plus a 60-snapshot batch makes
+  about 13 such appends (8 dim appends, 5 control-log writes).
 """
 
 from __future__ import annotations
@@ -59,6 +67,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.hadoop.mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

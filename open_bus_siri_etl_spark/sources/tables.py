@@ -296,6 +296,9 @@ class Warehouse:
         novelty rows actually added (materialized).
 
         ``candidates`` must already be deduplicated on ``key_cols`` (D2).
+        Only the table's declared columns (``schemas.ALL_TABLES[name]``) are
+        appended; any other candidate column (the ``_first_snapshot_id``
+        tag of ``operators.upsert``) stays on the returned novelty rows only.
         The anti join's build side is the *existing dim keys only* — Catalyst
         broadcasts it when small; at scale AQE picks broadcast vs shuffled
         hash per batch.  Append-only, so a rerun of the same batch adds 0.
@@ -313,7 +316,8 @@ class Warehouse:
             # the anti join reads from; the checkpoint's job also counts it
             novelty = novelty.localCheckpoint(eager=True)
             if added.get["rows"]:
-                self.append(name, novelty)
+                cols = [f.name for f in schemas.ALL_TABLES[name].fields]
+                self.append(name, novelty.select(*cols))
         return novelty
 
     # -- fact sink with idempotent per-snapshot reload (S4/S5/T4) -----------

@@ -73,18 +73,10 @@ def start_snapshot_stream(
         if not ids:
             return
         control.start_loading_bulk(wh, ids)
-        good = batch_df.filter(F.col("Siri").isNotNull())
-        corrupt_ids = {
-            r["snapshot_id"]
-            for r in batch_df.filter(F.col("Siri").isNull())
-            .select("snapshot_id")
-            .distinct()
-            .collect()
-        }
-        good_ids = [s for s in ids if s not in corrupt_ids]
-        stats = run_core(wh, good, good_ids)
-        control.mark_loaded_bulk(wh, {sid: stats[sid] for sid in good_ids})
-        for sid in corrupt_ids:
+        # run_core finds corrupt documents on its own parse scan
+        stats, corrupt_ids = run_core(wh, batch_df, ids)
+        control.mark_loaded_bulk(wh, stats)
+        for sid in sorted(corrupt_ids):
             control.mark_error(wh, sid, "corrupt document")
 
     stream = _streaming_snapshots(spark, landing_root, max_files_per_trigger)

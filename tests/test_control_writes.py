@@ -4,43 +4,28 @@ load stays inside a pinned job budget (a ``createDataFrame([Row, ...])`` or
 a repeated control read would show up as extra jobs)."""
 
 import datetime
-import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
 from open_bus_siri_etl_spark import control
 from open_bus_siri_etl_spark.functions import snapshot_control_id
-from open_bus_siri_etl_spark.pipeline import process_snapshot
+from open_bus_siri_etl_spark.metrics import SparkJobs
+from open_bus_siri_etl_spark.pipeline import process_snapshot, process_snapshots_bulk
 from open_bus_siri_etl_spark.sources.snapshots import write_snapshot_fixture
 
-from .fixtures import TEST_SNAPSHOT_DATA, TEST_SNAPSHOT_ID
+from .fixtures import TEST_SNAPSHOT_DATA, TEST_SNAPSHOT_ID, get_test_snapshot_data
 
-# Spark jobs of one process_snapshot of the golden fixture into an empty
-# warehouse, as measured with control rows as local relations and one parse
-# checkpoint per batch.
-PROCESS_SNAPSHOT_JOB_BUDGET = 45
-
-
-class SparkJobs:
-    """Count the Spark jobs launched inside a ``with`` block, through a job
-    group and the status tracker."""
-
-    def __init__(self, spark):
-        self.sc = spark.sparkContext
-        self.group = f"budget-{uuid.uuid4().hex}"
-        self.n = None
-
-    def __enter__(self):
-        self.sc.setJobGroup(self.group, self.group)
-        return self
-
-    def __exit__(self, *exc):
-        self.sc.setLocalProperty("spark.jobGroup.id", None)
-        # the status store is fed by the listener bus: drain it first
-        self.sc._jsc.sc().listenerBus().waitUntilEmpty()
-        self.n = len(self.sc.statusTracker().getJobIdsForGroup(self.group))
-        return False
+# Spark jobs into an empty warehouse, as measured with control rows as local
+# relations, one parse checkpoint per batch that also observes corrupt
+# documents, and every per-snapshot counter from one collect: one
+# process_snapshot of the golden fixture (27-30 jobs over repeated runs; AQE
+# submits some query stages as jobs of their own depending on timing) and
+# one process_snapshots_bulk of three minute-shifted copies of it (26-28).
+# Each budget adds one heartbeat (3 jobs), which fires when a call outlasts
+# control.HEARTBEAT_AMORTIZE_SECONDS on a slow or busy machine.
+PROCESS_SNAPSHOT_JOB_BUDGET = 33
+PROCESS_SNAPSHOTS_BULK_JOB_BUDGET = 31
 
 
 def _row(snapshot_id, **kw):
@@ -97,3 +82,14 @@ def test_process_snapshot_job_budget(spark, warehouse, landing):
         stats = process_snapshot(spark, warehouse, TEST_SNAPSHOT_ID, landing)
     assert stats["num_successful"] == 3 and stats["num_failed"] == 2
     assert jobs.n <= PROCESS_SNAPSHOT_JOB_BUDGET, jobs.n
+
+
+def test_process_snapshots_bulk_job_budget(spark, warehouse, tmp_path):
+    landing = str(tmp_path / "landing")
+    ids = [f"2019/05/05/16/0{i}" for i in range(3)]
+    for i, sid in enumerate(ids):
+        write_snapshot_fixture(landing, sid, get_test_snapshot_data(time_str=f"16:0{i}"))
+    with SparkJobs(spark) as jobs:
+        stats = process_snapshots_bulk(spark, warehouse, ids, landing)
+    assert [stats[sid]["num_successful"] for sid in ids] == [3, 3, 3]
+    assert jobs.n <= PROCESS_SNAPSHOTS_BULK_JOB_BUDGET, jobs.n
