@@ -2,155 +2,118 @@
 training-data surface): the iterative-algorithm pattern done Spark-first.
 
 Lloyd's algorithm maps onto Spark the same way MLlib implements it:
-centroids are tiny driver state broadcast into each assignment pass; the
+centroids are tiny driver state shipped into each assignment pass; the
 heavy work — one distance evaluation per (vector, centroid) and the
 per-cluster mean — is a single scan plus one aggregation per iteration.
-Nothing iterates per row in Python on the small-k path: assignment is an
-in-JVM array expression, the mean is posexplode + avg (k x dim grouped
-rows, i.e. aggregation state is centroid-sized, not data-sized).
 
-Two assignment kernels, one contract:
-- ``expr`` (k below ~32): a per-centroid zip_with/aggregate expression list,
-  fully whole-stage-codegen.  Codegen cost grows with k (one expression
-  tree per centroid), so past a few dozen centroids the JVM spends more
-  time compiling than computing.
-- ``matmul`` (large k): one Arrow batch per partition through mapInPandas,
-  distances accumulated in numpy as a sequential fold over dimensions —
-  the SAME left-to-right float64 addition order as the expr kernel's
-  aggregate(), so pre-round distances are bit-identical and the two
-  kernels (and the DuckDB oracle) agree exactly.  A production kernel
-  would use the |x|^2 - 2x.c + |c|^2 BLAS expansion for another ~10x; that
-  reorders float summation and is deliberately NOT used here so the
-  determinism contract holds.
+Every assignment runs the package's one nearest-centroid kernel
+(``similarity._nearest``; README "Nearest-centroid kernels"), in one of
+its two forms:
+- full-vector training (``_train_centroids``) uses the numpy form at
+  every k, fused with the update's partial reduction: one Arrow pass per
+  iteration emits at most k (cluster, n, sum) rows per partition;
+- the final assignment (``kmeans_assign``) and the fused subspace update
+  (``_fused_update``, which trains PQ codebooks) use the expression form
+  up to ``EXPR_KERNEL_MAX_K`` centroids and the numpy form above it.
+Both forms fold dimensions sequentially and round with the same rule, so
+the choice changes plans, never results.  A production kernel would use
+the |x|^2 - 2x.c + |c|^2 BLAS expansion for another ~10x; that reorders
+float summation and is deliberately not used here, so the determinism
+contract holds.
 
 Determinism contract (shared with the fixed-iteration DuckDB oracle):
 - init = the k vectors with the smallest ids (no RNG);
-- distances and updated centroid coordinates round to 6 dp each
-  iteration, so float summation order can never flip an argmin across
-  engines/partitionings;
-- argmin ties break toward the smaller centroid id (first index of the
-  array minimum);
-- a cluster that loses all members keeps its previous centroid.
+- squared distances round to 6 dp (floor(x*1e6 + 0.5)/1e6) and updated
+  centroid coordinates round to 6 dp each iteration, so float summation
+  order can never flip an argmin across engines/partitionings;
+- argmin ties break toward the smaller centroid id;
+- a cluster that loses all members keeps its previous centroid;
+- a NULL vector, or one whose width differs from the init's, raises
+  naming its id.
 
 Scale: k*dim doubles per iteration cross the driver (kilobytes); the scan
-per iteration parallelizes on input splits.  The matmul kernel ships the
+per iteration parallelizes on input splits.  The numpy form ships the
 centroid matrix inside the serialized closure (k*dim*8 bytes — fine to
 ~10^6 cells; beyond that, a SparkContext.broadcast handle).
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
+import numpy as np
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
-#: kernel auto-switch point: above this k the codegen'd expression list is
-#: slower to compile than the Arrow kernel is to run
-EXPR_KERNEL_MAX_K = 16
+from .similarity import (
+    _checked_vec,
+    _codebook_width,
+    _cost_array,
+    _cost_np,
+    _matrix_np,
+    _nearest,
+    _use_numpy_form,
+)
+
+_CODEBOOK_SCHEMA = "cent_rank int, cent_id bigint, cent_vec array<double>"
 
 
-def _assign_expr(vecd: DataFrame, cents: list[list[float]], id_col: str) -> DataFrame:
-    """Small-k kernel: the k distance expressions evaluated from ONE
-    nested-array centroid literal + transform (r14: k unrolled
-    per-centroid literal trees — k x dim Literal nodes plus k copies of
-    the fold — dominated catalyst analysis on the trained builds, the
-    same finding the PQ-encode inline made; the compact form is ONE
-    literal + one lambda tree).  Arithmetic is element-wise identical:
-    zip_with pairs the same doubles, the fold adds in the same order,
-    the 6dp round is unchanged, so assignments are bit-equal to the
-    historical per-centroid form (kernel parity tests)."""
-    cmat = F.lit([[float(x) for x in c] for c in cents])
-    d = F.transform(
-        cmat,
-        lambda cent: F.round(
-            F.aggregate(
-                F.zip_with("v", cent, lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            6,
-        ),
+def _vectors(
+    df: DataFrame, k: int, id_col: str, vec_col: str
+) -> tuple[DataFrame, list[list[float]]]:
+    """(id, v) with ``v`` the vector cast to double and width-checked
+    against the init, plus the contract's init: the ``k`` vectors with the
+    smallest ids."""
+    vecd = df.select(
+        id_col, F.transform(vec_col, lambda x: x.cast("double")).alias("v")
     )
-    return vecd.withColumn("d", d).select(
-        id_col,
-        "v",
-        (F.array_position(F.col("d"), F.array_min("d")) - 1)
-        .cast("int")
-        .alias("cluster"),
+    rows = vecd.orderBy(id_col).limit(k).collect()
+    if len(rows) < k:
+        raise ValueError(
+            f"kmeans: k={k} but the input has only {len(rows)} rows — min-id "
+            "init needs k distinct vectors (a streaming trainer's FIRST batch "
+            "must carry at least max(n_centroids, pq_centroids) rows)"
+        )
+    init = [None if r["v"] is None else [float(x) for x in r["v"]] for r in rows]
+    width = _codebook_width(list(range(k)), init)
+    return vecd.withColumn("v", _checked_vec(F.col("v"), F.col(id_col), width)), init
+
+
+def _subspace_sides(init: list, n_sub: int, sub_dim: int) -> list:
+    """(start, centroids) per PQ subspace: the init sliced to
+    [start, start + sub_dim)."""
+    return [
+        (m * sub_dim, [c[m * sub_dim : (m + 1) * sub_dim] for c in init])
+        for m in range(n_sub)
+    ]
+
+
+def _codebook_frame(df: DataFrame, cents: list) -> DataFrame:
+    """Centroids as a (cent_rank, cent_id, cent_vec) frame, cent_id = the
+    cluster index."""
+    return df.sparkSession.createDataFrame(
+        [(c + 1, c, [float(x) for x in v]) for c, v in enumerate(cents)],
+        _CODEBOOK_SCHEMA,
     )
 
 
-def _assign_matmul(
-    vecd: DataFrame,
-    cents: list[list[float]],
-    id_col: str,
-    emit_vec: bool = True,
-) -> DataFrame:
-    """Large-k kernel: Arrow-batched numpy distance matrix per partition.
-
-    Float parity with _assign_expr: the fold over dimensions is sequential
-    (acc += (x_j - c_j)^2 for j = 0..dim-1), matching aggregate()'s
-    left-to-right order bit-for-bit; rounding is half-up on the binary
-    double (floor(x*1e6 + 0.5)/1e6 — distances are non-negative), matching
-    what both engines' round() computes on these values.  np.argmin takes
-    the first minimum, matching array_position(array_min) ties-to-smaller.
-
-    ``emit_vec=False`` (r14): callers that only need (id, cluster) — the
-    final ``kmeans_assign`` pass — skip re-serializing the vector column
-    back across the Arrow boundary; Spark cannot prune columns INSIDE a
-    mapInPandas, so the pruning must happen in the declared output schema.
-    """
-    import numpy as np
-
-    cmat = [list(map(float, c)) for c in cents]
-    id_field = vecd.schema[id_col]
-    fields = [T.StructField(id_field.name, id_field.dataType)]
-    if emit_vec:
-        fields.append(T.StructField("v", T.ArrayType(T.DoubleType())))
-    fields.append(T.StructField("cluster", T.IntegerType()))
-    out_schema = T.StructType(fields)
-
-    def assign(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
-        C = np.asarray(cmat, dtype=np.float64)  # k x dim
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.asarray(pdf["v"].tolist(), dtype=np.float64)  # n x dim
-            acc = np.zeros((len(pdf), C.shape[0]), dtype=np.float64)
-            for j in range(C.shape[1]):  # sequential fold = expr-kernel order
-                dj = X[:, j][:, None] - C[:, j][None, :]
-                acc += dj * dj
-            d = np.floor(acc * 1e6 + 0.5) / 1e6
-            out = {id_col: pdf[id_col].to_numpy()}
-            if emit_vec:
-                out["v"] = pdf["v"]
-            out["cluster"] = np.argmin(d, axis=1).astype("int32")
-            yield pd.DataFrame(out)
-
-    return vecd.mapInPandas(assign, schema=out_schema)
+def _pq_codebook_frame(df: DataFrame, sides: list) -> DataFrame:
+    """A PQ codebook frame: centroid ``c`` is the concatenation over
+    subspaces of each side's c-th centroid."""
+    return _codebook_frame(
+        df,
+        [[x for _, cents in sides for x in cents[c]] for c in range(len(sides[0][1]))],
+    )
 
 
-def _partial_sums_matmul(vecd: DataFrame, cents: list[list[float]]) -> DataFrame:
-    """Training-only fused kernel (r14, guide §2.3 'aggregate before you
-    shuffle'): assign AND partially reduce in one Arrow pass, emitting per
-    partition at most k rows of (cluster, n, s=Σx) instead of shipping
-    every (id, v, cluster) row back to the JVM and posexploding n x dim
-    rows into the mean aggregation.  The JVM-side mean over these partials
-    is sum(s_i)/sum(n) per coordinate — the same total in a different
-    float-addition order, absorbed by the contract's 6dp rounding exactly
-    like the engine-vs-oracle order difference already is (parity of the
-    final assignments is pinned by the catalog oracle at both SFs and by
-    tests/test_training_ops.py kernel-parity cases).
-
-    Distance/argmin float discipline is byte-identical to _assign_matmul
-    (sequential fold, 6dp half-up, first-min ties).
-    """
-    import numpy as np
-
-    cmat = [list(map(float, c)) for c in cents]
+def _lloyd_partials(vecd: DataFrame, cents: list, id_col: str) -> DataFrame:
+    """One Lloyd assignment in the numpy form, reduced in the worker
+    (aggregate before you shuffle): per partition at most k rows of
+    (cluster, n, s = sum of member vectors) instead of every (id, v,
+    cluster) row.  The mean over these partials is sum(s)/sum(n) — the
+    same total as avg() in another float-addition order, which the
+    update's 6dp rounding absorbs (pinned by the catalog oracle at both
+    SFs)."""
+    C = np.asarray(cents, dtype=np.float64)
+    k, width = C.shape
     out_schema = T.StructType(
         [
             T.StructField("cluster", T.IntegerType()),
@@ -159,23 +122,16 @@ def _partial_sums_matmul(vecd: DataFrame, cents: list[list[float]]) -> DataFrame
         ]
     )
 
-    def psums(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    def psums(batches):
         import pandas as pd
 
-        C = np.asarray(cmat, dtype=np.float64)  # k x dim
-        k, dim = C.shape
-        S = np.zeros((k, dim), dtype=np.float64)
+        S = np.zeros((k, width))
         N = np.zeros(k, dtype=np.int64)
         for pdf in batches:
             if not len(pdf):
                 continue
-            X = np.asarray(pdf["v"].tolist(), dtype=np.float64)  # n x dim
-            acc = np.zeros((len(pdf), k), dtype=np.float64)
-            for j in range(dim):  # sequential fold = expr-kernel order
-                dj = X[:, j][:, None] - C[:, j][None, :]
-                acc += dj * dj
-            d = np.floor(acc * 1e6 + 0.5) / 1e6
-            cl = np.argmin(d, axis=1)
+            X = _matrix_np(pdf, id_col, "v", width)
+            cl = np.argmin(_cost_np(X, C), axis=1)
             for c in np.unique(cl):
                 m = cl == c
                 S[c] += X[m].sum(axis=0)
@@ -190,61 +146,77 @@ def _partial_sums_matmul(vecd: DataFrame, cents: list[list[float]]) -> DataFrame
                 }
             )
 
-    return vecd.select("v").mapInPandas(psums, schema=out_schema)
-
-
-def _resolve_kernel(k: int, kernel: str):
-    if kernel == "auto":
-        kernel = "expr" if k <= EXPR_KERNEL_MAX_K else "matmul"
-    return {"expr": _assign_expr, "matmul": _assign_matmul}[kernel]
+    return vecd.select(id_col, "v").mapInPandas(psums, schema=out_schema)
 
 
 def _train_centroids(
-    vecd: DataFrame, k: int, iters: int, id_col: str, assign_fn
+    vecd: DataFrame, cents: list, iters: int, id_col: str
 ) -> list[list[float]]:
-    """The Lloyd training loop as driver state: init = the ``k`` vectors
-    with the smallest ids, then ``iters - 1`` assign→mean updates (the
-    centroids RETURNED are the ones the final assignment pass uses, so
-    ``assign_fn(vecd, result)`` == ``kmeans_assign``'s output).  6dp
-    rounding on updated coordinates and per-coordinate carry-forward for
-    emptied clusters keep the result oracle-exact (module contract)."""
-    cents = [r["v"] for r in vecd.orderBy(id_col).limit(k).collect()]
-    if len(cents) < k:
-        raise ValueError(
-            f"kmeans: k={k} but the input has only {len(cents)} rows — "
-            "min-id init needs k distinct vectors (a streaming trainer's "
-            "FIRST batch must carry at least max(n_centroids, "
-            "pq_centroids) rows; this is the trained-path twin of the "
-            "frozen-codebook undersize guard)"
-        )
-    dim = len(cents[0])
+    """The Lloyd loop as driver state from the init ``cents``: ``iters -
+    1`` assign→mean updates through ``_lloyd_partials``.  The centroids
+    returned are the ones the final assignment pass uses.  6dp rounding on
+    updated coordinates and per-coordinate carry-forward for emptied
+    clusters keep the result oracle-exact (module contract)."""
     for _ in range(iters - 1):
-        # r14 (matmul kernel) / r15 (ALL kernel sizes): fused
-        # assign+partial-sum Arrow pass — the update's aggregation input
-        # is (#partitions x k) partial rows instead of an n x dim
-        # posexplode (a dim-fold row explosion through the partial agg's
-        # input pipeline), and the vector column never crosses the
-        # Python->JVM boundary a second time (guide §2.3, §4.1).
-        # Distances/argmin inside the kernel are bit-identical to
-        # _assign_expr (kernel parity tests); sum(s)/sum(n) == avg(val)
-        # up to float order, which the module contract's 6dp rounding
-        # absorbs (measured identical on the testdata corpora; pinned by
-        # the catalog oracle at both SFs).  The expr kernel remains the
-        # ASSIGNMENT path — codegen'd, no Python boundary — for
-        # kmeans_assign callers and the final pass.
         rows = (
-            _partial_sums_matmul(vecd, cents)
+            _lloyd_partials(vecd, cents, id_col)
             .select("cluster", "n", F.posexplode("s").alias("i", "val"))
             .groupBy("cluster", "i")
             .agg(F.round(F.sum("val") / F.sum("n"), 6).alias("m"))
             .collect()
         )
-        got = {(r["cluster"], r["i"]): r["m"] for r in rows}
-        cents = [
-            [got.get((c, i), cents[c][i]) for i in range(dim)]
-            for c in range(k)
-        ]
+        cents = _carried(cents, {(0, r["cluster"], r["i"]): r["m"] for r in rows})
     return cents
+
+
+def _carried(cents: list, means: dict, side: int = 0) -> list:
+    """``cents`` with each (side, cluster, coordinate) the update produced
+    replaced by its 6dp mean; a cluster that lost all members keeps its
+    previous coordinates."""
+    return [
+        [means.get((side, c, i), x) for i, x in enumerate(cent)]
+        for c, cent in enumerate(cents)
+    ]
+
+
+def _fused_update(vecd: DataFrame, sides: list) -> list:
+    """One Lloyd mean-update of several codebooks from ONE scan: side
+    ``j`` = (start, centroids) assigns the slice of ``v`` at ``start`` in
+    the expression form, the (j, cluster, slice) structs of every side
+    explode, and one grouped 6dp mean updates every (side, cluster,
+    coordinate) at once, with carry-forward.  Row volume through the
+    partial agg is (sum of side widths) x n — the bytes separate per-side
+    jobs would push, in one job."""
+    branches = []
+    for j, (start, cents) in enumerate(sides):
+        sl = F.slice("v", start + 1, len(cents[0]))
+        d = _cost_array(sl, cents)
+        branches.append(
+            F.struct(
+                F.lit(j).alias("m"),
+                (F.array_position(d, F.array_min(d)) - 1).cast("int").alias("cluster"),
+                sl.alias("sv"),
+            )
+        )
+    rows = (
+        vecd.select(F.explode(F.array(*branches)).alias("b"))
+        .select("b.m", "b.cluster", F.posexplode("b.sv").alias("i", "val"))
+        .groupBy("m", "cluster", "i")
+        .agg(F.round(F.avg("val"), 6).alias("mn"))
+        .collect()
+    )
+    means = {(r["m"], r["cluster"], r["i"]): r["mn"] for r in rows}
+    return [(start, _carried(cents, means, j)) for j, (start, cents) in enumerate(sides)]
+
+
+def _assign(vecd: DataFrame, cents: list, id_col: str) -> DataFrame:
+    """(id, cluster int) of every ``vecd`` row against trained centroids:
+    the kernel's expression form up to ``EXPR_KERNEL_MAX_K`` centroids,
+    the numpy form above it."""
+    return _nearest(
+        vecd, id_col, "v", list(range(len(cents))), cents, "cluster",
+        numpy_form=_use_numpy_form(len(cents), kmeans=True), emit_vec=False,
+    ).withColumn("cluster", F.col("cluster").cast("int"))
 
 
 def kmeans_assign(
@@ -253,25 +225,11 @@ def kmeans_assign(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    kernel: str = "auto",
 ) -> DataFrame:
-    """Assign each vector to a k-means cluster after ``iters`` Lloyd steps.
-
-    Returns (id_col, cluster int).  ``kernel`` is ``auto`` (expr below
-    EXPR_KERNEL_MAX_K, matmul above), ``expr`` or ``matmul``; both satisfy
-    the module's determinism contract and return identical assignments.
-    """
-    assign_fn = _resolve_kernel(k, kernel)
-    vecd = df.select(
-        id_col, F.transform(vec_col, lambda x: x.cast("double")).alias("v")
-    )
-    cents = _train_centroids(vecd, k, iters, id_col, assign_fn)
-    if assign_fn is _assign_matmul:
-        # r14: the caller only needs (id, cluster) — don't re-serialize the
-        # vector column out of the Arrow kernel (schema-level pruning; a
-        # .select after mapInPandas cannot prune inside the Python worker)
-        return _assign_matmul(vecd, cents, id_col, emit_vec=False)
-    return assign_fn(vecd, cents, id_col).select(id_col, "cluster")
+    """Assign each vector to a k-means cluster after ``iters`` Lloyd
+    steps.  Returns (id_col, cluster int)."""
+    vecd, init = _vectors(df, k, id_col, vec_col)
+    return _assign(vecd, _train_centroids(vecd, init, iters, id_col), id_col)
 
 
 #: The measured serving default for the deployable IVF-PQ stack (trained
@@ -290,8 +248,6 @@ IVF_PQ_SERVING_DEFAULTS = {
     "recall_bar": 0.9,
 }
 
-_CODEBOOK_SCHEMA = "cent_rank int, cent_id bigint, cent_vec array<double>"
-
 
 def kmeans_codebook(
     df: DataFrame,
@@ -299,27 +255,18 @@ def kmeans_codebook(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    kernel: str = "auto",
 ) -> DataFrame:
     """The TRAINED kmeans centroids as a frozen-codebook frame
     (cent_rank, cent_id, cent_vec) — drop-in for ``ivf_pq_centroids``'
     lowest-id stand-in wherever the ANN family takes a ``cents`` frame
     (``build_ivf_pq_index`` / ``ivf_pq_topk_serve`` with
-    ``coarse_metric="l2"``), so the persisted IVF-PQ index can carry a
-    REAL quantizer.  ``cent_id`` is the cluster index (0..k-1): assigning
-    a corpus row against this frame by 6dp-rounded L2 with min-cent_id
-    ties reproduces ``kmeans_assign``'s output exactly, which is what
-    keeps the trained index oracle-exact.  The centroids are the ones the
-    FINAL assignment pass uses (after ``iters - 1`` mean updates) —
-    kilobytes of driver state, persisted next to the index like the
-    stand-in codebook."""
-    assign_fn = _resolve_kernel(k, kernel)
-    vecd = df.select(
-        id_col, F.transform(vec_col, lambda x: x.cast("double")).alias("v")
-    )
-    cents = _train_centroids(vecd, k, iters, id_col, assign_fn)
-    rows = [(c + 1, c, [float(x) for x in cents[c]]) for c in range(k)]
-    return df.sparkSession.createDataFrame(rows, _CODEBOOK_SCHEMA)
+    ``coarse_metric="l2"``).  ``cent_id`` is the cluster index (0..k-1)
+    and the centroids are the ones ``kmeans_assign``'s final pass uses,
+    so assigning a corpus row against this frame (``_nearest_centroids``,
+    metric "l2") reproduces ``kmeans_assign`` exactly, which keeps the
+    trained index oracle-exact."""
+    vecd, init = _vectors(df, k, id_col, vec_col)
+    return _codebook_frame(df, _train_centroids(vecd, init, iters, id_col))
 
 
 def kmeans_subspace_codebook(
@@ -330,7 +277,6 @@ def kmeans_subspace_codebook(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    kernel: str = "auto",
 ) -> DataFrame:
     """TRAINED product-quantizer codebook: one independent kmeans per
     subspace (FAISS trains IndexPQ exactly this way), returned as ONE
@@ -344,124 +290,26 @@ def kmeans_subspace_codebook(
     (min-id init on the subvector slices, 6dp rounding, min-index ties,
     per-coordinate carry-forward), so PQ codes stay oracle-exact.
 
-    Training cost (r14, guide §2.3/§2.4): the n_sub Lloyd runs are FUSED
-    on the expr-kernel path — ONE TakeOrdered seeds every subspace (the
-    same k lowest-id rows, sliced on the driver) and each iteration is
-    ONE job whose projection assigns all n_sub subspaces from a single
-    scan (explode over per-subspace (m, cluster, slice) structs →
-    grouped mean), instead of n_sub separate init jobs plus n_sub
-    separate scan+collect jobs per iteration.  Per-subspace arithmetic
-    (slice → zip_with squared diff → left-fold sum → 6dp round →
-    first-min argmin → 6dp-rounded mean with carry-forward) is the
-    _assign_expr/_train_centroids spec unchanged, so the trained
-    centroids are identical to the unfused loop's.  Large-k subspaces
-    (above EXPR_KERNEL_MAX_K) keep the per-subspace matmul-kernel loop.
+    Training cost: ONE TakeOrdered seeds every subspace (the same k
+    lowest-id rows, sliced on the driver).  Up to ``EXPR_KERNEL_MAX_K``
+    centroids each iteration is ONE ``_fused_update`` job assigning all
+    n_sub subspaces from a single scan; above it each subspace trains on
+    the numpy form (``_train_centroids``).
     """
-    if not (kernel == "expr" or (kernel == "auto" and k <= EXPR_KERNEL_MAX_K)):
-        assign_fn = _resolve_kernel(k, kernel)
-        per_sub: list[list[list[float]]] = []
-        for m in range(n_sub):
-            vecd = df.select(
-                id_col,
-                F.transform(
-                    F.slice(vec_col, m * sub_dim + 1, sub_dim),
-                    lambda x: x.cast("double"),
-                ).alias("v"),
-            )
-            per_sub.append(_train_centroids(vecd, k, iters, id_col, assign_fn))
-        rows = [
-            (c + 1, c, [float(x) for m in range(n_sub) for x in per_sub[m][c]])
-            for c in range(k)
+    vecd, init = _vectors(df, k, id_col, vec_col)
+    sides = _subspace_sides(init, n_sub, sub_dim)
+    if _use_numpy_form(k, kmeans=True):
+        sides = [
+            (s, _train_centroids(
+                vecd.select(id_col, F.slice("v", s + 1, sub_dim).alias("v")),
+                c, iters, id_col,
+            ))
+            for s, c in sides
         ]
-        return df.sparkSession.createDataFrame(rows, _CODEBOOK_SCHEMA)
-
-    vecd = df.select(
-        id_col, F.transform(vec_col, lambda x: x.cast("double")).alias("v")
-    )
-    init_rows = vecd.orderBy(id_col).limit(k).collect()
-    if len(init_rows) < k:
-        raise ValueError(
-            f"kmeans: k={k} but the input has only {len(init_rows)} rows — "
-            "min-id init needs k distinct vectors (a streaming trainer's "
-            "FIRST batch must carry at least max(n_centroids, "
-            "pq_centroids) rows; this is the trained-path twin of the "
-            "frozen-codebook undersize guard)"
-        )
-    per_sub = [
-        [
-            [float(x) for x in r["v"][m * sub_dim : (m + 1) * sub_dim]]
-            for r in init_rows
-        ]
-        for m in range(n_sub)
-    ]
-    for _ in range(iters - 1):
-        per_sub = _fused_subspace_update(vecd, per_sub, n_sub, sub_dim, k)
-    rows = [
-        (c + 1, c, [float(x) for m in range(n_sub) for x in per_sub[m][c]])
-        for c in range(k)
-    ]
-    return df.sparkSession.createDataFrame(rows, _CODEBOOK_SCHEMA)
-
-
-def _fused_subspace_update(
-    vecd: DataFrame,
-    per_sub: list[list[list[float]]],
-    n_sub: int,
-    sub_dim: int,
-    k: int,
-) -> list[list[list[float]]]:
-    """One Lloyd mean-update for ALL subspaces in a single scan: per
-    subspace the projection computes the expr-kernel assignment over the
-    slice (identical float spec to ``_assign_expr``), packages (m,
-    cluster, slice) structs, explodes, and the grouped 6dp mean updates
-    every (subspace, cluster, coordinate) at once.  Row volume through
-    the partial agg is n_sub x sub_dim x n = dim x n — the same bytes
-    the unfused loop pushed through n_sub separate jobs."""
-
-    def dist_arr(sl, cents: list[list[float]]):
-        # r14: one nested-array literal + transform per subspace instead
-        # of k unrolled per-centroid trees (the _assign_expr form) — same
-        # zip_with operands, same fold order, same 6dp round
-        return F.transform(
-            F.lit([[float(x) for x in c] for c in cents]),
-            lambda cent: F.round(
-                F.aggregate(
-                    F.zip_with(sl, cent, lambda a, b: (a - b) * (a - b)),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-                6,
-            ),
-        )
-
-    branches = []
-    for m in range(n_sub):
-        sl = F.slice("v", m * sub_dim + 1, sub_dim)
-        d = dist_arr(sl, per_sub[m])
-        branches.append(
-            F.struct(
-                F.lit(m).alias("m"),
-                (F.array_position(d, F.array_min(d)) - 1)
-                .cast("int")
-                .alias("cluster"),
-                sl.alias("sv"),
-            )
-        )
-    rows = (
-        vecd.select(F.explode(F.array(*branches)).alias("b"))
-        .select("b.m", "b.cluster", F.posexplode("b.sv").alias("i", "val"))
-        .groupBy("m", "cluster", "i")
-        .agg(F.round(F.avg("val"), 6).alias("mn"))
-        .collect()
-    )
-    got = {(r["m"], r["cluster"], r["i"]): r["mn"] for r in rows}
-    return [
-        [
-            [got.get((m, c, i), per_sub[m][c][i]) for i in range(sub_dim)]
-            for c in range(k)
-        ]
-        for m in range(n_sub)
-    ]
+    else:
+        for _ in range(iters - 1):
+            sides = _fused_update(vecd, sides)
+    return _pq_codebook_frame(df, sides)
 
 
 def kmeans_ivf_topk(
@@ -500,7 +348,7 @@ def kmeans_ivf_topk(
     smaller neighbor id, self-matches excluded (the cosine_topk/ivf_topk
     contract).
     """
-    from .similarity import _exact_cosine, _topk_per_query
+    from .similarity import _refine_exact
 
     asg = kmeans_assign(corpus, n_clusters, iters, id_col, vec_col)
     # distinct: the left-join probe rebuild below is 1:1 only for unique
@@ -551,23 +399,10 @@ def kmeans_ivf_topk(
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id")
     )
-    qv = corpus.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+    queries = corpus.join(
+        F.broadcast(query_ids.select(id_col)), id_col, "left_semi"
     )
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
-    )
-    sim = (
-        cand.join(F.broadcast(qv.join(
-            F.broadcast(query_ids.select(F.col(id_col).alias("query_id"))),
-            "query_id", "left_semi",
-        )), "query_id")
-        .join(cv, "neighbor_id")
-        .withColumn(
-            "cosine", _exact_cosine(F.col("q_vec"), F.col("c_vec"), dim)
-        )
-    )
-    return _topk_per_query(sim, k, [F.desc("cosine")])
+    return _refine_exact(cand, queries, corpus, k, id_col, vec_col, dim)
 
 
 def kmeans_ivf_topk_oos(
@@ -584,7 +419,7 @@ def kmeans_ivf_topk_oos(
     """OUT-OF-SAMPLE trained-quantizer IVF top-k — the path
     ``kmeans_ivf_topk``'s docstring promises: ``queries`` are (id, vector)
     rows that need NOT be corpus members.  Each query assigns against the
-    TRAINED centroids (kilobyte driver state via ``kmeans_codebook``) by
+    TRAINED centroids (kilobyte driver state) by
     6dp-rounded L2 with min-centroid-id ties — the same deterministic
     assignment spec training used, so for an in-sample vector at
     ``n_probe=1`` the probe reproduces its trained cluster — and probes
@@ -603,12 +438,7 @@ def kmeans_ivf_topk_oos(
     per-query.  Output: (query_id, neighbor_id, rank) — rank 1..k by
     exact cosine desc, ties to the smaller neighbor id.
     """
-    from .similarity import (
-        _disjoint_ids_or_raise,
-        _exact_cosine,
-        _nearest_centroids,
-        _topk_per_query,
-    )
+    from .similarity import _disjoint_ids_or_raise, _exact_cosine, _topk_per_query
 
     # queries are OUTSIDE the corpus by contract — a colliding id would
     # silently return the corpus row itself as its own rank-1 neighbor
@@ -617,25 +447,17 @@ def kmeans_ivf_topk_oos(
     corpus = _disjoint_ids_or_raise(
         corpus, queries, id_col, "kmeans_ivf_topk_oos"
     )
-    # ONE Lloyd training drives both the corpus assignment and the
-    # codebook frame (kmeans_assign + kmeans_codebook would train twice
-    # for identical deterministic centroids)
-    assign_fn = _resolve_kernel(n_clusters, "auto")
-    vecd = corpus.select(
-        id_col, F.transform(vec_col, lambda x: x.cast("double")).alias("v")
-    )
-    cents = _train_centroids(vecd, n_clusters, iters, id_col, assign_fn)
-    asg = assign_fn(vecd, cents, id_col).select(id_col, "cluster")
-    cb = corpus.sparkSession.createDataFrame(
-        [(c + 1, c, [float(x) for x in cents[c]]) for c in range(n_clusters)],
-        _CODEBOOK_SCHEMA,
-    )
-    q = queries.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec"))
-    probed = _nearest_centroids(
-        q, F.broadcast(cb.select("cent_id", "cent_vec")), "cluster",
-        n_probe, dim, metric="l2",
-    ).select(
-        F.col("_id").alias("query_id"), F.col("_vec").alias("q_vec"), "cluster"
+    # ONE Lloyd training drives both the corpus assignment and the query
+    # probe, which runs on the driver-held centroids directly
+    vecd, init = _vectors(corpus, n_clusters, id_col, vec_col)
+    cents = _train_centroids(vecd, init, iters, id_col)
+    asg = _assign(vecd, cents, id_col)
+    probed = _nearest(
+        queries.select(
+            F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+        ),
+        "query_id", "q_vec", list(range(n_clusters)), cents, "cluster", n_probe,
+        numpy_form=_use_numpy_form(n_clusters),
     )
     cand = F.broadcast(probed).join(
         asg.select(
@@ -664,134 +486,38 @@ def kmeans_codebook_pair(
     vec_col: str = "embedding",
 ) -> tuple[DataFrame, DataFrame]:
     """Train the coarse codebook AND the subspace PQ codebook in one pass
-    structure (r14, guide §1.2/§2.4): ``ivf_pq_kmeans_topk`` needs both,
-    and the two independent trainers each ran their own init TakeOrdered
-    plus their own per-iteration update job over the SAME corpus.  Here
-    ONE TakeOrdered seeds both (the two inits are by contract the k
-    lowest-id rows — full vectors for the coarse side, subspace slices of
-    the same rows for the fine side) and each Lloyd iteration is ONE job:
-    the coarse assignment branch (the ``_assign_expr`` spec over the full
-    vector, tagged m=-1) is unioned with the per-subspace fine branches
-    (the ``_fused_subspace_update`` spec verbatim) and a single grouped
-    6dp mean updates every (side, cluster, coordinate) at once.  Per-side
-    arithmetic is byte-identical to the independent trainers — same
-    expression trees, same groups, same rounding — so the returned
-    frames equal ``kmeans_codebook`` / ``kmeans_subspace_codebook``
-    exactly (test-pinned; both trainings inherit the module determinism
-    contract, which is also what makes merge-order float noise a
-    non-event: the 6dp round absorbs it exactly as it does for the
-    independent jobs).
+    structure: ``ivf_pq_kmeans_topk`` needs both, and the two independent
+    trainers each ran their own init TakeOrdered plus their own
+    per-iteration update job over the SAME corpus.  Here ONE TakeOrdered
+    seeds both (the two inits are by contract the k lowest-id rows — full
+    vectors for the coarse side, subspace slices of the same rows for the
+    fine side) and each Lloyd iteration is ONE ``_fused_update`` job over
+    the coarse side (the full vector) and the subspace sides.  The
+    returned frames equal ``kmeans_codebook`` /
+    ``kmeans_subspace_codebook`` exactly (test-pinned; the 6dp round of
+    the update absorbs the merge-order float noise).
 
     Falls back to the two independent trainers when either side exceeds
-    the expr-kernel bound (the fused branches are codegen'd expression
-    lists; large-k sides belong on the Arrow kernel instead).
+    ``EXPR_KERNEL_MAX_K`` (the fused update is the expression form).
 
     Returns ``(coarse_frame, fine_frame)`` in the
     ``(cent_rank, cent_id, cent_vec)`` codebook layout.
     """
-    if n_centroids > EXPR_KERNEL_MAX_K or pq_centroids > EXPR_KERNEL_MAX_K:
+    need = max(n_centroids, pq_centroids)
+    if _use_numpy_form(need, kmeans=True):
         return (
             kmeans_codebook(df, n_centroids, iters, id_col, vec_col),
             kmeans_subspace_codebook(
                 df, n_sub, sub_dim, pq_centroids, iters, id_col, vec_col
             ),
         )
-    vecd = df.select(
-        id_col, F.transform(vec_col, lambda x: x.cast("double")).alias("v")
+    vecd, init = _vectors(df, need, id_col, vec_col)
+    sides = [(0, init[:n_centroids])] + _subspace_sides(
+        init[:pq_centroids], n_sub, sub_dim
     )
-    need = max(n_centroids, pq_centroids)
-    init_rows = vecd.orderBy(id_col).limit(need).collect()
-    if len(init_rows) < need:
-        raise ValueError(
-            f"kmeans: k={need} but the input has only {len(init_rows)} "
-            "rows — min-id init needs k distinct vectors (a streaming "
-            "trainer's FIRST batch must carry at least max(n_centroids, "
-            "pq_centroids) rows; this is the trained-path twin of the "
-            "frozen-codebook undersize guard)"
-        )
-    dim = len(init_rows[0]["v"])
-    coarse = [[float(x) for x in r["v"]] for r in init_rows[:n_centroids]]
-    per_sub = [
-        [
-            [float(x) for x in r["v"][m * sub_dim : (m + 1) * sub_dim]]
-            for r in init_rows[:pq_centroids]
-        ]
-        for m in range(n_sub)
-    ]
-
-    def dist_arr(sl, cents: list[list[float]]):
-        # r14: one nested-array literal + transform instead of k unrolled
-        # per-centroid trees — same zip_with operands, same fold order,
-        # same 6dp round (the _assign_expr compact form)
-        return F.transform(
-            F.lit([[float(x) for x in c] for c in cents]),
-            lambda cent: F.round(
-                F.aggregate(
-                    F.zip_with(sl, cent, lambda a, b: (a - b) * (a - b)),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-                6,
-            ),
-        )
-
     for _ in range(iters - 1):
-        branches = []
-        # coarse branch, tagged m=-1: the _assign_expr spec over the full
-        # vector (per-centroid zip_with squared diff -> left fold -> 6dp
-        # round -> first-min argmin)
-        dc = dist_arr(F.col("v"), coarse)
-        branches.append(
-            F.struct(
-                F.lit(-1).alias("m"),
-                (F.array_position(dc, F.array_min(dc)) - 1)
-                .cast("int")
-                .alias("cluster"),
-                F.col("v").alias("sv"),
-            )
-        )
-        for m in range(n_sub):
-            sl = F.slice("v", m * sub_dim + 1, sub_dim)
-            d = dist_arr(sl, per_sub[m])
-            branches.append(
-                F.struct(
-                    F.lit(m).alias("m"),
-                    (F.array_position(d, F.array_min(d)) - 1)
-                    .cast("int")
-                    .alias("cluster"),
-                    sl.alias("sv"),
-                )
-            )
-        rows = (
-            vecd.select(F.explode(F.array(*branches)).alias("b"))
-            .select("b.m", "b.cluster", F.posexplode("b.sv").alias("i", "val"))
-            .groupBy("m", "cluster", "i")
-            .agg(F.round(F.avg("val"), 6).alias("mn"))
-            .collect()
-        )
-        got = {(r["m"], r["cluster"], r["i"]): r["mn"] for r in rows}
-        coarse = [
-            [got.get((-1, c, i), coarse[c][i]) for i in range(dim)]
-            for c in range(n_centroids)
-        ]
-        per_sub = [
-            [
-                [got.get((m, c, i), per_sub[m][c][i]) for i in range(sub_dim)]
-                for c in range(pq_centroids)
-            ]
-            for m in range(n_sub)
-        ]
-    coarse_rows = [
-        (c + 1, c, [float(x) for x in coarse[c]]) for c in range(n_centroids)
-    ]
-    fine_rows = [
-        (c + 1, c, [float(x) for m in range(n_sub) for x in per_sub[m][c]])
-        for c in range(pq_centroids)
-    ]
-    return (
-        df.sparkSession.createDataFrame(coarse_rows, _CODEBOOK_SCHEMA),
-        df.sparkSession.createDataFrame(fine_rows, _CODEBOOK_SCHEMA),
-    )
+        sides = _fused_update(vecd, sides)
+    return _codebook_frame(df, sides[0][1]), _pq_codebook_frame(df, sides[1:])
 
 
 def ivf_pq_kmeans_topk(
@@ -829,10 +555,7 @@ def ivf_pq_kmeans_topk(
     """
     from .similarity import build_ivf_pq_index, ivf_pq_topk_serve
 
-    # r14: one shared init TakeOrdered + one fused update job per Lloyd
-    # iteration trains BOTH codebooks (kmeans_codebook_pair) — the two
-    # independent trainers scanned the corpus twice per iteration for
-    # byte-identical centroids (test-pinned equality)
+    # one init and one update job per Lloyd iteration train BOTH codebooks
     coarse, fine = kmeans_codebook_pair(
         corpus, n_centroids, n_sub, sub_dim, pq_centroids, iters,
         id_col, vec_col,
@@ -948,7 +671,7 @@ def ivf_pq_refine_topk(
     rank) — the cosine_topk contract (rank by exact cosine desc, ties to
     the smaller neighbor id; self-matches excluded by the ADC stage).
     """
-    from .similarity import _exact_cosine, _topk_per_query
+    from .similarity import _refine_exact
 
     short = ivf_pq_residual_topk(
         corpus, queries, k=shortlist, n_centroids=n_centroids,
@@ -956,17 +679,4 @@ def ivf_pq_refine_topk(
         pq_centroids=pq_centroids, iters=iters,
         id_col=id_col, vec_col=vec_col, dim=dim,
     ).select("query_id", "neighbor_id")
-    qv = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
-    )
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
-    )
-    sim = (
-        short.join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .withColumn(
-            "cosine", _exact_cosine(F.col("q_vec"), F.col("c_vec"), dim)
-        )
-    )
-    return _topk_per_query(sim, k, [F.desc("cosine")])
+    return _refine_exact(short, queries, corpus, k, id_col, vec_col, dim)

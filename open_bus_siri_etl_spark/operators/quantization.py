@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from .similarity import (
     _eager_provenance_check,
     _nearest_centroids,
+    _recentered,
     _topk_per_query,
     l2_normalize_expr,
 )
@@ -271,14 +272,6 @@ def sq8_decode_expr(
     )
 
 
-def _cent_vec_frame(cents: DataFrame):
-    return F.broadcast(
-        cents.select(
-            F.col("cent_id").alias("cluster"), F.col("cent_vec").alias("_cent")
-        )
-    )
-
-
 def sq8_residual_frame(
     corpus: DataFrame,
     cents: DataFrame,
@@ -286,30 +279,16 @@ def sq8_residual_frame(
     vec_col: str = "embedding",
     dim: int | None = None,
     coarse_metric: str = "cosine",
-    n_cents: int | None = None,
 ) -> DataFrame:
     """(_id, cluster, _rvec) — each vector re-centered on its coarse
     cell, the frame residual SQ8 both TRAINS its bounds on and encodes
     (the ``ivf_residuals`` role for the scalar family).  Exact IEEE
     subtraction on identical operands in both engines."""
-    return (
-        _nearest_centroids(
-            corpus.select(
-                F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec")
-            ),
-            cents, "cluster", keep=1, dim=dim, metric=coarse_metric,
-            n_cents=n_cents,
-        )
-        .join(_cent_vec_frame(cents), "cluster")
-        .select(
-            "_id",
-            "cluster",
-            F.zip_with(
-                "_vec", "_cent",
-                lambda x, y: x.cast("double") - y.cast("double"),
-            ).alias("_rvec"),
-        )
+    assigned = _nearest_centroids(
+        corpus.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec")),
+        cents, "cluster", keep=1, dim=dim, metric=coarse_metric,
     )
+    return _recentered(assigned, cents, "_id", "_vec", "_rvec")
 
 
 def build_sq8_index(
@@ -326,9 +305,11 @@ def build_sq8_index(
 ) -> DataFrame:
     """The persisted IVF-SQ8 store: (id, cluster, sq8_code) — coarse
     assignment against ``cents`` (cosine for the lowest-id stand-in
-    family, "l2" for trained ``kmeans_codebook`` frames, riding the
-    matmul fast path when ``n_cents`` crosses MATMUL_ASSIGN_MIN_K) plus
-    the map-only SQ8 encode.  ``residual=True`` re-centers each vector
+    family, "l2" for trained ``kmeans_codebook`` frames; the
+    nearest-centroid kernel takes its numpy form from
+    ``MATMUL_ASSIGN_MIN_K`` codebook rows on) plus the map-only SQ8
+    encode.  ``n_cents`` is the codebook size for the params tag
+    (counted when omitted).  ``residual=True`` re-centers each vector
     on its cell before encoding (FAISS IndexIVFScalarQuantizer's
     by_residual default) — ``bounds`` must then be trained on the
     residual frame (``sq8_residual_frame`` + ``sq8_train``).  Write it
@@ -355,7 +336,7 @@ def build_sq8_index(
     fp = sq8_fingerprint(cents, bounds, "sq8_fp")
     if residual:
         res = sq8_residual_frame(
-            corpus, cents, id_col, vec_col, dim, coarse_metric, n_cents
+            corpus, cents, id_col, vec_col, dim, coarse_metric
         )
         encoded = sq8_encode(
             res, bounds, vec_col="_rvec", out="sq8_code"
@@ -366,7 +347,6 @@ def build_sq8_index(
                 F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec")
             ),
             cents, "cluster", keep=1, dim=dim, metric=coarse_metric,
-            n_cents=n_cents,
         )
         encoded = sq8_encode(
             assigned, bounds, vec_col="_vec", out="sq8_code"
@@ -488,13 +468,9 @@ def sq8_topk_serve(
         metric=coarse_metric,
     )
     if residual:
-        probes = probes.join(_cent_vec_frame(cents), "cluster").select(
-            F.col("_id").alias("query_id"),
-            "cluster",
-            F.zip_with(
-                "_vec", "_cent",
-                lambda x, y: x.cast("double") - y.cast("double"),
-            ).alias("_q_vec"),
+        probes = _recentered(
+            probes.withColumnRenamed("_id", "query_id"), cents, "query_id",
+            "_vec", "_q_vec",
         )
     else:
         probes = probes.select(
@@ -622,7 +598,7 @@ def sq8_refine_serve(
     (rank by exact cosine desc, ties to the smaller neighbor id;
     self-matches excluded by the SQ8 stage).
     """
-    from .similarity import _exact_cosine
+    from .similarity import _refine_exact
 
     # the refine's exact-cosine re-rank is scale-invariant, so only the
     # SQ8 shortlist stage needs the l2_normalize flag (tag + query space)
@@ -633,20 +609,7 @@ def sq8_refine_serve(
         n_centroids=n_centroids, l2_normalize=l2_normalize,
         eager_check=eager_check,
     ).select("query_id", "neighbor_id")
-    qv = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
-    )
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
-    )
-    sim = (
-        short.join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .withColumn(
-            "cosine", _exact_cosine(F.col("q_vec"), F.col("c_vec"), dim)
-        )
-    )
-    return _topk_per_query(sim, k, [F.desc("cosine")])
+    return _refine_exact(short, queries, corpus, k, id_col, vec_col, dim)
 
 
 def sq8_refine_topk(

@@ -21,7 +21,10 @@ codegen compiles it; the generic path is a zip_with + aggregate fold.
 
 from __future__ import annotations
 
+import sys
+
 import numpy as np
+from pyspark import cloudpickle
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
@@ -69,6 +72,33 @@ def _exact_cosine(q_vec: Column, c_vec: Column, dim: int | None = None) -> Colum
     family's boundary assumption (no ulp-level cosine ties in the data)
     lives in one expression."""
     return _dot(q_vec, c_vec, dim) / (_norm(q_vec, dim) * _norm(c_vec, dim))
+
+
+def _refine_exact(
+    short: DataFrame,
+    queries: DataFrame,
+    corpus: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    dim: int | None = None,
+) -> DataFrame:
+    """Exact-cosine re-rank of a (query_id, neighbor_id) shortlist to the
+    top ``k`` — the refine stage of the IVF serve paths and the only one
+    that reads float vectors: the shortlist-sized query side broadcast
+    against one corpus scan, never a shuffle of the corpus."""
+    qv = queries.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+    )
+    cv = corpus.select(
+        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
+    )
+    sim = (
+        short.join(F.broadcast(qv), "query_id")
+        .join(cv, "neighbor_id")
+        .withColumn("cosine", _exact_cosine(F.col("q_vec"), F.col("c_vec"), dim))
+    )
+    return _topk_per_query(sim, k, [F.desc("cosine")])
 
 
 def _topk_per_query(
@@ -306,274 +336,252 @@ def cosine_delta_pairs(
     )
 
 
-#: above this codebook size the keep-1 L2 assignment routes through the
-#: Arrow matmul kernel instead of the crossJoin+window plan: the
-#: crossJoin materializes N x K rows CARRYING THE VECTORS through a
-#: window shuffle (at 1M x 1024 x 64d that is ~10^9 rows / half a
-#: terabyte of exchange for what is one argmin per row), while the
-#: kernel is one Arrow scan against a driver-held k x dim matrix.
-#: Catalog-entry geometries (k <= 16) keep the declarative plan.
+# ---------------------------------------------------------------------------
+# The nearest-centroid kernel: score each row against a small driver-held
+# codebook and take the nearest id(s), ties to the smaller id.  Two forms,
+# one arithmetic (README "Nearest-centroid kernels"):
+# - expression form (``_cost_array``): the k costs as ONE array expression
+#   over a nested-array literal codebook; also serves per-subspace slices;
+# - numpy form (``_cost_np``): the same sequential per-dimension fold over
+#   one Arrow batch, for the mapInPandas paths.
+# Costs are "smaller is nearer": 6dp-rounded squared L2, or the negated
+# unrounded cosine.  ``_use_numpy_form`` is the one dispatch between them.
+
+#: k-means assignment and subspace training use the expression form up to
+#: this many centroids (past it, JVM codegen of the per-centroid lambda
+#: costs more than the Arrow batch does to run)
+EXPR_KERNEL_MAX_K = 16
+#: nearest-centroid probes and PQ encoding use the numpy form from this
+#: many centroids on (an inline k x dim literal tree is a plan explosion)
 MATMUL_ASSIGN_MIN_K = 64
 
+# the numpy form's helpers run inside Arrow workers, which need not have
+# this package importable: closures that call them ship them by value
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
-def _inline_score_array(vecs: list, dim: int | None, metric: str) -> Column:
-    """The k scores of ``_vec`` against a collected, cent_id-sorted
-    codebook as ONE array expression (nested-array literal + transform —
-    r14: k unrolled per-centroid literal trees dominated catalyst
-    analysis on trained builds, the _pq_codes_inline finding).  Score
-    arithmetic mirrors ``_nearest_centroids``'s crossJoin branch
-    operand-for-operand, so values are IEEE-identical to the window
-    plan's."""
-    if metric == "l2":
-        # same zip_with operands, same fold order, same 6dp round as the
-        # crossJoin branch
-        return F.transform(
-            F.lit(vecs),
-            lambda c: F.round(
-                F.aggregate(
-                    F.zip_with(
-                        F.col("_vec"),
-                        c,
-                        lambda x, y: (x.cast("double") - y.cast("double"))
-                        * (x.cast("double") - y.cast("double")),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
+
+def _use_numpy_form(k: int, kmeans: bool = False) -> bool:
+    """The form dispatch: True picks the numpy form for a ``k``-centroid
+    codebook, False the expression form."""
+    return k > EXPR_KERNEL_MAX_K if kmeans else k >= MATMUL_ASSIGN_MIN_K
+
+
+def _round6(x: Column) -> Column:
+    """The kernels' one 6dp rounding rule, half-up on the binary double:
+    floor(x*1e6 + 0.5) / 1e6.  Valid for non-negative ``x`` (squared
+    distances) only.  It equals ``_round6_np`` bit for bit and DuckDB's
+    round(x, 6); Spark's round(x, 6) rounds the shortest decimal repr
+    instead and disagrees with both near half-6dp boundaries."""
+    return F.floor(x * 1e6 + 0.5) / 1e6
+
+
+def _round6_np(x):
+    """``_round6`` on numpy arrays: the same IEEE operations."""
+    return np.floor(x * 1e6 + 0.5) / 1e6
+
+
+def _sq_l2(a: Column, b: Column) -> Column:
+    """Unrounded squared L2 between two array columns, folded left to
+    right from 0.0 (``_cost_np`` adds in the same order)."""
+    return F.aggregate(
+        F.zip_with(
+            a,
+            b,
+            lambda x, y: (x.cast("double") - y.cast("double"))
+            * (x.cast("double") - y.cast("double")),
+        ),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+_VEC_ERROR = "nearest centroid: id %s has %s, but the codebook width is %d"
+
+
+def _checked_vec(vec: Column, row_id: Column, width: int) -> Column:
+    """``vec`` itself, or an in-plan error naming the row's id when the
+    vector is NULL or its width differs from the codebook's (zip_with would
+    pad NULL and the row's costs would silently go NULL)."""
+    return F.when(F.size(vec) == width, vec).otherwise(
+        F.raise_error(
+            F.format_string(
+                _VEC_ERROR,
+                F.coalesce(row_id.cast("string"), F.lit("NULL")),
+                F.when(vec.isNull(), F.lit("a NULL vector")).otherwise(
+                    F.format_string("a vector of width %d", F.size(vec))
                 ),
-                6,
-            ),
+                F.lit(width),
+            )
         )
-    # cosine: zip the nested codebook literal with a per-centroid norm
-    # literal computed on the driver.  The Python fold mirrors _norm's
-    # expression tree operand-for-operand (same left-to-right IEEE double
-    # adds, correctly-rounded sqrt), so each nc is bit-equal to the
-    # constant the optimizer folded out of the historical per-centroid
-    # _norm(lit) subtree; the query norm is shared across the k scores
-    # (identical value, evaluated once instead of k times).
+    )
+
+
+def _matrix_np(pdf, id_col: str, vec_col: str, width: int):
+    """One Arrow batch's vectors as an n x width float64 matrix; a NULL or
+    other-width vector raises naming its id (``_checked_vec``'s message)."""
+    vecs = pdf[vec_col].tolist()
+    try:
+        X = np.asarray(vecs, dtype=np.float64)
+        if X.shape == (len(vecs), width):
+            return X
+    except (TypeError, ValueError):
+        pass
+    for row_id, v in zip(pdf[id_col].tolist(), vecs):
+        if v is None or len(v) != width:
+            what = "a NULL vector" if v is None else f"a vector of width {len(v)}"
+            raise ValueError(_VEC_ERROR % (row_id, what, width))
+    raise ValueError("nearest centroid: a vector holds NULL or non-numeric elements")
+
+
+def _collect_codebook(cents: DataFrame) -> tuple[list[int], list[list[float]]]:
+    """(cent_ids, vectors) of a codebook frame, cent_id-sorted, so the
+    first index of an extreme is the smaller-cent_id tie.  The collect is
+    bounded by contract (every caller passes a codebook-sized frame) and
+    fires any in-plan undersize guard eagerly."""
+    rows = sorted(
+        cents.select("cent_id", "cent_vec").collect(),
+        key=lambda r: r["cent_id"],
+    )
+    return [int(r["cent_id"]) for r in rows], [
+        None if r["cent_vec"] is None else [float(x) for x in r["cent_vec"]]
+        for r in rows
+    ]
+
+
+def _codebook_width(ids: list, cmat: list) -> int:
+    """The codebook's common width; a NULL or ragged centroid raises
+    naming its id."""
+    width = len(cmat[0] or [])
+    for i, c in zip(ids, cmat):
+        if not c or len(c) != width:
+            raise ValueError(
+                f"nearest centroid: centroid {i} has "
+                f"{'no vector' if not c else f'width {len(c)}'}, but "
+                f"centroid {ids[0]} has width {width}"
+            )
+    return width
+
+
+def _centroid_norms(ids: list, cmat: list, dim: int | None) -> list[float]:
+    """Cosine centroid norms over the first ``dim`` coordinates, folded on
+    the driver exactly as ``_norm`` folds in-plan (sequential adds from
+    0.0, correctly rounded sqrt).  A zero-norm centroid raises naming its
+    id: its cosine score is undefined, and an argmax could pick it."""
     import math
 
-    nrms = []
-    for c in vecs:
-        # fold over the first ``dim`` elements only, mirroring the unrolled
-        # _norm(cent_vec, dim) the crossJoin branch evaluates — a caller
-        # passing dim < len(c) must see identical scores on both plans
-        # (r14 ADVICE)
-        sq = [x * x for x in (c if dim is None else c[:dim])]
-        if dim is None:
-            acc = 0.0
-            for s in sq:
-                acc = acc + s
-        else:
-            acc = sq[0]
-            for s in sq[1:]:
-                acc = acc + s
-        nrms.append(math.sqrt(acc))
-    qn = _norm(F.col("_vec"), dim)
-    return F.zip_with(
-        F.lit(vecs),
-        F.lit(nrms),
-        lambda c, nc: _dot(F.col("_vec"), c, dim) / (qn * nc),
-    )
-
-
-def _inline_nearest_one(
-    df: DataFrame,
-    rows: list,
-    out: str,
-    dim: int | None,
-    metric: str,
-) -> DataFrame:
-    """keep-1 assignment against a collected, cent_id-sorted codebook as one
-    codegen'd array expression per row (no crossJoin, no window shuffle).
-    Score expressions mirror ``_nearest_centroids``'s crossJoin branch
-    term-for-term (``_inline_score_array``), so results are
-    IEEE-identical; first-index-of-extreme == ties-to-smaller-cent_id."""
-    ids = [int(r["cent_id"]) for r in rows]
-    vecs = [[float(x) for x in r["cent_vec"]] for r in rows]
-    d = _inline_score_array(vecs, dim, metric)
-    best = F.array_position(
-        d, F.array_min(d) if metric == "l2" else F.array_max(d)
-    )
-    id_map = F.array(*[F.lit(i) for i in ids])
-    return df.select(
-        "_id",
-        "_vec",
-        F.element_at(id_map, best.cast("int")).cast("long").alias(out),
-    )
-
-
-def _inline_nearest_n(
-    df: DataFrame,
-    rows: list,
-    out: str,
-    keep: int,
-    dim: int | None,
-    metric: str,
-) -> DataFrame:
-    """keep-n probe against a collected, cent_id-sorted codebook as one
-    map-only sorted-slice explode (r14, guide §2.4 — remove shuffles
-    outright): the crossJoin + rank-window plan pushed |rows| x k scored
-    rows CARRYING THE VECTORS through one Exchange + Sort per probe —
-    on every ANN serve path, per query batch.  Here the k scores are one
-    array expression (``_inline_score_array``, IEEE-identical to the
-    crossJoin branch), zipped with the cent_ids, sorted by the window's
-    exact ordering — (score asc, cent_id asc) for l2, (score desc,
-    cent_id asc) for cosine — sliced to ``keep`` and exploded: map-only,
-    2 (or keep) output rows per input row, no Exchange, no Sort node.
-    Same boundary assumption as the keep-1 inline path: scores are
-    never NULL/NaN (NULL ids are guarded upstream; zero vectors raise in
-    the normalized family), where array_sort and a rank window order
-    degenerate values differently.  A NULL *vector* is the one degenerate
-    input nothing upstream enforces, and it would order
-    NONDETERMINISTICALLY here (the cosine comparator returns 0 for NULL
-    scores) where the window plan pins NULLs last — so it raises in-plan
-    instead (r14 ADVICE; the standard guard style)."""
-    df = df.withColumn(
-        "_vec",
-        F.when(F.col("_vec").isNotNull(), F.col("_vec")).otherwise(
-            F.raise_error(
-                F.format_string(
-                    "nearest_centroids: NULL vector for id %s — the inline "
-                    "keep-n probe has no deterministic NULL-score ordering "
-                    "(the window plan orders NULLs last); filter or fix "
-                    "NULL vectors upstream",
-                    F.col("_id").cast("string"),
-                )
+    out = []
+    for i, c in zip(ids, cmat):
+        acc = 0.0
+        for x in c[:dim]:
+            acc = acc + x * x
+        if acc == 0.0:
+            raise ValueError(
+                f"nearest centroid: centroid {i} has zero norm, so its "
+                "cosine score is undefined"
             )
-        ),
-    )
-    ids = [int(r["cent_id"]) for r in rows]
-    vecs = [[float(x) for x in r["cent_vec"]] for r in rows]
-    d = _inline_score_array(vecs, dim, metric)
-    pairs = F.arrays_zip(
-        d.alias("s"), F.lit([int(i) for i in ids]).alias("i")
-    )
+        out.append(math.sqrt(acc))
+    return out
+
+
+def _cost_array(
+    vec: Column, cmat: list, metric: str = "l2", dim: int | None = None,
+    nrms: list | None = None,
+) -> Column:
+    """Expression form: the k costs of ``vec`` against the literal
+    codebook ``cmat`` as one array column (``_round6(_sq_l2)`` for l2,
+    -dot/(|q| |c|) over the first ``dim`` coordinates for cosine with
+    ``nrms`` from ``_centroid_norms``)."""
     if metric == "l2":
-        # lexicographic struct sort == Window.orderBy(d2 asc, cent_id asc)
-        ordered = F.array_sort(pairs)
-    else:
-        ordered = F.array_sort(
-            pairs,
-            lambda a, b: F.when(a["s"] > b["s"], F.lit(-1))
-            .when(a["s"] < b["s"], F.lit(1))
-            .when(a["i"] < b["i"], F.lit(-1))
-            .when(a["i"] > b["i"], F.lit(1))
-            .otherwise(F.lit(0)),
-        )
-    return (
-        df.select("_id", "_vec", F.explode(F.slice(ordered, 1, keep)).alias("_t"))
-        .select("_id", "_vec", F.col("_t.i").cast("long").alias(out))
+        return F.transform(F.lit(cmat), lambda c: _round6(_sq_l2(vec, c)))
+    qn = _norm(vec, dim)
+    return F.zip_with(
+        F.lit(cmat), F.lit(nrms), lambda c, nc: -(_dot(vec, c, dim) / (qn * nc))
     )
 
 
-def _probe_matmul(
+def _cost_np(X, C, metric: str = "l2", dim: int | None = None, nrms=None):
+    """Numpy form: the n x k cost matrix of ``_cost_array``, folded over
+    dimensions sequentially so every value is bit-identical to it."""
+    if metric == "l2":
+        acc = np.zeros((X.shape[0], C.shape[0]))
+        for j in range(C.shape[1]):
+            dj = X[:, j][:, None] - C[:, j][None, :]
+            acc += dj * dj
+        return _round6_np(acc)
+    dot = np.zeros((X.shape[0], C.shape[0]))
+    qsq = np.zeros(X.shape[0])
+    for j in range(X.shape[1] if dim is None else dim):
+        dot += X[:, j][:, None] * C[:, j][None, :]
+        qsq += X[:, j] * X[:, j]
+    return -(dot / (np.sqrt(qsq)[:, None] * np.asarray(nrms)[None, :]))
+
+
+def _nearest(
     df: DataFrame,
-    rows: list,
+    id_col: str,
+    vec_col: str,
+    ids: list,
+    cmat: list,
     out: str,
-    keep: int,
-    dim: int | None,
-    metric: str,
+    keep: int = 1,
+    metric: str = "l2",
+    dim: int | None = None,
+    *,
+    numpy_form: bool,
+    emit_vec: bool = True,
 ) -> DataFrame:
-    """Large-k probe kernel (r15, guide §4/§2.4): one Arrow mapInPandas
-    scan against the driver-held codebook for codebooks ABOVE
-    ``MATMUL_ASSIGN_MIN_K``, replacing the crossJoin + rank-window
-    fallback — the last n x k row explosion on a serve path (the
-    crossJoin pushed |rows| x k scored rows CARRYING THE VECTORS through
-    one Exchange + Sort per probe; the kernel is map-only).
+    """The nearest-centroid kernel: (id_col[, vec_col], out) with the
+    ``keep`` lowest-cost ``ids`` per row, ties to the smaller id (``ids``
+    ascending).  keep=1 is the first index of the minimum; keep > 1 sorts
+    (cost, id) pairs and explodes the first ``keep`` — map-only in both
+    forms.  ``emit_vec=False`` drops the vector from the output, which
+    matters in the numpy form: Spark cannot prune columns inside a
+    mapInPandas.  ``vec_col`` passes through with its input type."""
+    width = _codebook_width(ids, cmat)
+    nrms = _centroid_norms(ids, cmat, dim) if metric == "cosine" else None
+    cols = [id_col, vec_col] if emit_vec else [id_col]
+    if not numpy_form:
+        df = df.withColumn(
+            vec_col, _checked_vec(F.col(vec_col), F.col(id_col), width)
+        )
+        cost = _cost_array(F.col(vec_col), cmat, metric, dim, nrms)
+        if keep == 1:
+            best = F.array_position(cost, F.array_min(cost)).cast("int")
+            return df.select(
+                *cols, F.element_at(F.lit(ids), best).cast("long").alias(out)
+            )
+        pairs = F.array_sort(F.arrays_zip(cost.alias("s"), F.lit(ids).alias("i")))
+        return df.select(
+            *cols, F.explode(F.slice(pairs, 1, keep)).alias("_t")
+        ).select(*cols, F.col("_t.i").cast("long").alias(out))
 
-    Float parity with ``_crossjoin_nearest``, per metric:
-
-    - l2: distances accumulate as a SEQUENTIAL fold over dimensions
-      (acc += (x_j - c_j)^2, j = 0..width-1) — bit-for-bit the
-      zip_with/aggregate left-to-right order — then round half-up on the
-      binary double (floor(x*1e6 + 0.5)/1e6, distances non-negative),
-      exactly the ``_assign_matmul`` discipline.  The l2 crossJoin branch
-      folds the FULL vector width regardless of ``dim`` (as does the
-      inline path), so the kernel does too.
-    - cosine: dot and query-norm accumulate as the same sequential fold
-      over the first ``dim`` dimensions (all, when dim is None);
-      centroid norms are the driver-side fold ``_inline_score_array``
-      uses (bit-equal to the constants the optimizer folds out of
-      _norm(lit) subtrees); the score is dot / (q_nrm * c_nrm) with the
-      same operand grouping, UNROUNDED — IEEE-identical to the crossJoin
-      expression on identical operands.
-
-    Ordering: rows arrive cent_id-sorted, so np.argsort(kind='stable')
-    over (-)score reproduces the window's (score, cent_id asc) exactly,
-    and for keep=1 the first-extreme index IS ties-to-smaller-cent_id.
-    A NULL vector fails the numpy conversion loudly (task error), never
-    a silent mis-ordering.  ``_vec`` passes through with its input
-    dtype, matching the crossJoin output schema."""
-    import numpy as np
-
-    ids = [int(r["cent_id"]) for r in rows]
-    cmat = [[float(x) for x in r["cent_vec"]] for r in rows]
-    id_field = df.schema["_id"]
-    vec_field = df.schema["_vec"]
-    out_schema = T.StructType(
-        [
-            T.StructField(id_field.name, id_field.dataType),
-            T.StructField(vec_field.name, vec_field.dataType),
-            T.StructField(out, T.LongType()),
-        ]
+    C = np.asarray(cmat, dtype=np.float64)
+    idarr = np.asarray(ids, dtype=np.int64)
+    kk = min(keep, len(ids))
+    schema = T.StructType(
+        [T.StructField(c, df.schema[c].dataType) for c in cols]
+        + [T.StructField(out, T.LongType())]
     )
 
     def probe(batches):
         import pandas as pd
 
-        C = np.asarray(cmat, dtype=np.float64)  # k x width
-        idarr = np.asarray(ids, dtype=np.int64)
-        k = C.shape[0]
-        kk = min(keep, k)
-        if metric == "cosine":
-            Cd = C if dim is None else C[:, :dim]
-            # driver-fold centroid norms: same sequential adds + sqrt as
-            # _inline_score_array / the folded _norm(lit) constants
-            cn = np.empty(k, dtype=np.float64)
-            for i in range(k):
-                acc = 0.0
-                for x in Cd[i]:
-                    acc = acc + x * x
-                cn[i] = np.sqrt(acc)
         for pdf in batches:
             if not len(pdf):
                 continue
-            X = np.asarray(pdf["_vec"].tolist(), dtype=np.float64)
-            n = len(pdf)
-            if metric == "l2":
-                acc = np.zeros((n, k), dtype=np.float64)
-                for j in range(C.shape[1]):  # sequential fold order
-                    dj = X[:, j][:, None] - C[:, j][None, :]
-                    acc += dj * dj
-                d = np.floor(acc * 1e6 + 0.5) / 1e6
-                sel = (
-                    np.argmin(d, axis=1)[:, None]
-                    if kk == 1
-                    else np.argsort(d, axis=1, kind="stable")[:, :kk]
-                )
-            else:
-                Xd = X if dim is None else X[:, :dim]
-                dot = np.zeros((n, k), dtype=np.float64)
-                qsq = np.zeros(n, dtype=np.float64)
-                for j in range(Xd.shape[1]):  # sequential fold order
-                    dot += Xd[:, j][:, None] * Cd[:, j][None, :]
-                    qsq += Xd[:, j] * Xd[:, j]
-                s = dot / (np.sqrt(qsq)[:, None] * cn[None, :])
-                sel = (
-                    np.argmax(s, axis=1)[:, None]
-                    if kk == 1
-                    else np.argsort(-s, axis=1, kind="stable")[:, :kk]
-                )
-            rep = np.repeat(np.arange(n), kk)
-            yield pd.DataFrame(
-                {
-                    "_id": pdf["_id"].to_numpy()[rep],
-                    "_vec": pdf["_vec"].take(rep).to_numpy(),
-                    out: idarr[sel.ravel()],
-                }
+            X = _matrix_np(pdf, id_col, vec_col, width)
+            cost = _cost_np(X, C, metric, dim, nrms)
+            sel = (
+                np.argmin(cost, axis=1)[:, None]
+                if kk == 1
+                else np.argsort(cost, axis=1, kind="stable")[:, :kk]
             )
+            rep = np.repeat(np.arange(len(pdf)), kk)
+            data = {c: pdf[c].take(rep).to_numpy() for c in cols}
+            data[out] = idarr[sel.ravel()]
+            yield pd.DataFrame(data)
 
-    return df.select("_id", "_vec").mapInPandas(probe, schema=out_schema)
+    return df.select(id_col, vec_col).mapInPandas(probe, schema=schema)
 
 
 def _crossjoin_nearest(
@@ -584,28 +592,14 @@ def _crossjoin_nearest(
     dim: int | None,
     metric: str,
 ) -> DataFrame:
-    """The historical crossJoin + rank-window probe plan: |df| x |cents|
-    scored rows through one Exchange + Sort.  Production dispatch only
-    reaches it for an EMPTY codebook (crossJoin with an empty frame =
-    empty result, the contract); it is kept whole as the reference
-    implementation the kernel parity tests diff against."""
+    """The crossJoin + rank-window reference plan for ``_nearest``:
+    |df| x |cents| scored rows through one Exchange + Sort.  Production
+    never runs it; the parity tests and tools/bench_probe_cosine.py diff
+    the two forms against it."""
     scored = df.crossJoin(cents)
     if metric == "l2":
         scored = scored.withColumn(
-            "cent_d2",
-            F.round(
-                F.aggregate(
-                    F.zip_with(
-                        F.col("_vec"),
-                        F.col("cent_vec"),
-                        lambda x, y: (x.cast("double") - y.cast("double"))
-                        * (x.cast("double") - y.cast("double")),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-                6,
-            ),
+            "cent_d2", _round6(_sq_l2(F.col("_vec"), F.col("cent_vec")))
         )
         w = Window.partitionBy("_id").orderBy("cent_d2", "cent_id")
     else:
@@ -629,101 +623,26 @@ def _nearest_centroids(
     keep: int,
     dim: int | None = None,
     metric: str = "cosine",
-    n_cents: int | None = None,
 ) -> DataFrame:
-    """Nearest-centroid assignment shared by the IVF family (ivf_topk,
-    ivf_pq_topk — one deterministic spec, ties to the smaller centroid
-    id).  ``df``: (_id, _vec); ``cents``: broadcastable (cent_id,
-    cent_vec).  Returns (_id, _vec, <out>) with the top ``keep``
-    centroids per row.
+    """Nearest-centroid assignment and probes shared by the IVF family
+    (one deterministic spec, ties to the smaller centroid id).  ``df``:
+    (_id, _vec); ``cents``: (cent_id, cent_vec), collected to the driver.
+    Returns (_id, _vec, <out>) with the top ``keep`` centroids per row.
 
     ``metric``: "cosine" (max unrounded cosine — the lowest-id stand-in
-    family's spec) or "l2" (min 6dp-ROUNDED squared L2 — the kmeans
+    family's spec) or "l2" (min 6dp-rounded squared L2 — the kmeans
     contract, so assigning against a ``kmeans_codebook`` frame reproduces
-    ``kmeans_assign``'s clusters exactly: trained centroids are
-    themselves 6dp values, and the rounding keeps argmin ties
-    engine-identical).
-
-    ``n_cents`` (callers that know their codebook size pass it): for the
-    keep-1 L2 family above ``MATMUL_ASSIGN_MIN_K`` the assignment runs
-    through ``clustering._assign_matmul`` — the SAME sequential-fold /
-    6dp-half-up / first-min kernel the kmeans trainer uses, so the
-    result is bit-identical to the crossJoin plan (parity-tested) while
-    the plan stays one Arrow scan instead of an N x K row explosion.
-    The codebook collects to the driver (bounded k x dim — the kmeans
-    precedent), which also fires the undersize guard eagerly."""
-    if (
-        metric == "l2"
-        and keep == 1
-        and n_cents is not None
-        and n_cents >= MATMUL_ASSIGN_MIN_K
-    ):
-        from .clustering import _assign_matmul
-
-        rows = sorted(
-            cents.select("cent_id", "cent_vec").collect(),
-            key=lambda r: r["cent_id"],
-        )
-        ids = [r["cent_id"] for r in rows]
-        cmat = [list(map(float, r["cent_vec"])) for r in rows]
-        assigned = _assign_matmul(
-            df.select(
-                "_id",
-                F.transform("_vec", lambda x: x.cast("double")).alias("v"),
-            ),
-            cmat,
-            "_id",
-        )
-        # argmin INDEX -> cent_id: sorted-by-cent_id list means the
-        # first-min index tie IS the smaller-cent_id tie; map through the
-        # id list (identity for dense kmeans codebooks, but not assumed)
-        id_map = F.array(*[F.lit(int(i)) for i in ids])
-        return assigned.select(
-            "_id",
-            F.col("v").alias("_vec"),
-            # cast matches the crossJoin path's cent_id type (bigint) so
-            # both plans write schema-identical parquet partitions
-            F.element_at(id_map, F.col("cluster") + 1)
-            .cast("long")
-            .alias(out),
-        )
-    # r14 (guide §2.4 — remove shuffles outright): assignment/probe
-    # against a codebook-sized frame needs no crossJoin + per-row rank
-    # window (an n x k row explosion through one Exchange + Sort).
-    # Collect the codebook (bounded by contract — every caller passes a
-    # <= max(n_centroids, pq_centroids)-row frame; the collect also
-    # fires any in-plan undersize guard eagerly, the matmul-path
-    # precedent) and evaluate the k scores as ONE codegen'd array
-    # expression per row, map-only: keep=1 takes first-index-of-extreme
-    # (== the window's ties-to-smaller-cent_id), keep>1 sorts the
-    # (score, cent_id) pairs by the window's exact ordering, slices and
-    # explodes (keep rows per input row, still no Exchange/Sort node —
-    # this is every ANN serve path's per-query-batch probe).
-    # Float parity with the crossJoin path: each score is the SAME
-    # arithmetic with the centroid from a nested-array literal (IEEE ops
-    # on identical operands — _inline_score_array).
-    # Bounded at MATMUL_ASSIGN_MIN_K scores (catalog geometries are
-    # k <= 16): above that an inline k x dim literal tree is a plan
-    # explosion, so larger codebooks — BOTH metrics, any keep — route
-    # through the Arrow matmul probe kernel (r15; the l2 keep-1 family
-    # had the kernel since r11, the cosine/keep-n fallback was the last
-    # crossJoin n x k row explosion on a serve path).  The collect is
-    # load-bearing on every non-empty path (literal source below the
-    # threshold, kernel matrix above it).  An empty codebook falls
-    # through to the crossJoin plan (empty frame = empty result, the
-    # historical contract; the inline expression would emit NULL
-    # clusters).
-    rows = sorted(
-        cents.select("cent_id", "cent_vec").collect(),
-        key=lambda r: r["cent_id"],
+    ``kmeans_assign``'s clusters exactly).  An empty codebook assigns
+    nothing."""
+    ids, cmat = _collect_codebook(cents)
+    if not ids:
+        return df.select(
+            "_id", "_vec", F.lit(None).cast("long").alias(out)
+        ).limit(0)
+    return _nearest(
+        df, "_id", "_vec", ids, cmat, out, keep, metric, dim,
+        numpy_form=_use_numpy_form(len(ids)),
     )
-    if 0 < len(rows) <= MATMUL_ASSIGN_MIN_K:
-        if keep == 1:
-            return _inline_nearest_one(df, rows, out, dim, metric)
-        return _inline_nearest_n(df, rows, out, keep, dim, metric)
-    if len(rows) > MATMUL_ASSIGN_MIN_K:
-        return _probe_matmul(df, rows, out, keep, dim, metric)
-    return _crossjoin_nearest(df, cents, out, keep, dim, metric)
 
 
 def ivf_topk(
@@ -1691,20 +1610,11 @@ def semantic_dedup_pairs(
         .limit(n_centroids)
         .select(F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cent_vec"))
     )
-    # r14 (guide §2.1 — remove shuffles outright): the keep-1 assignment
-    # previously duplicated the crossJoin + rank-window plan inline (an
-    # n x k row explosion through one Exchange + Sort carrying the
-    # vectors); route it through the shared _nearest_centroids helper,
-    # whose inline path evaluates the k cosine scores as one codegen'd
-    # array expression per row — map-only, IEEE-identical scores, same
-    # ties-to-smaller-cent_id (the ivf_topk spec this function shares).
+    # the keep-1 assignment is the shared nearest-centroid kernel (map-only,
+    # ties to the smaller cent_id — the ivf_topk spec this function shares)
     assigned = _nearest_centroids(
         corpus.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec")),
-        cents,
-        "cluster",
-        1,
-        dim,
-        metric="cosine",
+        cents, "cluster", 1, dim, metric="cosine",
     ).select(
         "_id",
         "_vec",
@@ -1766,148 +1676,115 @@ def ann_recall(
     )
 
 
-def _pq_codes_matmul(
+def _pq_encode(
     corpus: DataFrame,
-    cents: DataFrame,
+    ids: list,
+    cmat: list,
     n_sub: int,
     sub_dim: int,
     id_col: str,
     vec_col: str,
+    *,
+    numpy_form: bool,
 ) -> DataFrame:
-    """Large-k PQ encode kernel (r14): ONE Arrow ``mapInPandas`` scan
-    computing every subspace argmin per batch — replacing the
-    crossJoin(|corpus| x k rows) + ``n_sub`` ranking windows + chained
-    re-joins plan, which at the 10M x 64-centroid tier puts 640M scored
-    rows through a single shuffle (the measured scale killer that
-    motivated this kernel; BENCH_IVFPQ.json ``pq_scale_10m`` carries the
-    kernel-path build time).
+    """PQ encode against a collected, cent_id-sorted codebook: per
+    subspace ``m`` the nearest-centroid kernel (l2, keep 1) over the slice
+    [m*sub_dim, (m+1)*sub_dim) of vector and centroids, and ``recon_d2`` =
+    the selected distances summed in m-order, then ``_round6``.  Output:
+    (id, code0..code{n_sub-1}, recon_d2), map-only in both forms."""
+    width = _codebook_width(ids, cmat)
+    subs = [slice(m * sub_dim, (m + 1) * sub_dim) for m in range(n_sub)]
+    codes = [f"code{m}" for m in range(n_sub)]
+    if not numpy_form:
+        vec = _checked_vec(F.col(vec_col), F.col(id_col), width)
+        staged = corpus.select(
+            id_col,
+            *[
+                _cost_array(
+                    F.slice(vec, s.start + 1, sub_dim), [c[s] for c in cmat]
+                ).alias(f"_d{m}")
+                for m, s in enumerate(subs)
+            ],
+        )
+        best = [
+            F.array_position(F.col(f"_d{m}"), F.array_min(f"_d{m}")).cast("int")
+            for m in range(n_sub)
+        ]
+        sel = [F.element_at(F.col(f"_d{m}"), b) for m, b in enumerate(best)]
+        recon = sum(sel[1:], sel[0])  # left-assoc, in m-order
+        return staged.select(
+            id_col,
+            *[
+                F.element_at(F.lit(ids), b).cast("long").alias(c)
+                for b, c in zip(best, codes)
+            ],
+            _round6(recon).alias("recon_d2"),
+        )
 
-    Bit-parity with the expression plan, the ``_assign_matmul``
-    discipline verbatim: sequential fold over each subspace's dims
-    (acc += (x_j - c_j)^2, matching ``aggregate()``'s left-to-right
-    order), half-up 6dp rounding on the non-negative binary double
-    (floor(x*1e6 + 0.5)/1e6 == both engines' round() on these values),
-    first-min ``np.argmin`` over the cent_id-SORTED codebook matrix
-    (== the window's ties-to-smaller-cent_id), and ``recon_d2`` summed
-    over subspaces in m-order before its own half-up rounding (== the
-    left-assoc column sum).  Parity is test-pinned against the crossJoin
-    plan.  The codebook collects to the driver (bounded k x dim — the
-    kmeans precedent), which also fires any undersize guard eagerly."""
-    import numpy as np
-
-    rows = sorted(
-        cents.select("cent_id", "cent_vec").collect(),
-        key=lambda r: r["cent_id"],
-    )
-    cent_ids = np.asarray([int(r["cent_id"]) for r in rows], dtype="int64")
-    C = np.asarray(
-        [list(map(float, r["cent_vec"])) for r in rows], dtype=np.float64
-    )
-    id_field = corpus.schema[id_col]
-    out_schema = T.StructType(
-        [T.StructField(id_field.name, id_field.dataType)]
-        + [T.StructField(f"code{m}", T.LongType()) for m in range(n_sub)]
+    C = np.asarray(cmat, dtype=np.float64)
+    idarr = np.asarray(ids, dtype=np.int64)
+    schema = T.StructType(
+        [T.StructField(id_col, corpus.schema[id_col].dataType)]
+        + [T.StructField(c, T.LongType()) for c in codes]
         + [T.StructField("recon_d2", T.DoubleType())]
     )
 
-    def encode(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
+    def encode(batches):
         import pandas as pd
 
         for pdf in batches:
             if not len(pdf):
                 continue
-            X = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
+            X = _matrix_np(pdf, id_col, vec_col, width)
+            rows = np.arange(len(pdf))
             data = {id_col: pdf[id_col].to_numpy()}
-            total = np.zeros(len(pdf), dtype=np.float64)
-            for m in range(n_sub):
-                acc = np.zeros((len(pdf), C.shape[0]), dtype=np.float64)
-                for j in range(m * sub_dim, (m + 1) * sub_dim):
-                    dj = X[:, j][:, None] - C[:, j][None, :]
-                    acc += dj * dj
-                d = np.floor(acc * 1e6 + 0.5) / 1e6
+            total = np.zeros(len(pdf))
+            for c, s in zip(codes, subs):
+                d = _cost_np(X[:, s], C[:, s])
                 idx = np.argmin(d, axis=1)
-                data[f"code{m}"] = cent_ids[idx]
-                total = total + d[np.arange(len(pdf)), idx]
-            data["recon_d2"] = np.floor(total * 1e6 + 0.5) / 1e6
+                data[c] = idarr[idx]
+                total = total + d[rows, idx]
+            data["recon_d2"] = _round6_np(total)
             yield pd.DataFrame(data)
 
-    return corpus.select(id_col, vec_col).mapInPandas(encode, out_schema)
+    return corpus.select(id_col, vec_col).mapInPandas(encode, schema)
 
 
-def _pq_codes_inline(
+def _pq_codes_crossjoin(
     corpus: DataFrame,
-    rows: list,
+    cents: DataFrame,
     n_sub: int,
     sub_dim: int,
-    id_col: str,
-    vec_col: str,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
 ) -> DataFrame:
-    """Small-k PQ encode as one map-only projection (r14): per subspace,
-    the k 6dp-rounded squared-L2 distances to the collected, cent_id-
-    sorted codebook evaluated as a literal-array expression; the code is
-    the first-min index mapped through the cent_id list (== the window
-    plan's ties-to-smaller-cent_id) and ``recon_d2`` sums the selected
-    per-subspace distances in m-order before its own 6dp round (== the
-    crossJoin plan's left-assoc column sum).  IEEE-identical operands and
-    fold order keep the output row-identical to the crossJoin + ranking-
-    windows plan — parity-pinned in tests — while the plan drops one
-    Exchange + Sort per subspace and the (n_sub - 1) re-joins."""
-    ids = [int(r["cent_id"]) for r in rows]
-    id_map = F.lit(ids)
-
-    def d2_arr(m: int) -> Column:
-        # ONE nested-array literal per subspace (k x sub_dim, a single
-        # plan node) + a higher-order transform — NOT k unrolled
-        # per-centroid trees: the compact form keeps the plan node count
-        # comparable to the crossJoin branch's column expressions, so
-        # downstream catalyst analysis doesn't pay for k copies of the
-        # distance tree.  Evaluation is element-wise identical: zip_with
-        # pairs the same doubles, the fold adds in the same order, the
-        # 6dp round is unchanged.
-        cmat_m = F.lit(
-            [
-                [float(v) for v in r["cent_vec"][m * sub_dim : (m + 1) * sub_dim]]
-                for r in rows
-            ]
-        )
-        return F.transform(
-            cmat_m,
-            lambda c: F.round(
-                F.aggregate(
-                    F.zip_with(
-                        F.slice(F.col(vec_col), m * sub_dim + 1, sub_dim),
-                        c,
-                        lambda x, y: (x.cast("double") - y.cast("double"))
-                        * (x.cast("double") - y.cast("double")),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-                6,
-            ),
-        )
-
-    staged = corpus.select(
+    """The crossJoin + ranking-window reference plan for ``_pq_encode``:
+    |corpus| x |cents| scored rows, one window per subspace and
+    (n_sub - 1) re-joins.  Production never runs it; the parity tests
+    diff both forms against it."""
+    scored = corpus.crossJoin(F.broadcast(cents)).select(
         F.col(id_col),
-        *[d2_arr(m).alias(f"_darr{m}") for m in range(n_sub)],
+        F.col("cent_id"),
+        *_subspace_d2_cols(n_sub, sub_dim, vec_col, "cent_vec"),
     )
-    best = [
-        F.array_position(F.col(f"_darr{m}"), F.array_min(f"_darr{m}"))
-        for m in range(n_sub)
-    ]
-    sel = [F.element_at(F.col(f"_darr{m}"), best[m].cast("int")) for m in range(n_sub)]
-    recon = sel[0]
-    for m in range(1, n_sub):
-        recon = recon + sel[m]
-    return staged.select(
+    joined = None
+    for m in range(n_sub):
+        w = Window.partitionBy(id_col).orderBy(F.col(f"qd_{m}"), F.col("cent_id"))
+        best = (
+            scored.withColumn("_r", F.row_number().over(w))
+            .filter(F.col("_r") == 1)
+            .select(
+                id_col,
+                F.col("cent_id").cast("bigint").alias(f"code{m}"),
+                F.col(f"qd_{m}").alias(f"_d{m}"),
+            )
+        )
+        joined = best if joined is None else joined.join(best, id_col)
+    sel = [F.col(f"_d{m}") for m in range(n_sub)]
+    return joined.select(
         id_col,
-        *[
-            F.element_at(id_map, best[m].cast("int"))
-            .cast("bigint")
-            .alias(f"code{m}")
-            for m in range(n_sub)
-        ],
-        F.round(recon, 6).alias("recon_d2"),
+        *[f"code{m}" for m in range(n_sub)],
+        _round6(sum(sel[1:], sel[0])).alias("recon_d2"),
     )
 
 
@@ -1919,7 +1796,6 @@ def pq_codes_df(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     cents: DataFrame | None = None,
-    kernel: str = "auto",
 ) -> DataFrame:
     """Product-quantization codes: dims split into ``n_sub`` subspaces of
     ``sub_dim``; per-subspace codebook = the ``n_centroids`` lowest-id
@@ -1929,15 +1805,10 @@ def pq_codes_df(
     engine-identical, which is what lets PQ carry an exact oracle.
 
     Output: (vec_id, code0..code{n_sub-1}, recon_d2).  Scale shape: the
-    codebook (n_sub x n_centroids x sub_dim doubles) broadcasts;
-    assignment is one scan of the corpus.  At small codebooks the
-    per-subspace argmin rides ranking windows keyed by vec_id; at
-    ``n_centroids >= MATMUL_ASSIGN_MIN_K`` (``kernel="auto"``) the
-    encode reroutes through ``_pq_codes_matmul`` — one Arrow scan
-    instead of an |corpus| x k row explosion through the shuffle, bit-
-    identical output (parity-tested; the ``_nearest_centroids`` /
-    kmeans large-k precedent).  ``kernel="expr"``/``"matmul"`` force a
-    path.
+    codebook (n_sub x n_centroids x sub_dim doubles) is collected to the
+    driver and the encode is one map-only scan of the corpus
+    (``_pq_encode``; the numpy form from ``MATMUL_ASSIGN_MIN_K`` codebook
+    rows on).  An empty codebook encodes nothing.
 
     Pass ``cents`` (a (cent_id, cent_vec) frame) to encode against a
     FROZEN codebook instead of re-deriving it from ``corpus`` — the
@@ -1953,74 +1824,16 @@ def pq_codes_df(
                 F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cent_vec")
             )
         )
-    if kernel == "matmul" or (
-        kernel == "auto" and n_centroids >= MATMUL_ASSIGN_MIN_K
-    ):
-        return _pq_codes_matmul(
-            corpus, cents, n_sub, sub_dim, id_col, vec_col
-        )
-    if kernel == "auto":
-        # r14 (guide §2.1 — remove shuffles outright; the c7236f4 keep-1
-        # precedent applied to the PQ encode): below the matmul threshold
-        # the codebook is bounded by contract, so the per-subspace argmin
-        # needs no crossJoin + n_sub ranking windows + (n_sub - 1)
-        # re-joins (each window an Exchange + Sort over |corpus| x k
-        # scored rows).  Collect the codebook (<= MATMUL_ASSIGN_MIN_K
-        # rows; fires any in-plan undersize guard eagerly, the
-        # _nearest_centroids/matmul precedent) and evaluate every
-        # subspace's k distances as one codegen'd array expression per
-        # row — map-only.  Scores mirror the crossJoin branch
-        # term-for-term (the centroid slice as a literal double array,
-        # same fold, same 6dp rounding), and first-index-of-min over the
-        # cent_id-sorted array IS the window's (d2, cent_id) tie-break;
-        # parity is test-pinned.  An empty codebook falls through to the
-        # crossJoin plan (empty-in/empty-out contract); kernel="expr"
-        # keeps the historical plan for the parity tests.
-        rows = sorted(
-            cents.select("cent_id", "cent_vec").collect(),
-            key=lambda r: r["cent_id"],
-        )
-        if rows:
-            return _pq_codes_inline(
-                corpus, rows, n_sub, sub_dim, id_col, vec_col
-            )
-    pairs = corpus.crossJoin(F.broadcast(cents))
-    sub_d2 = [
-        F.round(
-            F.aggregate(
-                F.zip_with(
-                    F.slice(F.col(vec_col), m * sub_dim + 1, sub_dim),
-                    F.slice(F.col("cent_vec"), m * sub_dim + 1, sub_dim),
-                    lambda x, y: (x.cast("double") - y.cast("double"))
-                    * (x.cast("double") - y.cast("double")),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            6,
-        ).alias(f"d2_{m}")
-        for m in range(n_sub)
-    ]
-    scored = pairs.select(F.col(id_col), F.col("cent_id"), *sub_d2)
-    outs = []
-    for m in range(n_sub):
-        w = Window.partitionBy(id_col).orderBy(F.col(f"d2_{m}"), F.col("cent_id"))
-        outs.append(
-            scored.withColumn("_r", F.row_number().over(w))
-            .filter(F.col("_r") == 1)
-            .select(
-                id_col,
-                F.col("cent_id").alias(f"code{m}"),
-                F.col(f"d2_{m}").alias(f"_d{m}"),
-            )
-        )
-    joined = outs[0]
-    for m in range(1, n_sub):
-        joined = joined.join(outs[m], id_col)
-    return joined.select(
-        id_col,
-        *[F.col(f"code{m}").cast("bigint").alias(f"code{m}") for m in range(n_sub)],
-        F.round(sum(F.col(f"_d{m}") for m in range(n_sub)), 6).alias("recon_d2"),
+    ids, cmat = _collect_codebook(cents)
+    if not ids:
+        return corpus.select(
+            id_col,
+            *[F.lit(None).cast("bigint").alias(f"code{m}") for m in range(n_sub)],
+            F.lit(None).cast("double").alias("recon_d2"),
+        ).limit(0)
+    return _pq_encode(
+        corpus, ids, cmat, n_sub, sub_dim, id_col, vec_col,
+        numpy_form=_use_numpy_form(len(ids)),
     )
 
 
@@ -2055,18 +1868,11 @@ def _subspace_d2_cols(
     pq_codes_df's spec (same fold, same rounding), so no serving path can
     drift on the quantity ADC sums."""
     return [
-        F.round(
-            F.aggregate(
-                F.zip_with(
-                    F.slice(F.col(a), m * sub_dim + 1, sub_dim),
-                    F.slice(F.col(b), m * sub_dim + 1, sub_dim),
-                    lambda x, y: (x.cast("double") - y.cast("double"))
-                    * (x.cast("double") - y.cast("double")),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
-            6,
+        _round6(
+            _sq_l2(
+                F.slice(F.col(a), m * sub_dim + 1, sub_dim),
+                F.slice(F.col(b), m * sub_dim + 1, sub_dim),
+            )
         ).alias(f"qd_{m}")
         for m in range(n_sub)
     ]
@@ -2080,46 +1886,34 @@ def _pq_query_table(
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """The per-query ADC distance table, melted to (query_id, code, m, d):
-    |queries| x n_sub x |cents| 6dp-rounded subspace distances — tiny,
-    broadcast at the lookup join; shared by pq_adc_topk, ivf_pq_topk and
-    ivf_pq_topk_serve so the table spec cannot drift between the serving
-    paths.  ``cents`` is the (cent_id, cent_vec) PQ codebook frame —
-    callers derive it from the corpus (batch) or from the persisted
-    frozen codebook (serve)."""
-    qd = _subspace_d2_cols(n_sub, sub_dim)
-    dtab = (
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
-        .crossJoin(F.broadcast(cents))
-        .select("query_id", "cent_id", *qd)
-    )
-    return dtab.selectExpr(
-        "query_id",
-        "cent_id AS code",
-        "stack({}, {}) AS (m, d)".format(
-            n_sub, ", ".join(f"{m}, qd_{m}" for m in range(n_sub))
-        ),
+    """The per-query ADC distance table, melted to (query_id, code, m, d)
+    (``_pq_query_table_residual`` over the raw query vectors); shared by
+    pq_adc_topk, ivf_pq_topk and ivf_pq_topk_serve so the table spec
+    cannot drift between the serving paths.  ``cents`` is the (cent_id,
+    cent_vec) PQ codebook frame — callers derive it from the corpus
+    (batch) or from the persisted frozen codebook (serve)."""
+    return _pq_query_table_residual(
+        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")),
+        cents, n_sub, sub_dim,
     )
 
 
 def _pq_query_table_residual(
-    probed_res: DataFrame, fine: DataFrame, n_sub: int, sub_dim: int
+    probed: DataFrame, fine: DataFrame, n_sub: int, sub_dim: int
 ) -> DataFrame:
-    """The residual-IVF-PQ ADC table: one distance table per (query,
-    probed cluster) — residual codes live in a cluster's own coordinate
-    frame (x - that cluster's centroid), so the query must be re-centered
-    per probed cluster before the subspace distances are taken.
-    ``probed_res``: (query_id, cluster, q_vec=query residual vs that
-    cluster's centroid).  Output: (query_id, cluster, code, m, d) —
-    |Q| x n_probe x pq_centroids x n_sub rounded entries, still
-    broadcast-sized."""
-    qd = _subspace_d2_cols(n_sub, sub_dim)
-    dtab = probed_res.crossJoin(F.broadcast(fine)).select(
-        "query_id", "cluster", "cent_id", *qd
+    """ADC distance table of ``probed`` rows (query_id[, cluster], q_vec)
+    against the PQ codebook ``fine``, melted to (query_id[, cluster],
+    code, m, d): |probed| x n_sub x |fine| 6dp-rounded subspace distances
+    — tiny, broadcast at the lookup join.  Residual IVF-PQ probes one
+    table per (query, probed cluster): residual codes live in a cluster's
+    own coordinate frame, so ``q_vec`` is the query re-centered on that
+    cluster's centroid."""
+    keys = [c for c in probed.columns if c != "q_vec"]
+    dtab = probed.crossJoin(F.broadcast(fine)).select(
+        *keys, "cent_id", *_subspace_d2_cols(n_sub, sub_dim)
     )
     return dtab.selectExpr(
-        "query_id",
-        "cluster",
+        *keys,
         "cent_id AS code",
         "stack({}, {}) AS (m, d)".format(
             n_sub, ", ".join(f"{m}, qd_{m}" for m in range(n_sub))
@@ -2390,26 +2184,33 @@ def ivf_residuals(
     asg = _nearest_centroids(
         corpus.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec")),
         coarse, "cluster", 1, dim, metric=coarse_metric,
-        n_cents=n_centroids,
     )
-    return (
-        asg.join(
-            F.broadcast(
-                coarse.select(
-                    F.col("cent_id").alias("cluster"),
-                    F.col("cent_vec").alias("_cent"),
-                )
-            ),
-            "cluster",
-        )
-        .select(
-            F.col("_id").alias(id_col),
-            "cluster",
-            F.zip_with(
-                "_vec", "_cent",
-                lambda x, y: x.cast("double") - y.cast("double"),
-            ).alias(vec_col),
-        )
+    return _recentered(
+        asg.withColumnRenamed("_id", id_col), coarse, id_col, "_vec", vec_col
+    )
+
+
+def _recentered(
+    rows: DataFrame,
+    cents: DataFrame,
+    id_col: str,
+    vec: str,
+    out: str,
+    cent_vec: str = "cent_vec",
+) -> DataFrame:
+    """(id_col, cluster, out): each row's ``vec`` re-centered on its
+    cluster's centroid, out = vec - cent_vec[cluster] — the residual
+    every residual IVF family encodes and probes with, an exact IEEE
+    subtraction in both engines."""
+    by_cluster = cents.select(
+        F.col("cent_id").alias("cluster"), F.col(cent_vec).alias("_cent")
+    )
+    return rows.join(F.broadcast(by_cluster), "cluster").select(
+        id_col,
+        "cluster",
+        F.zip_with(
+            vec, "_cent", lambda x, y: x.cast("double") - y.cast("double")
+        ).alias(out),
     )
 
 
@@ -2496,7 +2297,6 @@ def build_ivf_pq_index(
                 F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec")
             ),
             coarse, "cluster", 1, dim, metric=coarse_metric,
-            n_cents=n_centroids,
         ).select(F.col("_id").alias(id_col), "cluster")
         codes = _pq_code_long(
             corpus, n_sub, sub_dim, pq_centroids, id_col, vec_col, cents=fine
@@ -2644,21 +2444,9 @@ def ivf_pq_topk_serve(
         # residual codes live per-cluster: re-center the query on each
         # probed cluster's centroid and take the distance table there —
         # the lookup join gains the cluster key, nothing else changes
-        probed_res = probed_full.join(
-            F.broadcast(
-                coarse.select(
-                    F.col("cent_id").alias("cluster"),
-                    F.col("cent_vec").alias("_cent"),
-                )
-            ),
-            "cluster",
-        ).select(
-            F.col("_id").alias("query_id"),
-            "cluster",
-            F.zip_with(
-                "_vec", "_cent",
-                lambda x, y: x.cast("double") - y.cast("double"),
-            ).alias("q_vec"),
+        probed_res = _recentered(
+            probed_full.withColumnRenamed("_id", "query_id"), coarse,
+            "query_id", "_vec", "q_vec",
         )
         dtab_long = _pq_query_table_residual(probed_res, fine, n_sub, sub_dim)
         lookup_keys = ["query_id", "cluster", "m", "code"]
@@ -2962,21 +2750,11 @@ def ivf_pq_balanced_residual_topk(
     cperm = apply_dim_permutation(corpus, perm, vec_col, "_bvec").select(
         id_col, "_bvec"
     )
-    cent_perm = F.broadcast(
-        apply_dim_permutation(cents, perm, "cent_vec", "_bcent").select(
-            F.col("cent_id").alias("cluster"), "_bcent"
-        )
-    )
+    cent_perm = apply_dim_permutation(cents, perm, "cent_vec", "_bcent")
     res = (
-        assigned.join(cperm, id_col)
-        .join(cent_perm, "cluster")
-        .select(
-            id_col,
-            "cluster",
-            F.zip_with(
-                "_bvec", "_bcent",
-                lambda x, y: x.cast("double") - y.cast("double"),
-            ).alias("_rvec"),
+        _recentered(
+            assigned.join(cperm, id_col), cent_perm, id_col, "_bvec", "_rvec",
+            "_bcent",
         )
         # r14 staged residuals, the ivf_pq_residual_topk pattern (guide
         # §1.2/§5): the residual relation feeds the fine codebook, the
@@ -3004,17 +2782,9 @@ def ivf_pq_balanced_residual_topk(
     qperm = apply_dim_permutation(queries, perm, vec_col, "_bvec").select(
         F.col(id_col).alias("query_id"), "_bvec"
     )
-    probed_res = (
-        probes.join(qperm, "query_id")
-        .join(cent_perm, "cluster")
-        .select(
-            "query_id",
-            "cluster",
-            F.zip_with(
-                "_bvec", "_bcent",
-                lambda x, y: x.cast("double") - y.cast("double"),
-            ).alias("q_vec"),
-        )
+    probed_res = _recentered(
+        probes.join(qperm, "query_id"), cent_perm, "query_id", "_bvec",
+        "q_vec", "_bcent",
     )
     dtab_long = _pq_query_table_residual(probed_res, fine, n_sub, sub_dim)
     adc = (
@@ -3028,20 +2798,7 @@ def ivf_pq_balanced_residual_topk(
     short = _topk_per_query(adc, shortlist, ["adc_d2"]).select(
         "query_id", "neighbor_id"
     )
-    qv = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
-    )
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
-    )
-    sim = (
-        short.join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .withColumn(
-            "cosine", _exact_cosine(F.col("q_vec"), F.col("c_vec"))
-        )
-    )
-    return _topk_per_query(sim, k, [F.desc("cosine")])
+    return _refine_exact(short, queries, corpus, k, id_col, vec_col)
 
 
 def pq_adc_topk(

@@ -1018,14 +1018,14 @@ def bloom_filter_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
                row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
         FROM d2_) WHERE rn = 1
     """,
-    note="large-k k-means (k=32) on the Arrow matmul kernel: above ~16 "
-    "centroids the per-centroid codegen expression list costs more to "
-    "JIT than to run, so assignment switches to one numpy distance matrix "
-    "per Arrow batch (mapInPandas, partition-local, no shuffle).  The "
-    "kernel folds dimensions SEQUENTIALLY so pre-round distances are "
-    "bit-identical to the small-k expression kernel — same determinism "
-    "contract, same exact oracle, kernels interchangeable "
-    "(operators/clustering.py: EXPR_KERNEL_MAX_K)",
+    note="large-k k-means (k=32) on the numpy form of the nearest-centroid "
+    "kernel: above EXPR_KERNEL_MAX_K=16 centroids the per-centroid "
+    "expression lambda costs more to JIT than to run, so assignment "
+    "switches to one numpy distance matrix per Arrow batch (mapInPandas, "
+    "partition-local, no shuffle).  Both forms fold dimensions "
+    "SEQUENTIALLY and round with one rule, so distances are bit-identical "
+    "— same determinism contract, same exact oracle, forms interchangeable "
+    "(operators/similarity.py: _use_numpy_form)",
 )
 def kmeans_clusters_k32(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.clustering import kmeans_assign

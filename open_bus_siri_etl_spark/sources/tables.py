@@ -523,27 +523,23 @@ class Warehouse:
         )
 
     def upsert_rows(self, name: str, rows: DataFrame, key_cols: list[str]) -> None:
-        """Replace rows matching ``key_cols``, keep the rest.
-
-        Log-structured tables (LOG_TABLES, e.g. the control table) take the
-        O(changed-rows) path: APPEND the replacement rows stamped with a
-        fresh ``log_seq`` — no read, no lock, no rewrite of sibling rows;
-        the latest-per-key resolution happens on read and the daily
-        compact() bounds log growth.  Other small tables (dead letter)
-        keep the read-modify-write.  Production analog for both: Delta
-        MERGE keyed on ``key_cols``.
+        """Replace rows matching ``key_cols`` in a log-structured table
+        (LOG_TABLES, i.e. the control table): APPEND the replacement rows
+        stamped with a fresh ``log_seq`` — no read, no lock, no rewrite of
+        sibling rows; the latest-per-key resolution on ``key_cols``
+        happens on read and the daily compact() bounds log growth.
+        Production analog: Delta MERGE keyed on ``key_cols``.  Any other
+        table raises ``ValueError``: whole-row replacement there is
+        ``merge_table``'s job (dead letters are rewritten through
+        ``overwrite``).
         """
-        if name in LOG_TABLES:
-            self._sync_log_seq(name)
-            self.append(name, rows.withColumn(_LOG_SEQ_COL, F.lit(_next_log_seq())))
-            return
-        existing = self.read(name, schemas.ALL_TABLES.get(name))
-        keep = existing.join(rows.select(*key_cols), on=key_cols, how="left_anti")
-        # small tables are driver-memory scale: localCheckpoint
-        # materialization costs one tiny cache instead of staging's extra
-        # write+read round trip — measured 1.8x on bulk ingest
-        out = keep.unionByName(rows).localCheckpoint(eager=True)
-        out.write.mode("overwrite").parquet(self.table_path(name))
+        if name not in LOG_TABLES:
+            raise ValueError(
+                f"upsert_rows: {name!r} is not a log-structured table "
+                f"({sorted(LOG_TABLES)}); use merge_table or overwrite"
+            )
+        self._sync_log_seq(name)
+        self.append(name, rows.withColumn(_LOG_SEQ_COL, F.lit(_next_log_seq())))
 
     def overwrite(self, name: str, df: DataFrame) -> None:
         if name in LOG_TABLES:
@@ -560,9 +556,9 @@ class Warehouse:
         join source against the stored table, matched rows take the source's
         values, everything else passes through, rewrite.
 
-        ``upsert_rows`` (anti-join + union) is equivalent for whole-row
-        replacement; merge_frames generalizes to column-level update rules
-        and is the shape a Delta ``MERGE`` replaces 1:1 on a lakehouse.
+        merge_frames handles column-level update rules and is the shape a
+        Delta ``MERGE`` replaces 1:1 on a lakehouse; ``upsert_rows`` is the
+        append-only twin for log-structured tables.
         """
         from ..operators.upsert import merge_frames
 

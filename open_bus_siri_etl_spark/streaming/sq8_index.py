@@ -224,7 +224,6 @@ def retrain_sq8_store(
     train_frame = (
         sq8_residual_frame(
             corpus, cents_frame, id_col, vec_col, dim, coarse_metric,
-            n_centroids,
         ).withColumnRenamed("_rvec", "_tvec")
         if residual
         else corpus.select(F.col(vec_col).alias("_tvec"))
@@ -411,7 +410,6 @@ def start_sq8_index_stream(
             train_frame = (
                 sq8_residual_frame(
                     batch, cents, id_col, vec_col, dim, coarse_metric,
-                    n_centroids,
                 ).withColumnRenamed("_rvec", "_tvec")
                 if residual
                 else batch.select(F.col(vec_col).alias("_tvec"))

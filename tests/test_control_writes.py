@@ -70,6 +70,15 @@ def test_control_write_is_one_job(spark, warehouse):
     assert jobs.n == 1
 
 
+def test_upsert_rows_refuses_non_log_tables(spark, warehouse):
+    """upsert_rows is the log tables' append path; any other table name
+    raises before reading or writing anything."""
+    with SparkJobs(spark) as jobs:
+        with pytest.raises(ValueError, match="'dead_letter' is not a log-structured"):
+            warehouse.upsert_rows("dead_letter", spark.range(1), ["id"])
+    assert jobs.n == 0
+
+
 @pytest.fixture
 def landing(tmp_path):
     root = str(tmp_path / "landing")

@@ -536,12 +536,12 @@ def test_funnel_conversion_single_event_pass(spark):
 
 
 def test_pq_codes_broadcasts_codebook(spark):
-    """PQ assignment must never cartesian the corpus with itself.  r14:
-    below the matmul threshold the encode inlines the collected codebook
-    as per-subspace literal arrays (_pq_codes_inline), so the plan is
-    map-only — no join of ANY kind, no per-subspace ranking windows (the
-    historical broadcast crossJoin + window plan remains reachable via
-    kernel="expr" and is parity-pinned in test_quantization.py)."""
+    """PQ assignment must never cartesian the corpus with itself.  Below
+    the numpy-form threshold the encode inlines the collected codebook as
+    per-subspace literal arrays (the expression form of _pq_encode), so
+    the plan is map-only — no join of ANY kind, no per-subspace ranking
+    windows (the crossJoin + window reference plan, _pq_codes_crossjoin,
+    is parity-pinned in test_nearest_kernel.py)."""
     plan = explain_str(REGISTRY["pq_codes"].fn(spark, SF))
     assert "CartesianProduct" not in plan
     assert "Join" not in plan

@@ -602,18 +602,32 @@ def test_connected_components_chains_and_merges(spark):
 
 
 def test_kmeans_kernels_agree(spark):
-    """The Arrow matmul kernel and the codegen expression kernel implement
-    one determinism contract (sequential dimension fold, half-up 6dp
-    rounding, first-min ties): identical assignments at the same k on the
-    real embeddings table — so the auto-switch at EXPR_KERNEL_MAX_K can
-    never change results, only plans."""
-    from open_bus_siri_etl_spark.operators.clustering import kmeans_assign
+    """The nearest-centroid kernel's numpy form and expression form
+    implement one determinism contract (sequential dimension fold, one
+    6dp rounding rule, first-min ties): identical assignments against the
+    same trained centroids on the real embeddings table, at k on both
+    sides of EXPR_KERNEL_MAX_K — so kmeans_assign's form switch can never
+    change results, only plans."""
+    from open_bus_siri_etl_spark.operators.clustering import (
+        _train_centroids,
+        _vectors,
+        kmeans_assign,
+    )
+    from open_bus_siri_etl_spark.operators.similarity import _nearest
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     for k in (8, 32):
-        a = kmeans_assign(emb, k=k, iters=2, kernel="expr").collect()
-        b = kmeans_assign(emb, k=k, iters=2, kernel="matmul").collect()
-        assert sorted(map(tuple, a)) == sorted(map(tuple, b)), f"k={k}"
+        vecd, init = _vectors(emb, k, "vec_id", "embedding")
+        cents = _train_centroids(vecd, init, 2, "vec_id")
+        expr, numpy = (
+            sorted(map(tuple, _nearest(
+                vecd, "vec_id", "v", list(range(k)), cents, "cluster",
+                numpy_form=numpy_form, emit_vec=False,
+            ).collect()))
+            for numpy_form in (False, True)
+        )
+        assert expr == numpy, f"k={k}"
+        assert sorted(map(tuple, kmeans_assign(emb, k=k).collect())) == expr
 
 
 def test_misra_gries_candidates_capture_heavy_keys(spark):
@@ -3288,54 +3302,132 @@ def test_sq8_serving_defaults_pinned_to_tier_artifact():
 
 
 @pytest.mark.slow
-def test_nearest_centroids_matmul_path_equals_crossjoin(spark):
-    """Round-11 scale fix: the keep-1 L2 coarse assignment above
-    MATMUL_ASSIGN_MIN_K routes through the Arrow matmul kernel (one scan
-    against a driver-held codebook) instead of the crossJoin+window plan
-    (N x K rows CARRYING VECTORS through an exchange — half a terabyte at
-    1M x 1024 x 64d).  The kernel carries the kmeans determinism contract
-    (sequential fold, 6dp half-up, first-min tie == smaller cent_id), so
-    the two plans must agree row-for-row — including the output column
-    TYPE, because both paths write the same parquet partition layout."""
+def test_nearest_forms_equal_crossjoin_on_testdata(spark):
+    """Both forms of the nearest-centroid kernel (one map-only scan
+    against a driver-held codebook) and the dispatched probe agree with
+    the crossJoin+window reference plan (N x K rows CARRYING VECTORS
+    through an exchange) on the real embeddings, including the output
+    column TYPE, because every path writes the same parquet partition
+    layout: a lowest-id codebook below the numpy-form threshold, both
+    metrics, any keep (including keep > k), with and without a threaded
+    dim (dim=32 < the vector width: the cosine centroid norms fold over
+    c[:dim] exactly as the reference's _norm(cent_vec, dim) does), and a
+    TRAINED codebook at MATMUL_ASSIGN_MIN_K, whose keep-1 l2 assignment
+    build_ivf_pq_index reproduces."""
+    import open_bus_siri_etl_spark.operators.similarity as sim
     from open_bus_siri_etl_spark.operators.clustering import kmeans_codebook
-    from open_bus_siri_etl_spark.operators.similarity import (
-        MATMUL_ASSIGN_MIN_K,
-        _nearest_centroids,
-        _slice_codebook,
-        build_ivf_pq_index,
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    df = emb.select(
+        F.col("vec_id").alias("_id"), F.col("embedding").alias("_vec")
     )
 
-    k = MATMUL_ASSIGN_MIN_K
+    def rows(d):
+        return sorted((r["_id"], r["c"]) for r in d.select("_id", "c").collect())
+
+    def check(cents, keep, dim, metric):
+        slow = sim._crossjoin_nearest(df, cents, "c", keep, dim, metric)
+        want = rows(slow)
+        assert want
+        ids, cmat = sim._collect_codebook(cents)
+        fast = sim._nearest_centroids(df, cents, "c", keep, dim, metric=metric)
+        forms = [
+            sim._nearest(
+                df, "_id", "_vec", ids, cmat, "c", keep, metric, dim,
+                numpy_form=numpy_form,
+            )
+            for numpy_form in (False, True)
+        ]
+        for got in [fast] + forms:
+            assert dict(got.dtypes) == dict(slow.dtypes), (metric, keep)
+            assert rows(got) == want, (metric, keep, dim)
+        return fast
+
+    lowest = (
+        emb.orderBy("vec_id").limit(8)
+        .select(F.col("vec_id").alias("cent_id"),
+                F.col("embedding").alias("cent_vec"))
+    )
+    for metric in ("cosine", "l2"):
+        for keep, dim in ((2, None), (3, None), (12, None), (2, 64), (2, 32)):
+            fast = check(lowest, keep, dim, metric)
+            # the expression form is map-only on the probe side
+            plan = fast._jdf.queryExecution().executedPlan().toString()
+            for bad in ("Join", "Window", "Sort", "Exchange"):
+                assert bad not in plan, f"{bad} in keep-{keep} {metric} probe plan"
+
+    k = sim.MATMUL_ASSIGN_MIN_K
+    cents = kmeans_codebook(emb.select("vec_id", "embedding"), k=k, iters=2)
+    coarse = F.broadcast(sim._slice_codebook(cents, k, "coarse", "t"))
+    check(coarse, 1, 64, "l2")
+    fine = kmeans_codebook(emb, k=8, iters=2)
+    idx = sim.build_ivf_pq_index(
+        emb, n_centroids=k, n_sub=4, sub_dim=16, pq_centroids=8,
+        cents=cents, fine_cents=fine, coarse_metric="l2", residual=True,
+    )
+    want = sim._crossjoin_nearest(df, coarse, "c", 1, None, "l2")
+    assert {
+        r["vec_id"]: r["cluster"]
+        for r in idx.select("vec_id", "cluster").distinct().collect()
+    } == {r["_id"]: r["c"] for r in want.collect()}
+
+
+@pytest.mark.slow
+def test_pq_codes_forms_equal_crossjoin_on_testdata(spark):
+    """PQ encode on the real embeddings: both forms of ``_pq_encode`` and
+    the dispatched ``pq_codes_df`` agree row-for-row, on every code AND
+    recon_d2, with the crossJoin + n_sub ranking windows + re-join
+    reference plan (640M scored rows through one shuffle at the 10M x 64
+    tier) — for lowest-id and TRAINED subspace codebooks, below and at
+    MATMUL_ASSIGN_MIN_K, and a non-default geometry.  pq_codes_df is
+    map-only below the threshold (no join, window or Python worker:
+    catalog entries at pq_centroids=8 stay JVM-only), takes the numpy
+    form at it, and an empty corpus stays empty."""
+    import open_bus_siri_etl_spark.operators.similarity as sim
+    from open_bus_siri_etl_spark.operators.clustering import (
+        kmeans_subspace_codebook,
+    )
+
     emb = (
         spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
         .select("vec_id", "embedding")
     )
-    cents = kmeans_codebook(emb, k=k, iters=2)
-    coarse = F.broadcast(_slice_codebook(cents, k, "coarse", "t"))
-    df = emb.select(
-        F.col("vec_id").alias("_id"), F.col("embedding").alias("_vec")
-    )
-    slow = _nearest_centroids(df, coarse, "cluster", 1, 64, metric="l2")
-    fast = _nearest_centroids(
-        df, coarse, "cluster", 1, 64, metric="l2", n_cents=k
-    )
-    assert dict(slow.dtypes)["cluster"] == dict(fast.dtypes)["cluster"]
-    assert sorted(
-        (r["_id"], r["cluster"]) for r in slow.collect()
-    ) == sorted((r["_id"], r["cluster"]) for r in fast.collect())
-    # the fast path is what build_ivf_pq_index now takes at this k: the
-    # built index is identical through either assignment plan
-    fine = kmeans_codebook(emb, k=8, iters=2)
-    idx = build_ivf_pq_index(
-        emb, n_centroids=k, n_sub=4, sub_dim=16, pq_centroids=8,
-        cents=cents, fine_cents=fine, coarse_metric="l2", residual=True,
-    )
-    asg = {
-        r["vec_id"]: r["cluster"]
-        for r in idx.select("vec_id", "cluster").distinct().collect()
-    }
-    want = {r["_id"]: r["cluster"] for r in slow.collect()}
-    assert asg == want
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    def lowest(k):
+        return emb.orderBy("vec_id").limit(k).select(
+            F.col("vec_id").alias("cent_id"), F.col("embedding").alias("cent_vec")
+        )
+
+    k = sim.MATMUL_ASSIGN_MIN_K
+    for n_sub, sub_dim, cents in (
+        (4, 16, lowest(8)),
+        (4, 16, lowest(k)),
+        (4, 16, kmeans_subspace_codebook(emb, n_sub=4, sub_dim=16, k=k, iters=2)),
+        (2, 32, kmeans_subspace_codebook(emb, n_sub=2, sub_dim=32, k=5, iters=2)),
+    ):
+        ref = sim._pq_codes_crossjoin(emb, cents, n_sub, sub_dim)
+        want = rows(ref)
+        ids, cmat = sim._collect_codebook(cents)
+        for got in [sim.pq_codes_df(emb, n_sub, sub_dim, cents=cents)] + [
+            sim._pq_encode(
+                emb, ids, cmat, n_sub, sub_dim, "vec_id", "embedding",
+                numpy_form=numpy_form,
+            )
+            for numpy_form in (False, True)
+        ]:
+            assert got.dtypes == ref.dtypes
+            assert rows(got) == want, (n_sub, len(ids))
+
+    def plan(n):
+        return sim.pq_codes_df(emb, 4, 16, n)._jdf.queryExecution().executedPlan().toString()
+
+    assert "MapInPandas" in plan(k)
+    for bad in ("Join", "Window", "Exchange", "MapInPandas"):
+        assert bad not in plan(8), f"{bad} in inline pq_codes plan"
+    assert sim.pq_codes_df(emb.filter(F.col("vec_id") < -1), 4, 16, 8).count() == 0
 
 
 @pytest.mark.slow
@@ -3375,62 +3467,12 @@ def test_contamination_lsh_restricts_exact_overlap_to_banded_pairs(spark):
 
 
 @pytest.mark.slow
-def test_pq_codes_matmul_path_equals_crossjoin(spark):
-    """r14 scale fix: PQ subspace encode above MATMUL_ASSIGN_MIN_K
-    centroids routes through one Arrow matmul scan instead of the
-    crossJoin(N x K) + n_sub ranking windows + chained re-join plan
-    (640M scored rows through one shuffle at the 10M x 64 tier — the
-    measured build killer).  The kernel carries the module determinism
-    contract (sequential per-subspace fold, 6dp half-up, first-min ==
-    ties-to-smaller-cent_id, recon_d2 summed in m-order then rounded),
-    so both plans must agree row-for-row on every code AND recon_d2 —
-    for the lowest-id codebook and a TRAINED subspace codebook alike."""
-    from open_bus_siri_etl_spark.operators.clustering import (
-        kmeans_subspace_codebook,
-    )
-    from open_bus_siri_etl_spark.operators.similarity import (
-        MATMUL_ASSIGN_MIN_K,
-        pq_codes_df,
-    )
-
-    emb = (
-        spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        .select("vec_id", "embedding")
-    )
-    k = MATMUL_ASSIGN_MIN_K
-
-    def rows(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    # lowest-id codebook, auto-derived inside both paths
-    slow = pq_codes_df(emb, 4, 16, k, kernel="expr")
-    fast = pq_codes_df(emb, 4, 16, k, kernel="matmul")
-    assert [f.name for f in slow.schema.fields] == [
-        f.name for f in fast.schema.fields
-    ]
-    assert rows(slow) == rows(fast)
-
-    # trained subspace codebook (the bench's 10M shape), frozen frame
-    rf = kmeans_subspace_codebook(emb, n_sub=4, sub_dim=16, k=k, iters=2)
-    slow_t = pq_codes_df(emb, 4, 16, k, cents=rf, kernel="expr")
-    fast_t = pq_codes_df(emb, 4, 16, k, cents=rf, kernel="auto")
-    assert rows(slow_t) == rows(fast_t)
-    # auto keeps the expression plan below the threshold (catalog oracle
-    # entries at pq_centroids=8 must stay JVM-only)
-    plan = (
-        pq_codes_df(emb, 4, 16, 8)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "MapInPandas" not in plan
-
-
-@pytest.mark.slow
 def test_kmeans_codebook_pair_equals_independent_trainers(spark):
     """r14: kmeans_codebook_pair fuses the coarse + subspace trainings
     into one shared init TakeOrdered and ONE update job per Lloyd
     iteration.  Per-side arithmetic is the independent trainers' spec
-    verbatim (the coarse branch is _assign_expr's distance/argmin over
-    the full vector, the fine branches are _fused_subspace_update's), so
+    verbatim (the coarse side is one more _fused_update side over the
+    full vector, the fine sides are kmeans_subspace_codebook's), so
     both returned frames must equal kmeans_codebook /
     kmeans_subspace_codebook EXACTLY — symmetric and asymmetric k, and
     iters > 2 (multi-round carry-forward)."""
@@ -3460,106 +3502,10 @@ def test_kmeans_codebook_pair_equals_independent_trainers(spark):
         kmeans_codebook_pair(emb.limit(3), 8, 4, 16, 8, 2)
 
 
-@pytest.mark.slow
-def test_pq_codes_inline_path_equals_crossjoin(spark):
-    """r14 (cont.): BELOW the matmul threshold the auto encode inlines the
-    collected codebook as one nested-array literal + transform per
-    subspace (_pq_codes_inline) — map-only, no crossJoin, no ranking
-    windows, no re-joins.  The expressions mirror the crossJoin branch
-    term-for-term (same zip_with operands, same left-fold order, same 6dp
-    rounds; first-min over the cent_id-sorted array == the window's
-    (d2, cent_id) tie-break; recon_d2 summed in m-order before its own
-    round), so codes AND recon_d2 must match row-for-row — for the
-    lowest-id codebook, a trained subspace codebook, and a non-default
-    geometry.  An empty corpus must stay empty (the crossJoin fallback)."""
-    from pyspark.sql import functions as F
-
-    from open_bus_siri_etl_spark.operators.clustering import (
-        kmeans_subspace_codebook,
-    )
-    from open_bus_siri_etl_spark.operators.similarity import pq_codes_df
-
-    emb = (
-        spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-        .select("vec_id", "embedding")
-    )
-
-    def rows(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    slow = pq_codes_df(emb, 4, 16, 8, kernel="expr")
-    fast = pq_codes_df(emb, 4, 16, 8, kernel="auto")
-    assert [f.name for f in slow.schema.fields] == [
-        f.name for f in fast.schema.fields
-    ]
-    assert rows(slow) == rows(fast)
-
-    # trained subspace codebook (frozen frame) + non-default geometry
-    rf = kmeans_subspace_codebook(emb, n_sub=2, sub_dim=32, k=5, iters=2)
-    slow_t = pq_codes_df(emb, 2, 32, 5, cents=rf, kernel="expr")
-    fast_t = pq_codes_df(emb, 2, 32, 5, cents=rf, kernel="auto")
-    assert rows(slow_t) == rows(fast_t)
-
-    # the inline plan is map-only: no join of any kind, no window
-    plan = (
-        pq_codes_df(emb, 4, 16, 8)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    for bad in ("Join", "Window", "Exchange", "MapInPandas"):
-        assert bad not in plan, f"{bad} in inline pq_codes plan"
-
-    # empty corpus: the inline dispatch falls through to the crossJoin
-    # plan and the result stays empty
-    assert pq_codes_df(emb.filter(F.col("vec_id") < -1), 4, 16, 8).count() == 0
-
-
-@pytest.mark.slow
-def test_nearest_centroids_keepn_inline_equals_crossjoin(spark):
-    """r14 (cont.): the keep-n probe against a bounded codebook is a
-    map-only sorted-slice explode (_inline_nearest_n) — no crossJoin, no
-    rank window, no Exchange/Sort on the query side of ANY serve path.
-    Scores are the crossJoin branch's exact arithmetic from a nested
-    codebook literal, the sort order mirrors the window's (score
-    asc/desc, cent_id asc), so the probed (id, centroid) multiset must
-    equal the historical window plan's for BOTH metrics, any keep
-    (including keep > k), and with/without a threaded dim."""
-    import open_bus_siri_etl_spark.operators.similarity as sim
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    cents = (
-        emb.orderBy("vec_id").limit(8)
-        .select(F.col("vec_id").alias("cent_id"),
-                F.col("embedding").alias("cent_vec"))
-    )
-    df = emb.select(
-        F.col("vec_id").alias("_id"), F.col("embedding").alias("_vec")
-    )
-
-    def rows(d):
-        return sorted((r["_id"], r["c"]) for r in d.select("_id", "c").collect())
-
-    # dim=32 < the actual vector width: the r15 ADVICE fix — the inline
-    # cosine path's driver-side centroid norms must fold over c[:dim]
-    # exactly as the crossJoin branch's unrolled _norm(cent_vec, dim) does
-    for metric in ("cosine", "l2"):
-        for keep, dim in ((2, None), (3, None), (12, None), (2, 64), (2, 32)):
-            fast = sim._nearest_centroids(df, cents, "c", keep, dim, metric=metric)
-            # the inline plan is map-only on the probe side: no join, no window
-            plan = fast._jdf.queryExecution().executedPlan().toString()
-            for bad in ("Join", "Window", "Sort", "Exchange"):
-                assert bad not in plan, f"{bad} in keep-{keep} {metric} probe plan"
-            # the historical crossJoin+window reference plan (r15: factored
-            # out as _crossjoin_nearest; production dispatch reaches it only
-            # for an empty codebook, the parity contract lives here)
-            slow = sim._crossjoin_nearest(df, cents, "c", keep, dim, metric)
-            assert dict(slow.dtypes)["c"] == dict(fast.dtypes)["c"], (metric, keep)
-            assert rows(fast) == rows(slow) and rows(fast), (metric, keep, dim)
-
-
 def test_probe_matmul_equals_crossjoin_above_threshold(spark):
-    """r15 (verdict item 1): codebooks ABOVE MATMUL_ASSIGN_MIN_K — both
-    metrics, any keep — route through the Arrow probe kernel
-    (_probe_matmul): one mapInPandas scan against the driver-held
+    """Codebooks ABOVE MATMUL_ASSIGN_MIN_K — both metrics, any keep —
+    route through the numpy form of the nearest-centroid kernel
+    (_nearest): one mapInPandas scan against the driver-held
     codebook, no crossJoin, no rank window, no Exchange/Sort — closing
     the last n x k row explosion on a serve path (the >64-centroid
     cosine fallback).  The kernel's float discipline mirrors the
@@ -3607,10 +3553,10 @@ def test_probe_matmul_equals_crossjoin_above_threshold(spark):
 
 
 def test_inline_keepn_probe_null_vector_raises(spark):
-    """r15 ADVICE: the inline keep-n probe's array comparator has no
-    deterministic placement for NULL scores (the window plan orders
-    NULLs last), so a NULL vector must raise in-plan instead of
-    silently yielding a run-varying probe set."""
+    """The expression form's array sort has no deterministic placement
+    for NULL scores (the window plan orders NULLs last), so a NULL vector
+    must raise in-plan instead of silently yielding a run-varying probe
+    set."""
     import pytest
 
     import open_bus_siri_etl_spark.operators.similarity as sim

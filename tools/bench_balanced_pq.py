@@ -143,7 +143,7 @@ def stack_tier(spark, work: Path, n: int, n_cent: int, n_probe: int) -> dict:
         tcp = str(work / f"t{n}_stc_{tag}")
         if not os.path.isdir(tcp):
             kmeans_codebook(
-                corp, k=n_cent, iters=2, vec_col=col, kernel="matmul"
+                corp, k=n_cent, iters=2, vec_col=col
             ).coalesce(1).write.mode("overwrite").parquet(tcp)
         tc = spark.read.parquet(tcp)
         rfp = str(work / f"t{n}_srf_{tag}")
@@ -151,7 +151,7 @@ def stack_tier(spark, work: Path, n: int, n_cent: int, n_probe: int) -> dict:
             res = ivf_residuals(corp, tc, n_cent, vec_col=col, dim=DIM)
             kmeans_subspace_codebook(
                 res, n_sub=N_SUB, sub_dim=SUB_DIM, k=PQ_CENTROIDS, iters=2,
-                vec_col=col, kernel="matmul",
+                vec_col=col,
             ).coalesce(1).write.mode("overwrite").parquet(rfp)
         rf = spark.read.parquet(rfp)
         train_sec = round(time.time() - t0, 3)
@@ -302,7 +302,7 @@ def main() -> None:
         t0 = time.time()
         fine = kmeans_subspace_codebook(
             corp, n_sub=N_SUB, sub_dim=SUB_DIM, k=PQ_CENTROIDS, iters=2,
-            kernel="matmul", vec_col=col,
+            vec_col=col,
         )
         fp = str(work / f"fine_{tag}")
         fine.coalesce(1).write.mode("overwrite").parquet(fp)
@@ -377,7 +377,7 @@ def main() -> None:
 
         t0 = time.time()
         tc = kmeans_codebook(
-            corp, k=N_CENT_STACK, iters=2, vec_col=col, kernel="matmul"
+            corp, k=N_CENT_STACK, iters=2, vec_col=col
         )
         tcp = str(work / f"stc_{tag}")
         tc.coalesce(1).write.mode("overwrite").parquet(tcp)
@@ -385,7 +385,7 @@ def main() -> None:
         res = ivf_residuals(corp, tc, N_CENT_STACK, vec_col=col, dim=DIM)
         rf = kmeans_subspace_codebook(
             res, n_sub=N_SUB, sub_dim=SUB_DIM, k=PQ_CENTROIDS, iters=2,
-            vec_col=col, kernel="matmul",
+            vec_col=col,
         )
         rfp = str(work / f"srf_{tag}")
         rf.coalesce(1).write.mode("overwrite").parquet(rfp)

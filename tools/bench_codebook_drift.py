@@ -125,7 +125,7 @@ def sq8_drift(spark, work: Path) -> dict:
     base = write_vecs(ids, vecs, str(work / "s_base"))
     corpus = base
 
-    coarse = kmeans_codebook(base, k=N_CENT, iters=2, kernel="matmul")
+    coarse = kmeans_codebook(base, k=N_CENT, iters=2)
     cents_path = str(work / "s_cents")
     coarse.withColumn("cb_kind", F.lit("trained")).coalesce(1).write.parquet(
         cents_path
@@ -256,7 +256,7 @@ def sq8_drift(spark, work: Path) -> dict:
     # recall before vs after a bounds-only retrain on the accumulated
     # corpus (the recovery twin of test_sq8_stream's clamp test).
     s_cents2 = str(work / "s2_cents")
-    coarse2 = kmeans_codebook(base, k=N_CENT, iters=2, kernel="matmul")
+    coarse2 = kmeans_codebook(base, k=N_CENT, iters=2)
     coarse2.withColumn("cb_kind", F.lit("trained")).coalesce(1).write.mode(
         "overwrite"
     ).parquet(s_cents2)
@@ -356,7 +356,7 @@ def sq8_drift(spark, work: Path) -> dict:
     norm_base = base.withColumn("embedding", l2_normalize_expr("embedding"))
     s_cents3 = str(work / "s3_cents")
     kmeans_codebook(
-        norm_base, k=N_CENT, iters=2, kernel="matmul"
+        norm_base, k=N_CENT, iters=2
     ).coalesce(1).write.mode("overwrite").parquet(s_cents3)
     coarse3 = spark.read.parquet(s_cents3)
     bounds3 = sq8_train(norm_base)
@@ -491,14 +491,13 @@ def main() -> None:
 
     kw = dict(n_centroids=N_CENT, n_sub=N_SUB, sub_dim=SUB_DIM,
               pq_centroids=PQ_CENTROIDS, dim=DIM)
-    coarse = kmeans_codebook(base, k=N_CENT, iters=2, kernel="matmul")
+    coarse = kmeans_codebook(base, k=N_CENT, iters=2)
     cents_path = str(work / "cents")
     coarse.coalesce(1).write.parquet(cents_path)
     coarse = spark.read.parquet(cents_path)
     fine = kmeans_subspace_codebook(
         ivf_residuals(base, coarse, N_CENT, dim=DIM),
         n_sub=N_SUB, sub_dim=SUB_DIM, k=PQ_CENTROIDS, iters=2,
-        kernel="matmul",
     )
     fine_path = cents_path + "_fine"
     fine.coalesce(1).write.parquet(fine_path)

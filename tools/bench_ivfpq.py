@@ -169,13 +169,12 @@ def clustered_recall(spark, work: Path) -> dict:
     )
 
     # trained codebooks, identical serving parameters
-    tc = kmeans_codebook(corpus, k=n_cent, iters=2, kernel="matmul")
+    tc = kmeans_codebook(corpus, k=n_cent, iters=2)
     tcp = str(work / "cl_tc")
     tc.coalesce(1).write.mode("overwrite").parquet(tcp)
     tc = spark.read.parquet(tcp)
     tf = kmeans_subspace_codebook(
         corpus, n_sub=N_SUB, sub_dim=SUB_DIM, k=PQ_CENTROIDS, iters=2,
-        kernel="matmul",
     )
     tfp = str(work / "cl_tf")
     tf.coalesce(1).write.mode("overwrite").parquet(tfp)
@@ -221,7 +220,6 @@ def clustered_recall(spark, work: Path) -> dict:
     res = ivf_residuals(corpus, tc, n_cent, dim=DIM)
     rf = kmeans_subspace_codebook(
         res, n_sub=N_SUB, sub_dim=SUB_DIM, k=PQ_CENTROIDS, iters=2,
-        kernel="matmul",
     )
     rfp = str(work / "cl_rf")
     rf.coalesce(1).write.mode("overwrite").parquet(rfp)
@@ -376,14 +374,13 @@ def build_residual_stack(spark, work: Path, corpus, n_cent: int, tag: str,
     if train_corpus is None:
         train_corpus = corpus
     t0 = time.time()
-    tc = kmeans_codebook(train_corpus, k=n_cent, iters=2, kernel="matmul")
+    tc = kmeans_codebook(train_corpus, k=n_cent, iters=2)
     tcp = str(work / f"rs_tc_{tag}")
     tc.coalesce(1).write.mode("overwrite").parquet(tcp)
     tc = spark.read.parquet(tcp)
     res = ivf_residuals(train_corpus, tc, n_cent, dim=DIM)
     rf = kmeans_subspace_codebook(
         res, n_sub=N_SUB, sub_dim=SUB_DIM, k=PQ_CENTROIDS, iters=2,
-        kernel="matmul",
     )
     rfp = str(work / f"rs_rf_{tag}")
     rf.coalesce(1).write.mode("overwrite").parquet(rfp)
@@ -686,7 +683,7 @@ def sq8_scale_tier(spark, work: Path, n: int = 10_000_000,
         t0 = time.time()
         tc = kmeans_codebook(
             corpus.filter(F.col("vec_id") % train_mod == 0),
-            k=n_cent, iters=2, kernel="matmul",
+            k=n_cent, iters=2,
         )
         tc.coalesce(1).write.mode("overwrite").parquet(tcp)
         train_sec = round(time.time() - t0, 3)
@@ -819,9 +816,7 @@ def sq8_scale_tier(spark, work: Path, n: int = 10_000_000,
 
     t0 = time.time()
     res_bounds = sq8_train(
-        sq8_residual_frame(
-            corpus, cents, dim=DIM, coarse_metric="l2", n_cents=n_cent
-        ),
+        sq8_residual_frame(corpus, cents, dim=DIM, coarse_metric="l2"),
         vec_col="_rvec",
     )
     res_bounds_sec = round(time.time() - t0, 3)
@@ -943,7 +938,7 @@ def pq_scale_tier(spark, work: Path, n: int = 10_000_000,
     tcp = str(work / f"sq8s_tc_{tag}")
     if not os.path.isdir(tcp):
         t0 = time.time()
-        tc = kmeans_codebook(train_sub, k=n_cent, iters=2, kernel="matmul")
+        tc = kmeans_codebook(train_sub, k=n_cent, iters=2)
         tc.coalesce(1).write.mode("overwrite").parquet(tcp)
         coarse_train_sec = round(time.time() - t0, 3)
     else:
@@ -965,7 +960,6 @@ def pq_scale_tier(spark, work: Path, n: int = 10_000_000,
         res = spark.read.parquet(res_stage)
         kmeans_subspace_codebook(
             res, n_sub=N_SUB, sub_dim=SUB_DIM, k=PQ_CENTROIDS, iters=2,
-            kernel="matmul",
         ).coalesce(1).write.mode("overwrite").parquet(rfp)
         fine_train_sec = round(time.time() - t0, 3)
         shutil.rmtree(res_stage, ignore_errors=True)
@@ -1087,15 +1081,12 @@ def sq8_residual_regime(spark, work: Path, n: int = 1_000_000,
     if not os.path.isdir(tcp):
         kmeans_codebook(
             corpus.filter(F.col("vec_id") % 9 == 0), k=n_cent, iters=2,
-            kernel="matmul",
         ).coalesce(1).write.parquet(tcp)
     cents = spark.read.parquet(tcp).select("cent_id", "cent_vec")
 
     raw_bounds = sq8_train(corpus)
     res_bounds = sq8_train(
-        sq8_residual_frame(
-            corpus, cents, dim=DIM, coarse_metric="l2", n_cents=n_cent
-        ),
+        sq8_residual_frame(corpus, cents, dim=DIM, coarse_metric="l2"),
         vec_col="_rvec",
     )
     span_ratio = float(
@@ -1367,10 +1358,10 @@ def main() -> None:
             # identical persisted pipeline — the recall delta at fixed
             # n_probe/n_centroids is what training buys.
             t0 = time.time()
-            tr_coarse = kmeans_codebook(corpus, k=n_cent, iters=2, kernel="matmul")
+            tr_coarse = kmeans_codebook(corpus, k=n_cent, iters=2)
             tr_fine = kmeans_subspace_codebook(
                 corpus, n_sub=N_SUB, sub_dim=SUB_DIM, k=PQ_CENTROIDS,
-                iters=2, kernel="matmul",
+                iters=2,
             )
             train_sec = time.time() - t0
             t0 = time.time()

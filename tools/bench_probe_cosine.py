@@ -1,10 +1,9 @@
-"""Frontier A/B for the r15 Arrow cosine probe kernel (verdict item 1):
-``_nearest_centroids`` above ``MATMUL_ASSIGN_MIN_K`` used to fall back to
-the crossJoin + rank-window plan for the cosine metric — an n x k row
-explosion CARRYING THE VECTORS through one Exchange + Sort per probe.
-``_probe_matmul`` replaces it with one Arrow mapInPandas scan against the
-driver-held codebook (the L2 family's r11 kernel, generalized to both
-metrics and any keep).
+"""Frontier A/B for the cosine probe: ``_nearest_centroids`` from
+``MATMUL_ASSIGN_MIN_K`` codebook rows on runs the numpy form of the
+nearest-centroid kernel (one Arrow mapInPandas scan against the
+driver-held codebook) instead of the crossJoin + rank-window reference
+plan (``_crossjoin_nearest``) — an n x k row explosion CARRYING THE
+VECTORS through one Exchange + Sort per probe.
 
 This bench times BOTH plans on the same session (min-of-repeats, noop
 sink per guide §1.4) at a frontier geometry the catalog never reaches
