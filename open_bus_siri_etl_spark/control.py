@@ -94,8 +94,9 @@ def start_loading(
 
     Mirrors get_or_create_siri_snapshot (reference :240-280): refuses when a
     concurrent loader's heartbeat is younger than 120 s (unless force),
-    resets counters, and (for reloads) the caller must delete the snapshot's
-    old facts (Warehouse.delete_fact_snapshots / write_facts reload path).
+    resets counters, and (for reloads) the caller must replace the
+    snapshot's old facts and dead letters (run_core passes every id of its
+    batch to Warehouse.write_snapshot_groups as the ids to replace).
     ``existing``: the snapshot's current control row (None if it has none)
     when the caller has just read it; otherwise it is read here.
     """

@@ -130,7 +130,7 @@ def _lloyd_partials(vecd: DataFrame, cents: list, id_col: str) -> DataFrame:
         for pdf in batches:
             if not len(pdf):
                 continue
-            X = _matrix_np(pdf, id_col, "v", width)
+            X = _matrix_np(pdf, "v")
             cl = np.argmin(_cost_np(X, C), axis=1)
             for c in np.unique(cl):
                 m = cl == c

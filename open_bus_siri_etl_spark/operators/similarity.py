@@ -400,37 +400,29 @@ _VEC_ERROR = "nearest centroid: id %s has %s, but the codebook width is %d"
 
 def _checked_vec(vec: Column, row_id: Column, width: int) -> Column:
     """``vec`` itself, or an in-plan error naming the row's id when the
-    vector is NULL or its width differs from the codebook's (zip_with would
-    pad NULL and the row's costs would silently go NULL)."""
-    return F.when(F.size(vec) == width, vec).otherwise(
+    vector is NULL, its width differs from the codebook's (zip_with would
+    pad NULL and the row's costs would silently go NULL) or it holds a NULL
+    element (the two forms would score it differently).  Both forms of
+    ``_nearest`` and ``_pq_encode`` run it first; ``array_compact`` keeps
+    the check lambda-free."""
+    return F.when(F.size(F.array_compact(vec)) == width, vec).otherwise(
         F.raise_error(
             F.format_string(
                 _VEC_ERROR,
                 F.coalesce(row_id.cast("string"), F.lit("NULL")),
-                F.when(vec.isNull(), F.lit("a NULL vector")).otherwise(
-                    F.format_string("a vector of width %d", F.size(vec))
-                ),
+                F.when(vec.isNull(), F.lit("a NULL vector"))
+                .when(F.size(vec) == width, F.lit("a NULL element"))
+                .otherwise(F.format_string("a vector of width %d", F.size(vec))),
                 F.lit(width),
             )
         )
     )
 
 
-def _matrix_np(pdf, id_col: str, vec_col: str, width: int):
-    """One Arrow batch's vectors as an n x width float64 matrix; a NULL or
-    other-width vector raises naming its id (``_checked_vec``'s message)."""
-    vecs = pdf[vec_col].tolist()
-    try:
-        X = np.asarray(vecs, dtype=np.float64)
-        if X.shape == (len(vecs), width):
-            return X
-    except (TypeError, ValueError):
-        pass
-    for row_id, v in zip(pdf[id_col].tolist(), vecs):
-        if v is None or len(v) != width:
-            what = "a NULL vector" if v is None else f"a vector of width {len(v)}"
-            raise ValueError(_VEC_ERROR % (row_id, what, width))
-    raise ValueError("nearest centroid: a vector holds NULL or non-numeric elements")
+def _matrix_np(pdf, vec_col: str):
+    """One Arrow batch's vectors as an n x width float64 matrix; the plan
+    checked every vector with ``_checked_vec`` first."""
+    return np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
 
 
 def _collect_codebook(cents: DataFrame) -> tuple[list[int], list[list[float]]]:
@@ -540,10 +532,8 @@ def _nearest(
     width = _codebook_width(ids, cmat)
     nrms = _centroid_norms(ids, cmat, dim) if metric == "cosine" else None
     cols = [id_col, vec_col] if emit_vec else [id_col]
+    df = df.withColumn(vec_col, _checked_vec(F.col(vec_col), F.col(id_col), width))
     if not numpy_form:
-        df = df.withColumn(
-            vec_col, _checked_vec(F.col(vec_col), F.col(id_col), width)
-        )
         cost = _cost_array(F.col(vec_col), cmat, metric, dim, nrms)
         if keep == 1:
             best = F.array_position(cost, F.array_min(cost)).cast("int")
@@ -569,7 +559,7 @@ def _nearest(
         for pdf in batches:
             if not len(pdf):
                 continue
-            X = _matrix_np(pdf, id_col, vec_col, width)
+            X = _matrix_np(pdf, vec_col)
             cost = _cost_np(X, C, metric, dim, nrms)
             sel = (
                 np.argmin(cost, axis=1)[:, None]
@@ -1695,8 +1685,11 @@ def _pq_encode(
     width = _codebook_width(ids, cmat)
     subs = [slice(m * sub_dim, (m + 1) * sub_dim) for m in range(n_sub)]
     codes = [f"code{m}" for m in range(n_sub)]
+    corpus = corpus.withColumn(
+        vec_col, _checked_vec(F.col(vec_col), F.col(id_col), width)
+    )
     if not numpy_form:
-        vec = _checked_vec(F.col(vec_col), F.col(id_col), width)
+        vec = F.col(vec_col)
         staged = corpus.select(
             id_col,
             *[
@@ -1735,7 +1728,7 @@ def _pq_encode(
         for pdf in batches:
             if not len(pdf):
                 continue
-            X = _matrix_np(pdf, id_col, vec_col, width)
+            X = _matrix_np(pdf, vec_col)
             rows = np.arange(len(pdf))
             data = {id_col: pdf[id_col].to_numpy()}
             total = np.zeros(len(pdf))

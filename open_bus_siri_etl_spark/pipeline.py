@@ -3,8 +3,9 @@
 One declarative flow per batch:
 
     read.json → explode×2 → typed select/cast → valid/invalid split
-      → (distinct keys ⟕anti dims → append) ×4 → fact write (idempotent
-      partition overwrite) → dead-letter write → control-table bookends
+      → (distinct keys ⟕anti dims → append) ×4 → fact and dead-letter
+      writes (per-snapshot file groups, replaced on reload) → control-table
+      bookends
 
 The same core serves single-snapshot processing (golden-test parity),
 multi-snapshot bulk processing (the backfill path — many files, one job,
@@ -159,10 +160,7 @@ def run_core(
 
     # dead letters: clear-and-write per snapshot (reference :409-414,232-234)
     if save_parse_errors:
-        existing_dl = wh.read(_DEAD_LETTER_TABLE, invalid.schema)
-        keep = existing_dl.filter(~F.col("snapshot_id").isin(good_ids))
-        out = keep.unionByName(invalid).localCheckpoint(eager=True)
-        wh.overwrite(_DEAD_LETTER_TABLE, out)
+        wh.write_snapshot_groups(_DEAD_LETTER_TABLE, invalid, good_ids)
 
     stats = {
         sid: {
@@ -291,42 +289,31 @@ def replay_dead_letters(
     the rest quarantined with their original bytes.  Control-row counters
     shift accordingly (successful += recovered, failed -= recovered).
 
-    Facts recovered here APPEND rather than partition-overwrite: the
-    snapshot's previously loaded facts must survive, and replayed rows were
-    never written before (they were invalid), so no duplicates can arise.
-    Scale: the dead-letter table holds only failures — the whole pass costs
-    O(failures), never a fact-table scan.
+    Recovered facts are written as new file groups of their snapshots,
+    replacing none: the snapshot's previously loaded facts must survive, and
+    replayed rows were never written before (they were invalid), so no
+    duplicates can arise.  Still-bad rows replace the dead-letter groups of
+    the replayed snapshots (every snapshot with dead letters when
+    ``snapshot_ids`` is None).  Scale: the dead-letter table holds only
+    failures — the whole pass costs O(failures), never a fact-table scan.
     """
-    from .schemas import DEAD_LETTER_SCHEMA, MONITORED_STOP_VISIT
+    from .schemas import MONITORED_STOP_VISIT
 
-    dl = wh.read(_DEAD_LETTER_TABLE, DEAD_LETTER_SCHEMA)
-    if snapshot_ids is not None:
-        scope = dl.filter(F.col("snapshot_id").isin(snapshot_ids))
-        rest = dl.filter(~F.col("snapshot_id").isin(snapshot_ids))
-    else:
-        scope, rest = dl, None
-
-    probe = scope.select(
+    dl = wh.read(_DEAD_LETTER_TABLE)
+    if snapshot_ids is None:
+        snapshot_ids = [r["snapshot_id"] for r in dl.select("snapshot_id").distinct().collect()]
+    probe = dl.filter(F.col("snapshot_id").isin(snapshot_ids)).select(
         "snapshot_id",
         F.col("raw").alias("orig_raw"),
         F.from_json("raw", MONITORED_STOP_VISIT).alias("visit"),
     )
     parsed = parse_monitored_stop_visits(probe, passthrough=("orig_raw",))
     keyed = with_surrogate_ids(valid_pmsv(parsed)).localCheckpoint(eager=True)
-    still_bad = (
-        parsed.filter(~F.col("_valid"))
-        .select("snapshot_id", F.col("orig_raw").alias("raw"))
-        .localCheckpoint(eager=True)
-    )
 
     recovered = keyed.count()
     if recovered:
         get_or_create_objects(wh, keyed)
-        wh.append(
-            "siri_vehicle_location",
-            build_facts(keyed),
-            partition_by=["snapshot_date"],
-        )
+        wh.write_facts(build_facts(keyed), reload_snapshot_ids=[])
         per = keyed.groupBy("snapshot_id").agg(F.count(F.lit(1)).alias("_n"))
         ctl = wh.read("siri_snapshot")
         touched = ctl.join(per, "snapshot_id", "inner")
@@ -349,8 +336,12 @@ def replay_dead_letters(
         ).select(*ctl.columns)
         wh.upsert_rows("siri_snapshot", updated, ["snapshot_id"])
 
-    out = still_bad if rest is None else rest.unionByName(still_bad)
-    wh.overwrite(_DEAD_LETTER_TABLE, out.localCheckpoint(eager=True))
-    remaining = wh.read(_DEAD_LETTER_TABLE, DEAD_LETTER_SCHEMA).count()
+    # the sink stages the re-parsed rows before it unlinks the files they
+    # were read from
+    still_bad = parsed.filter(~F.col("_valid")).select(
+        "snapshot_id", F.col("orig_raw").alias("raw")
+    )
+    wh.write_snapshot_groups(_DEAD_LETTER_TABLE, still_bad, snapshot_ids)
+    remaining = wh.read(_DEAD_LETTER_TABLE).count()
     keyed.unpersist()
     return {"recovered": recovered, "remaining": remaining}

@@ -228,4 +228,5 @@ ALL_TABLES = {
     "siri_vehicle_location": SIRI_VEHICLE_LOCATION_SCHEMA,
     "siri_snapshot": SIRI_SNAPSHOT_CONTROL_SCHEMA,
     "siri_daily_rollup": DAILY_ROLLUP_SCHEMA,
+    "dead_letter": DEAD_LETTER_SCHEMA,
 }

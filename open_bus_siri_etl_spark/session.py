@@ -8,8 +8,11 @@ Scale notes (targets a multi-executor cluster even though tests run
 local[32]):
 - AQE on: runtime coalescing of post-shuffle partitions, skew-join splitting,
   and dynamic broadcast selection replace hand-tuned partition counts.
-- ``partitionOverwriteMode=dynamic``: idempotent per-partition fact reloads
-  (the reference's delete-by-snapshot, process_snapshot.py:278).
+- ``partitionOverwriteMode=dynamic``: an overwrite of a partitioned path
+  replaces only the partitions the written rows hold.  The delta-dedup
+  streams rely on it (a replayed micro-batch overwrites exactly its own
+  ``ingest_batch=`` partition); the warehouse's per-snapshot reloads do not
+  (they replace file groups, ``Warehouse.write_snapshot_groups``).
 - shuffle.partitions default 32 for local tests; on a real cluster leave AQE
   to coalesce from a deliberately high initial number (set via --conf).
 - No ``_SUCCESS`` marker: nothing reads it (Spark's readers skip

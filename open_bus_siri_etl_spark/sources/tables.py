@@ -8,13 +8,13 @@ Replaces the reference's SQLAlchemy/Postgres row-at-a-time writes
   ``upsert_dim`` counts the novelty with an ``Observation`` on the eager
   checkpoint that materializes it, so deciding whether to append costs no
   ``count()`` job of its own.
-- facts: partitioned by ``snapshot_date`` with per-snapshot FILE GROUPS
-  inside each date partition (``snap-<id>-*.parquet``); idempotent reload =
-  unlink the group + append the new one (the reference's per-snapshot
-  DELETE, process_snapshot.py:278) — sibling snapshots' files untouched.
+- facts and dead letters: per-snapshot FILE GROUPS (``snap-<id>-*.parquet``,
+  facts inside ``snapshot_date`` partitions, dead letters flat) — see
+  SNAPSHOT_GROUP_TABLES.  Idempotent reload = unlink the group + adopt the
+  new one (the reference's per-snapshot DELETE, process_snapshot.py:278) —
+  sibling snapshots' files untouched.
 - control: append-only LOG of versioned status rows (last-writer-wins by
   ``log_seq``, resolved on read, collapsed by compact()) — see LOG_TABLES.
-- dead-letter: small table, read-modify-write.
 
 Small frames the driver builds itself (control rows, id lists) go through
 ``local_frame``: an Arrow table becomes a local relation, so writing one row
@@ -62,6 +62,22 @@ from ..metrics import observed
 # (run it from the daily maintenance slot), bounding read-side window cost.
 LOG_TABLES: dict[str, list[str]] = {"siri_snapshot": ["snapshot_id"]}
 _LOG_SEQ_COL = "log_seq"
+
+# Tables written as per-snapshot file groups (``Warehouse.write_snapshot_groups``):
+# name -> (partition columns, sort key within each file).  Every row of a
+# snapshot lands in files named ``snap-<group>-*.parquet`` (``<group>`` is the
+# snapshot id with '/' -> '-') inside the partition directory its id names, so
+# replacing a snapshot's rows lists that directory and unlinks its group —
+# sibling snapshots' files are never read or rewritten.  Dead letters stay
+# flat: their pre-group whole-table files sit at the table root, and root
+# files next to ``snapshot_date=`` directories break partition discovery.
+SNAPSHOT_GROUP_TABLES: dict[str, tuple[list[str], list[str]]] = {
+    "siri_vehicle_location": (["snapshot_date"], ["recorded_at_time"]),
+    "dead_letter": ([], []),
+}
+# Partition value of a snapshot id (``pipeline.build_facts`` derives the
+# ``snapshot_date`` column from the id the same way).
+_PARTITION_VALUE = {"snapshot_date": lambda sid: sid[:10].replace("/", "-")}
 
 _log_seq_lock = threading.Lock()
 _log_seq_last = 0
@@ -229,11 +245,8 @@ class Warehouse:
             )
         return df
 
-    def append(self, name: str, df: DataFrame, partition_by: list[str] | None = None) -> None:
-        w = df.write.mode("append")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(self.table_path(name))
+    def append(self, name: str, df: DataFrame) -> None:
+        df.write.mode("append").parquet(self.table_path(name))
 
     def _staged_rewrite(
         self, name: str, df: DataFrame, partition_by: list[str] | None = None
@@ -320,149 +333,128 @@ class Warehouse:
                 self.append(name, novelty.select(*cols))
         return novelty
 
-    # -- fact sink with idempotent per-snapshot reload (S4/S5/T4) -----------
+    # -- per-snapshot file-group sink (facts S4/S5/T4, dead letters S6) ------
     #
-    # Layout: <table>/snapshot_date=<D>/snap-<group>-<part>.parquet where
-    # <group> is the snapshot_id with '/' → '-'.  The file NAME is the
-    # manifest: every snapshot's rows live in its own file group inside the
-    # date partition, so the reference's per-snapshot DELETE
-    # (process_snapshot.py:278) is a glob-unlink of O(files-per-snapshot) —
-    # no read-back, no union, no rewrite of sibling snapshots.  A
-    # minute-cadence reload touches kilobytes of metadata instead of
-    # rewriting the whole day 3× (the round-1 design the judge flagged).
+    # Layout: <table>/[<partition>=<v>/]snap-<group>-<part>.parquet, see
+    # SNAPSHOT_GROUP_TABLES.  The file NAME is the manifest, so the
+    # reference's per-snapshot DELETE (process_snapshot.py:278) is one
+    # listing of the partitions the ids name plus a glob-unlink of
+    # O(files-per-snapshot) — no read-back, no union, no rewrite of sibling
+    # snapshots.  A minute-cadence reload touches kilobytes of metadata
+    # instead of rewriting the whole day or the whole dead-letter table.
     # compact() erases group naming (by design: it merges the day's 1440
-    # file groups); rows of a compacted snapshot are then replaced via a
-    # filter-rewrite of ONLY the compacted files — the rare path, paid only
-    # when reloading history older than the last compaction.
+    # file groups), and files written before a table was grouped carry none
+    # either; rows of a snapshot inside such files are replaced via a
+    # filter-rewrite of ONLY the files that hold them — the rare path, paid
+    # only when reloading history older than the last compaction.
     # Production analog: Delta ``replaceWhere``/MERGE; on an object store
     # the post-write rename becomes a server-side copy (same cost class as
     # Delta's commit-then-visible write).
-
-    _FACT_TABLE = "siri_vehicle_location"
 
     @staticmethod
     def _snapshot_group(snapshot_id: str) -> str:
         return snapshot_id.replace("/", "-")
 
-    def _fact_files(self) -> list[str]:
-        return self.fs.glob(
-            os.path.join(self.table_path(self._FACT_TABLE), "snapshot_date=*", "*.parquet")
-        )
-
     def write_facts(self, facts: DataFrame, reload_snapshot_ids: list[str]) -> None:
-        """Append facts as per-snapshot file groups; any of
-        ``reload_snapshot_ids`` that already has rows is replaced first
+        """The fact sink: ``write_snapshot_groups`` on ``siri_vehicle_location``."""
+        self.write_snapshot_groups("siri_vehicle_location", facts, reload_snapshot_ids)
+
+    def write_snapshot_groups(
+        self, name: str, rows: DataFrame, replace_ids: list[str]
+    ) -> None:
+        """Append ``rows`` to group table ``name`` as one file group per
+        snapshot; any of ``replace_ids`` that already has rows is replaced
         (delete-then-write, reference process_snapshot.py:278).
+
+        One job stages ALL snapshots of the batch, partitioned by (partition
+        columns, group) so each snapshot's rows land in their own directory
+        and sorted within each file by the layout's key: fact rows are
+        time-clustered, so parquet row-group min/max stats on
+        recorded_at_time prune time-range scans WITHIN a day.  The staged
+        files are then renamed into place: pure metadata moves (per-file
+        copy on an object store), no data pass.
         """
-        name = self._FACT_TABLE
+        parts, sort_by = SNAPSHOT_GROUP_TABLES[name]
         stage = self.table_path(name) + "._incoming"
         self.fs.rmtree(stage)
-        # One job writes ALL snapshots of the batch, partitioned by
-        # (date, group) so each snapshot's rows land in their own directory;
-        # rows are time-clustered within each file so parquet row-group
-        # min/max stats on recorded_at_time prune time-range scans WITHIN a
-        # day — at 100 TB a "13:00-13:15" query skips ~99% of each day's
-        # row groups instead of reading the whole date partition.
-        cols = [f.name for f in schemas.SIRI_VEHICLE_LOCATION_SCHEMA.fields]
+        cols = [f.name for f in schemas.ALL_TABLES[name].fields]
         (
-            facts.select(*cols)
-            .withColumn(
-                "snapshot_group", F.regexp_replace("snapshot_id", "/", "-")
-            )
-            .sortWithinPartitions("snapshot_date", "snapshot_group", "recorded_at_time")
+            rows.select(*cols)
+            .withColumn("snapshot_group", F.regexp_replace("snapshot_id", "/", "-"))
+            .sortWithinPartitions(*parts, "snapshot_group", *sort_by)
             .write.mode("overwrite")
-            .partitionBy("snapshot_date", "snapshot_group")
+            .partitionBy(*parts, "snapshot_group")
             .parquet(stage)
         )
-        self._delete_fact_groups(reload_snapshot_ids)
-        # adopt staged files into the final one-level layout; pure metadata
-        # moves (per-file copy on an object store), no data pass
-        for src in self.fs.glob(
-            os.path.join(stage, "snapshot_date=*", "snapshot_group=*", "*.parquet")
-        ):
-            group_dir, fname = os.path.split(src)
-            date_dir, group_part = os.path.split(group_dir)
-            group = group_part.split("=", 1)[1]
-            dest_dir = os.path.join(
-                self.table_path(name), os.path.basename(date_dir)
-            )
-            self.fs.makedirs(dest_dir)
-            self.fs.rename(src, os.path.join(dest_dir, f"snap-{group}-{fname}"))
-        self.fs.rmtree(stage)
+        self.delete_snapshot_groups(name, replace_ids)
+        self._adopt(name, stage, parts, grouped=True)
 
-    def delete_fact_snapshots(self, snapshot_ids: list[str]) -> None:
-        """Counter-reset path of a reload that ends up writing no facts."""
-        self._delete_fact_groups(snapshot_ids)
-
-    def _delete_fact_groups(self, snapshot_ids: list[str]) -> None:
-        """Remove all fact rows of ``snapshot_ids``: unlink their file
-        groups; if any rows survive inside compacted files (reload of
-        history older than the last compact()), filter-rewrite only those
-        files."""
-        name = self._FACT_TABLE
+    def delete_snapshot_groups(self, name: str, snapshot_ids: list[str]) -> None:
+        """Remove all rows of ``snapshot_ids`` from group table ``name``: list
+        the partitions the ids name once, unlink their file groups, and if
+        any rows survive inside group-less files there (reload of history
+        older than the last compact()), filter-rewrite only those files."""
         if not snapshot_ids or not self.exists(name):
             return
-        for sid in snapshot_ids:
-            for f in self.fs.glob(
-                os.path.join(
-                    self.table_path(name),
-                    "snapshot_date=*",
-                    f"snap-{self._snapshot_group(sid)}-*.parquet",
-                )
-            ):
-                self.fs.remove(f)
-        compacted = [
-            f
-            for f in self._fact_files()
-            if not os.path.basename(f).startswith("snap-")
-        ]
+        parts, sort_by = SNAPSHOT_GROUP_TABLES[name]
+        path = self.table_path(name)
+        victims = tuple(f"snap-{self._snapshot_group(s)}-" for s in snapshot_ids)
+        dirs = {
+            os.path.join(path, *[f"{c}={_PARTITION_VALUE[c](s)}" for c in parts])
+            for s in snapshot_ids
+        }
+        compacted = []
+        for d in sorted(dirs):
+            for f in self.fs.glob(os.path.join(d, "*.parquet")):
+                base = os.path.basename(f)
+                if base.startswith(victims):
+                    self.fs.remove(f)
+                elif not base.startswith("snap-"):
+                    compacted.append(f)
         if not compacted:
             return
-        hit = (
-            self.spark.read.option("basePath", self.table_path(name))
-            .parquet(*compacted)
-            .filter(F.col("snapshot_id").isin(snapshot_ids))
-        )
-        touched = {
+        in_scope = F.col("snapshot_id").isin(snapshot_ids)
+        scan = self.spark.read.option("basePath", path).parquet
+        touched = sorted(
             r["f"]
-            for r in hit.select(
-                F.input_file_name().alias("f")
-            ).distinct().collect()
-        }
+            for r in scan(*compacted)
+            .filter(in_scope)
+            .select(F.input_file_name().alias("f"))
+            .distinct()
+            .collect()
+        )
         if not touched:
             return
         # rewrite ONLY the compacted files holding the victim rows
-        touched_paths = sorted(touched)
-        retained = (
-            self.spark.read.option("basePath", self.table_path(name))
-            .parquet(*touched_paths)
-            .filter(~F.col("snapshot_id").isin(snapshot_ids))
-        )
-        stage = self.table_path(name) + "._rewrite"
+        retained = scan(*touched).filter(~in_scope)
+        if parts or sort_by:
+            retained = retained.sortWithinPartitions(*parts, *sort_by)
+        stage = path + "._rewrite"
         self.fs.rmtree(stage)
-        (
-            retained.sortWithinPartitions("snapshot_date", "recorded_at_time")
-            .write.mode("overwrite")
-            .partitionBy("snapshot_date")
-            .parquet(stage)
-        )
+        retained.write.mode("overwrite").partitionBy(*parts).parquet(stage)
         from urllib.parse import unquote, urlparse
 
-        for p in touched_paths:
-            local = unquote(urlparse(p).path) if "://" in p or p.startswith("file:") else p
-            self.fs.remove(local)
-        for src in self.fs.glob(
-            os.path.join(stage, "snapshot_date=*", "*.parquet")
-        ):
-            date_dir, fname = os.path.split(src)
-            dest_dir = os.path.join(
-                self.table_path(name), os.path.basename(date_dir)
-            )
+        for p in touched:
+            self.fs.remove(unquote(urlparse(p).path) if "://" in p or p.startswith("file:") else p)
+        self._adopt(name, stage, parts, grouped=False)
+
+    def _adopt(self, name: str, stage: str, parts: list[str], grouped: bool) -> None:
+        """Rename the files staged under ``stage`` (partitioned by ``parts``,
+        then by ``snapshot_group`` when ``grouped``) into the same partition
+        of table ``name``; a group's files take the ``snap-<group>-`` name
+        prefix.  Drops the staging directory."""
+        levels = [f"{c}=*" for c in parts] + (["snapshot_group=*"] if grouped else [])
+        for src in self.fs.glob(os.path.join(stage, *levels, "*.parquet")):
+            rel_dir, fname = os.path.split(os.path.relpath(src, stage))
+            if grouped:
+                rel_dir, group = os.path.split(rel_dir)
+                fname = f"snap-{group.split('=', 1)[1]}-{fname}"
+            dest_dir = os.path.join(self.table_path(name), rel_dir)
             self.fs.makedirs(dest_dir)
             self.fs.rename(src, os.path.join(dest_dir, fname))
         self.fs.rmtree(stage)
 
-    # -- generic keyed read-modify-write for small tables (control, DL) -----
+    # -- keyed writes: the control log, whole-table overwrite, MERGE -------
 
     @staticmethod
     def _resolve_log(df: DataFrame, key_cols: list[str]) -> DataFrame:
@@ -530,8 +522,8 @@ class Warehouse:
         happens on read and the daily compact() bounds log growth.
         Production analog: Delta MERGE keyed on ``key_cols``.  Any other
         table raises ``ValueError``: whole-row replacement there is
-        ``merge_table``'s job (dead letters are rewritten through
-        ``overwrite``).
+        ``merge_table``'s job (facts and dead letters are replaced per
+        snapshot by ``write_snapshot_groups``).
         """
         if name not in LOG_TABLES:
             raise ValueError(
@@ -634,13 +626,11 @@ class Warehouse:
             # that row's log_seq so the file schema stays homogeneous with
             # post-compaction appends)
             df = self._resolve_log(df, log_keys)
-        partition_by = (
-            ["snapshot_date"] if name == "siri_vehicle_location" else None
-        )
+        parts, sort_by = SNAPSHOT_GROUP_TABLES.get(name, ([], []))
         df = df.repartition(target_files)
-        if partition_by:
-            # re-establish the time-clustering invariant write_facts keeps:
+        if parts or sort_by:
+            # re-establish the within-file order write_snapshot_groups keeps:
             # compaction must not trade file count for row-group skipping
-            df = df.sortWithinPartitions("snapshot_date", "recorded_at_time")
-        self._staged_rewrite(name, df, partition_by)
+            df = df.sortWithinPartitions(*parts, *sort_by)
+        self._staged_rewrite(name, df, parts)
         return self.n_files(name)

@@ -2,12 +2,13 @@
 directory with the EP1 core in ``foreachBatch``.
 
 Why foreachBatch and not a plain streaming sink: each micro-batch performs
-*multi-table* writes (4 dim upserts + fact partition overwrite + control
-rows), which is exactly the case Structured Streaming delegates to
-foreachBatch.  Offsets/progress live in the checkpoint dir (the streaming
-analog of the reference's max(loaded-snapshot)+1 resume query), so a crashed
-stream resumes without reprocessing — and the batch core is idempotent per
-snapshot anyway (dynamic partition overwrite), giving effectively-once facts.
+*multi-table* writes (4 dim upserts + per-snapshot fact and dead-letter
+file groups + control rows), which is exactly the case Structured Streaming
+delegates to foreachBatch.  Offsets/progress live in the checkpoint dir (the
+streaming analog of the reference's max(loaded-snapshot)+1 resume query), so
+a crashed stream resumes without reprocessing — and the batch core is
+idempotent per snapshot anyway (a reload replaces the snapshot's file
+groups), giving effectively-once facts.
 
 At scale: maxFilesPerTrigger bounds per-batch work (the reference's
 batch_minutes), and the file source's directory listing prunes via the

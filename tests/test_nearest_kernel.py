@@ -133,6 +133,25 @@ def test_zero_norm_centroid_raises_on_cosine(spark, geometry):
     assert got.count() == 120
 
 
+def test_null_element_raises_naming_its_id(spark):
+    """A vector holding a NULL element has the codebook's width, and the
+    two forms would score it differently (on ``[1.0, NULL]`` the expression
+    form dropped the NULL costs and assigned 20, the numpy form read NaN and
+    assigned 10); both forms of the probe and of the PQ encode raise naming
+    its id instead."""
+    df = spark.createDataFrame(
+        [(1, [1.0, 2.0]), (7, [1.0, None])], "_id long, _vec array<double>"
+    )
+    ids, cmat = [10, 20], [[0.0, 0.0], [3.0, 3.0]]
+    for numpy_form in (False, True):
+        for plan in (
+            sim._nearest(df, "_id", "_vec", ids, cmat, "c", 1, "l2", numpy_form=numpy_form),
+            sim._pq_encode(df, ids, cmat, 2, 1, "_id", "_vec", numpy_form=numpy_form),
+        ):
+            with pytest.raises(Exception, match="id 7 has a NULL element"):
+                plan.collect()
+
+
 def test_wrong_width_vector_raises_naming_its_id(spark, geometry):
     """A vector narrower than the codebook raises naming its id in both
     forms of the probe and of the PQ encode, instead of a zip_with NULL

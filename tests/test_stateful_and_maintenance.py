@@ -610,7 +610,7 @@ def test_post_compaction_reload_rewrites_only_compacted_files(
 def test_delete_fact_snapshots_unlinks_group(spark, warehouse, tmp_path):
     _land_and_process(spark, warehouse, tmp_path, "2019/05/05/16/00", "16:00")
     _land_and_process(spark, warehouse, tmp_path, "2019/05/05/16/01", "16:01")
-    warehouse.delete_fact_snapshots(["2019/05/05/16/00"])
+    warehouse.delete_snapshot_groups("siri_vehicle_location", ["2019/05/05/16/00"])
     facts = warehouse.read("siri_vehicle_location")
     assert facts.count() == 3
     assert facts.select("snapshot_id").distinct().collect()[0][0] == "2019/05/05/16/01"
