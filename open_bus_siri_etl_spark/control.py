@@ -13,13 +13,16 @@ or take a lock, removing the last per-snapshot serialization point at
 100x ingest fan-in.  At production scale the log becomes a Delta table with
 MERGE; the dataflow tables are unaffected by that choice.
 
-Each write builds its rows as Python dicts and hands them to Spark as an
-Arrow local relation (``sources.tables.local_frame``), so a status
-transition costs one Spark job: the log append.  Callers that already hold a row pass it on
-instead of reading it back (``start_loading(existing=...)``).  The
-amortized heartbeat (``heartbeat`` / ``heartbeat_bulk``) fires at most once
-per ``HEARTBEAT_AMORTIZE_SECONDS``, counted from the ``last_heartbeat`` the
-loading transition wrote, so a load shorter than that writes no beat.
+Each transition's row has one builder: ``_loading_row`` (single and bulk)
+and ``_end_row`` (loaded and error).  The loading row carries
+``etl_pending_time`` forward and stamps ``etl_start_time``; the end row is
+built from the loading row merged with the stats (``pipeline.load_batch``),
+so both times survive on every ingest path.  Rows go to Spark as an Arrow
+local relation (``sources.tables.local_frame``): a transition costs one
+Spark job, the log append.  The amortized heartbeat fires at most once per
+``HEARTBEAT_AMORTIZE_SECONDS``, counted from the ``last_heartbeat`` the
+loading transition wrote.  ``mark_loaded`` and ``heartbeat`` are the one-id
+forms of their bulk transitions.
 """
 
 from __future__ import annotations
@@ -64,6 +67,9 @@ _CREATE_SCHEMA = T.StructType(
     [T.StructField(f.name, f.dataType, True) for f in schemas.SIRI_SNAPSHOT_CONTROL_SCHEMA.fields]
 )
 _ID_SCHEMA = T.StructType([T.StructField("snapshot_id", T.StringType())])
+_PENDING_SCHEMA = T.StructType(
+    [_ID_SCHEMA["snapshot_id"], schemas.SIRI_SNAPSHOT_CONTROL_SCHEMA["etl_pending_time"]]
+)
 _UNREAD = object()
 
 
@@ -84,132 +90,127 @@ def get_control_row(wh: Warehouse, snapshot_id: str) -> dict | None:
     return rows[0].asDict() if rows else None
 
 
+# control-row counter column → run_core stats key
+_COUNTERS = {
+    "num_successful_parse_vehicle_locations": "num_successful",
+    "num_failed_parse_vehicle_locations": "num_failed",
+    "num_added_siri_routes": "num_added_siri_routes",
+    "num_added_siri_stops": "num_added_siri_stops",
+    "num_added_siri_rides": "num_added_siri_rides",
+    "num_added_siri_ride_stops": "num_added_siri_ride_stops",
+}
+
+
+def _loading_row(
+    snapshot_id: str, pending_time: datetime.datetime | None, now: datetime.datetime
+) -> dict:
+    return _control_row(
+        snapshot_id,
+        etl_status=ETL_LOADING,
+        etl_pending_time=pending_time,
+        etl_start_time=now,
+        last_heartbeat=now,
+        created_by=CREATED_BY,
+        **dict.fromkeys(_COUNTERS, 0),
+    )
+
+
+def _end_row(
+    snapshot_id: str, status: str, stats: dict, error: str, now: datetime.datetime
+) -> dict:
+    """The loaded or error row; times and counters come from ``stats``."""
+    return _control_row(
+        snapshot_id,
+        etl_status=status,
+        etl_pending_time=stats.get("etl_pending_time"),
+        etl_start_time=stats.get("etl_start_time"),
+        etl_end_time=now,
+        last_heartbeat=now,
+        created_by=CREATED_BY,
+        error=error[:10000],
+        **{col: stats.get(key, 0) for col, key in _COUNTERS.items()},
+    )
+
+
 def start_loading(
     wh: Warehouse,
     snapshot_id: str,
     force_reload: bool = False,
     existing: dict | None = _UNREAD,
-) -> tuple[dict, bool]:
-    """pending/new/error → loading; returns (row, is_reload).
+) -> dict:
+    """pending/new/error → loading; returns the loading row written.
 
     Mirrors get_or_create_siri_snapshot (reference :240-280): refuses when a
-    concurrent loader's heartbeat is younger than 120 s (unless force),
-    resets counters, and (for reloads) the caller must replace the
-    snapshot's old facts and dead letters (run_core passes every id of its
-    batch to Warehouse.write_snapshot_groups as the ids to replace).
+    concurrent loader's heartbeat is younger than 120 s (unless force) and
+    resets counters.  A reload replaces the snapshot's old facts and dead
+    letters (run_core passes every id of its batch to
+    Warehouse.write_snapshot_groups as the ids to replace).
     ``existing``: the snapshot's current control row (None if it has none)
     when the caller has just read it; otherwise it is read here.
     """
     if existing is _UNREAD:
         existing = get_control_row(wh, snapshot_id)
     now = _now()
-    is_reload = False
-    if existing is not None:
-        if existing["etl_status"] == ETL_LOADING and not force_reload:
-            hb = existing["last_heartbeat"]
-            if hb is not None and (now - hb).total_seconds() < HEARTBEAT_TAKEOVER_SECONDS:
-                raise SnapshotLoadingError(
-                    f"snapshot {snapshot_id} is being loaded (fresh heartbeat)"
-                )
-        is_reload = existing["etl_status"] in (ETL_LOADED, ETL_ERROR, ETL_LOADING)
-    row = _control_row(
-        snapshot_id,
-        etl_status=ETL_LOADING,
-        etl_pending_time=(existing or {}).get("etl_pending_time"),
-        etl_start_time=now,
-        last_heartbeat=now,
-        created_by=CREATED_BY,
-        num_successful_parse_vehicle_locations=0,
-        num_failed_parse_vehicle_locations=0,
-        num_added_siri_routes=0,
-        num_added_siri_stops=0,
-        num_added_siri_rides=0,
-        num_added_siri_ride_stops=0,
-    )
+    if existing is not None and existing["etl_status"] == ETL_LOADING and not force_reload:
+        hb = existing["last_heartbeat"]
+        if hb is not None and (now - hb).total_seconds() < HEARTBEAT_TAKEOVER_SECONDS:
+            raise SnapshotLoadingError(
+                f"snapshot {snapshot_id} is being loaded (fresh heartbeat)"
+            )
+    row = _loading_row(snapshot_id, (existing or {}).get("etl_pending_time"), now)
     _write_rows(wh, [row])
-    return row, is_reload
+    return row
 
 
-def _loaded_row(snapshot_id: str, stats: dict, now) -> dict:
-    return _control_row(
-        snapshot_id,
-        etl_status=ETL_LOADED,
-        etl_start_time=stats.get("etl_start_time"),
-        etl_pending_time=stats.get("etl_pending_time"),
-        etl_end_time=now,
-        last_heartbeat=now,
-        created_by=CREATED_BY,
-        error="",
-        num_successful_parse_vehicle_locations=stats.get("num_successful", 0),
-        num_failed_parse_vehicle_locations=stats.get("num_failed", 0),
-        num_added_siri_routes=stats.get("num_added_siri_routes", 0),
-        num_added_siri_stops=stats.get("num_added_siri_stops", 0),
-        num_added_siri_rides=stats.get("num_added_siri_rides", 0),
-        num_added_siri_ride_stops=stats.get("num_added_siri_ride_stops", 0),
-    )
+def start_loading_bulk(wh: Warehouse, snapshot_ids: list[str]) -> list[dict]:
+    """Bulk loading-status write for force-reload batch paths (backfill /
+    streaming foreachBatch): skips the per-snapshot guard — batch callers
+    own the whole id range — and writes one control update for all ids.
+
+    Reads the batch's existing control rows once, for their
+    ``etl_pending_time``, so the loading rows carry it forward.  A pending
+    time is written once and carried by every later version, so the read
+    takes the raw log (one scan job) instead of resolving latest versions.
+    Returns the loading rows written ([] for no ids)."""
+    if not snapshot_ids:
+        return []
+    pending = {}
+    if wh.exists(_CONTROL):
+        pending = {
+            r["snapshot_id"]: r["etl_pending_time"]
+            for r in wh.spark.read.schema(_PENDING_SCHEMA)
+            .parquet(wh.table_path(_CONTROL))
+            .filter(
+                F.col("snapshot_id").isin(list(snapshot_ids))
+                & F.col("etl_pending_time").isNotNull()
+            )
+            .collect()
+        }
+    now = _now()
+    rows = [_loading_row(sid, pending.get(sid), now) for sid in snapshot_ids]
+    _write_rows(wh, rows)
+    return rows
 
 
 def mark_loaded(wh: Warehouse, snapshot_id: str, stats: dict) -> None:
     """loading → loaded with counters (reference :302-312)."""
-    _write_rows(wh, [_loaded_row(snapshot_id, stats, _now())])
+    mark_loaded_bulk(wh, {snapshot_id: stats})
 
 
 def mark_loaded_bulk(wh: Warehouse, stats_by_id: dict[str, dict]) -> None:
-    """Bulk form: ONE control-table read-modify-write for a whole batch
-    (a per-snapshot loop would pay |batch| sequential table rewrites)."""
+    """Bulk form: ONE control-log append for a whole batch (a per-snapshot
+    loop would pay |batch| appends)."""
     if not stats_by_id:
         return
     now = _now()
-    _write_rows(wh, [_loaded_row(sid, s, now) for sid, s in stats_by_id.items()])
-
-
-def start_loading_bulk(
-    wh: Warehouse, snapshot_ids: list[str]
-) -> datetime.datetime | None:
-    """Bulk loading-status write for force-reload batch paths (backfill /
-    streaming foreachBatch): skips the per-snapshot guard — batch callers
-    own the whole id range — and writes one control update for all ids.
-    Returns the ``last_heartbeat`` written (None for no ids)."""
-    if not snapshot_ids:
-        return None
-    now = _now()
-    rows = [
-        _control_row(
-            sid,
-            etl_status=ETL_LOADING,
-            etl_start_time=now,
-            last_heartbeat=now,
-            created_by=CREATED_BY,
-            num_successful_parse_vehicle_locations=0,
-            num_failed_parse_vehicle_locations=0,
-            num_added_siri_routes=0,
-            num_added_siri_stops=0,
-            num_added_siri_rides=0,
-            num_added_siri_ride_stops=0,
-        )
-        for sid in snapshot_ids
-    ]
-    _write_rows(wh, rows)
-    return now
+    _write_rows(
+        wh, [_end_row(sid, ETL_LOADED, s, "", now) for sid, s in stats_by_id.items()]
+    )
 
 
 def mark_error(wh: Warehouse, snapshot_id: str, error: str, stats: dict | None = None) -> None:
     """any → error with traceback text (reference :289-299)."""
-    stats = stats or {}
-    now = _now()
-    row = _control_row(
-        snapshot_id,
-        etl_status=ETL_ERROR,
-        etl_start_time=stats.get("etl_start_time"),
-        etl_pending_time=stats.get("etl_pending_time"),
-        etl_end_time=now,
-        last_heartbeat=now,
-        created_by=CREATED_BY,
-        error=error[:10000],
-        num_successful_parse_vehicle_locations=stats.get("num_successful", 0),
-        num_failed_parse_vehicle_locations=stats.get("num_failed", 0),
-    )
-    _write_rows(wh, [row])
+    _write_rows(wh, [_end_row(snapshot_id, ETL_ERROR, stats or {}, error, _now())])
 
 
 def register_pending(
@@ -257,15 +258,7 @@ def register_pending(
 
 def heartbeat(wh: Warehouse, snapshot_id: str, last: datetime.datetime | None) -> datetime.datetime | None:
     """T5: amortized liveness write (≤ 1 per 5 s, reference :315-321)."""
-    now = _now()
-    if last is not None and (now - last).total_seconds() < HEARTBEAT_AMORTIZE_SECONDS:
-        return last
-    row = get_control_row(wh, snapshot_id)
-    if row is None:
-        return now
-    row["last_heartbeat"] = now
-    _write_rows(wh, [row])
-    return now
+    return heartbeat_bulk(wh, [snapshot_id], last)
 
 
 def heartbeat_bulk(
@@ -299,11 +292,3 @@ def latest_loaded_snapshot_id(wh: Warehouse) -> str | None:
     )
     return r["m"]
 
-
-def pending_snapshot_ids(wh: Warehouse, newest_first: bool = True) -> list[str]:
-    """W2: pending work list (reference parallel_...py:32-39)."""
-    df = wh.read(_CONTROL).filter(F.col("etl_status") == ETL_PENDING)
-    df = df.orderBy(
-        F.col("snapshot_id").desc() if newest_first else F.col("snapshot_id")
-    )
-    return [r["snapshot_id"] for r in df.select("snapshot_id").collect()]

@@ -7,10 +7,10 @@ One declarative flow per batch:
       writes (per-snapshot file groups, replaced on reload) → control-table
       bookends
 
-The same core serves single-snapshot processing (golden-test parity),
-multi-snapshot bulk processing (the backfill path — many files, one job,
-per-snapshot stats recovered by groupBy on ``snapshot_id``), and the
-incremental daemon (streaming.incremental).
+One bookended loader, ``load_batch``, serves the single-snapshot load
+(``process_snapshot``: the daemon tick, golden-test parity), the bulk batch
+(``process_snapshots_bulk``: backfill — many files, one job, per-snapshot
+stats by groupBy on ``snapshot_id``) and the stream's ``foreachBatch``.
 """
 
 from __future__ import annotations
@@ -36,7 +36,6 @@ from .sources.snapshots import (
     read_snapshots,
     read_snapshots_brotli,
     resolve_or_download_snapshot_path,
-    snapshot_path,
 )
 from .sources.tables import Warehouse
 
@@ -177,6 +176,60 @@ def run_core(
     return stats, corrupt_ids
 
 
+def _read_landed(
+    spark: SparkSession, landing_root: str, snapshot_ids: list[str], download_url=None
+) -> DataFrame:
+    """The ids' landed documents, each file resolved (or first fetched from
+    ``download_url``) as ``resolve_snapshot_path`` does: the ``.json`` ids
+    in one ``read_snapshots`` scan, the ``.json.br`` ids in one
+    ``read_snapshots_brotli`` scan, unioned only when both are present."""
+    resolved = [
+        resolve_or_download_snapshot_path(landing_root, s, url_template=download_url)
+        for s in snapshot_ids
+    ]
+    plain = [path for path, is_br in resolved if not is_br]
+    compressed = [path for path, is_br in resolved if is_br]
+    frames = ([read_snapshots(spark, plain)] if plain else []) + (
+        [read_snapshots_brotli(spark, compressed)] if compressed else []
+    )
+    return functools.reduce(DataFrame.unionByName, frames)
+
+
+def load_batch(
+    wh: Warehouse, loading: list[dict], read, save_parse_errors: bool = True
+) -> tuple[dict[str, dict], set[str]]:
+    """Run ``run_core`` between a batch's control bookends; returns its
+    ``(stats, corrupt_ids)``.
+
+    ``loading``: the loading rows written for the batch's ids; ``read()``
+    returns the batch's snapshot frame, inside the bookends so a read that
+    raises ends the ids in ``error``.  The heartbeat of every id is
+    amortized from the loading rows' ``last_heartbeat``.  Loaded and error
+    rows are built from each id's loading row, so they keep its pending and
+    start times.  On a raise every id is marked ``error`` and it re-raises.
+    """
+    by_id = {r["snapshot_id"]: r for r in loading}
+    ids = list(by_id)
+    hb_last = [loading[0]["last_heartbeat"]]
+
+    def _hb():
+        hb_last[0] = control.heartbeat_bulk(wh, ids, hb_last[0])
+
+    try:
+        stats, corrupt_ids = run_core(
+            wh, read(), ids, save_parse_errors=save_parse_errors, heartbeat_cb=_hb
+        )
+        control.mark_loaded_bulk(wh, {sid: {**by_id[sid], **s} for sid, s in stats.items()})
+        for sid in sorted(corrupt_ids):
+            control.mark_error(wh, sid, "corrupt document", by_id[sid])
+    except Exception:
+        error = traceback.format_exc()
+        for sid, row in by_id.items():
+            control.mark_error(wh, sid, error, row)
+        raise
+    return stats, corrupt_ids
+
+
 def process_snapshot(
     spark: SparkSession,
     wh: Warehouse,
@@ -193,50 +246,25 @@ def process_snapshot(
     ``download_url``: S2 fetch seam — when the snapshot isn't landed locally,
     GET ``{download_url}/{id}.br`` into the landing root first (reference
     process_snapshot.py:324-348, ``download=True`` mode; any urllib scheme,
-    ``file://`` in tests).  Returns the stats dict, or None when skipped.
+    ``file://`` in tests).  Returns the stats dict, or None when skipped; a
+    document that does not parse raises ``ValueError`` after its control
+    row is marked ``error``.
     """
     existing = control.get_control_row(wh, snapshot_id)
     if only_missing and existing is not None and existing["etl_status"] == control.ETL_LOADED and not force_reload:
         return None
-    row, _is_reload = control.start_loading(
+    row = control.start_loading(
         wh, snapshot_id, force_reload=force_reload, existing=existing
     )
-    try:
-        path, is_br = resolve_or_download_snapshot_path(
-            landing_root, snapshot_id, url_template=download_url
-        )
-        snapshots_df = (
-            read_snapshots_brotli(spark, path)
-            if is_br
-            else read_snapshots(spark, path)
-        )
-        hb_last = [row["last_heartbeat"]]
-
-        def _hb():
-            hb_last[0] = control.heartbeat(wh, snapshot_id, hb_last[0])
-
-        stats_by_id, corrupt_ids = run_core(
-            wh,
-            snapshots_df,
-            [snapshot_id],
-            save_parse_errors=save_parse_errors,
-            heartbeat_cb=_hb,
-        )
-        if corrupt_ids:
-            raise ValueError(f"snapshot {snapshot_id}: corrupt document")
-        stats = stats_by_id[snapshot_id]
-        stats["etl_start_time"] = row["etl_start_time"]
-        stats["etl_pending_time"] = row["etl_pending_time"]
-        control.mark_loaded(wh, snapshot_id, stats)
-        return stats
-    except Exception:
-        control.mark_error(
-            wh,
-            snapshot_id,
-            traceback.format_exc(),
-            {"etl_start_time": row["etl_start_time"]},
-        )
-        raise
+    stats, corrupt_ids = load_batch(
+        wh,
+        [row],
+        lambda: _read_landed(spark, landing_root, [snapshot_id], download_url),
+        save_parse_errors=save_parse_errors,
+    )
+    if corrupt_ids:
+        raise ValueError(f"snapshot {snapshot_id}: corrupt document")
+    return stats[snapshot_id]
 
 
 def process_snapshots_bulk(
@@ -248,32 +276,21 @@ def process_snapshots_bulk(
     """EP3 inner loop, Spark-style: N snapshots in ONE multi-file job.
 
     The reference fans out over 4 OS processes (parallel_...py:91-118);
-    here a single ``read.json([paths])`` schedules per-file tasks across all
-    executors and the set-oriented core amortizes the dim anti-joins over the
-    whole batch.  Per-snapshot status granularity is preserved via
-    ``input_file_name()``-derived snapshot_id: a corrupt document ends its
+    here a single multi-file read (``_read_landed``) schedules per-file
+    tasks across all executors and the set-oriented core amortizes the dim
+    anti-joins over the whole batch.  Per-snapshot status granularity is
+    preserved via the path-derived snapshot_id: a corrupt document ends its
     own snapshot in ``error`` (``corrupt document``) with its earlier rows
     untouched, and the rest of the batch loads.
     """
     if not snapshot_ids:
         return {}
-    hb_last = [control.start_loading_bulk(wh, snapshot_ids)]
-    paths = [snapshot_path(landing_root, s) for s in snapshot_ids]
-    try:
-        snapshots_df = read_snapshots(spark, paths)
-
-        def _hb():
-            hb_last[0] = control.heartbeat_bulk(wh, snapshot_ids, hb_last[0])
-
-        stats, corrupt_ids = run_core(wh, snapshots_df, snapshot_ids, heartbeat_cb=_hb)
-        control.mark_loaded_bulk(wh, stats)
-        for sid in sorted(corrupt_ids):
-            control.mark_error(wh, sid, "corrupt document")
-        return stats
-    except Exception:
-        for sid in snapshot_ids:
-            control.mark_error(wh, sid, traceback.format_exc())
-        raise
+    stats, _corrupt_ids = load_batch(
+        wh,
+        control.start_loading_bulk(wh, snapshot_ids),
+        lambda: _read_landed(spark, landing_root, snapshot_ids),
+    )
+    return stats
 
 
 def replay_dead_letters(

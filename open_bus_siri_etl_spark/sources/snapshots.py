@@ -197,8 +197,10 @@ def _id_from_path_col() -> F.Column:
     )
 
 
-def read_snapshots(spark: SparkSession, paths: list[str] | str) -> DataFrame:
-    """Read snapshot JSON document(s) → (snapshot_id, Siri) rows.
+def json_snapshot_reader(reader):
+    """The snapshot-document set-up of a batch (``spark.read``) or streaming
+    (``spark.readStream``) JSON reader: the explicit schema plus
+    ``_corrupt_record``, PERMISSIVE mode and multi-line documents.
 
     PERMISSIVE mode + ``_corrupt_record`` keeps one bad file from failing a
     bulk read (SURVEY §7 hard-part 4): corrupt documents surface as rows with
@@ -210,18 +212,24 @@ def read_snapshots(spark: SparkSession, paths: list[str] | str) -> DataFrame:
     schema = T.StructType(
         list(SIRI_SNAPSHOT_SCHEMA.fields) + [T.StructField("_corrupt_record", T.StringType())]
     )
-    df = (
-        spark.read.schema(schema)
+    return (
+        reader.schema(schema)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .option("multiLine", "true")
-        .json(paths)
     )
-    return df.select(
-        _id_from_path_col().alias("snapshot_id"),
-        "Siri",
-        "_corrupt_record",
-    )
+
+
+def snapshot_rows(df: DataFrame) -> DataFrame:
+    """Documents read by a ``json_snapshot_reader`` → (snapshot_id, Siri,
+    _corrupt_record) rows, the id recovered from each file's path."""
+    return df.select(_id_from_path_col().alias("snapshot_id"), "Siri", "_corrupt_record")
+
+
+def read_snapshots(spark: SparkSession, paths: list[str] | str) -> DataFrame:
+    """Read snapshot JSON document(s) → (snapshot_id, Siri, _corrupt_record)
+    rows in one multi-file scan."""
+    return snapshot_rows(json_snapshot_reader(spark.read).json(paths))
 
 
 def read_snapshots_brotli(spark: SparkSession, paths: list[str] | str) -> DataFrame:

@@ -10,6 +10,10 @@ a crashed stream resumes without reprocessing — and the batch core is
 idempotent per snapshot anyway (a reload replaces the snapshot's file
 groups), giving effectively-once facts.
 
+The stream reads ``*.json`` only: a minute landed only as ``.json.br`` is
+loaded by the daemon tick (streaming.incremental) and by backfill, whose
+reader resolves each id's landed file.
+
 At scale: maxFilesPerTrigger bounds per-batch work (the reference's
 batch_minutes), and the file source's directory listing prunes via the
 YYYY/MM/DD/HH layout.
@@ -18,38 +22,22 @@ YYYY/MM/DD/HH layout.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .. import control
-from ..pipeline import run_core
-from ..schemas import SIRI_SNAPSHOT_SCHEMA
+from ..pipeline import load_batch
+from ..sources.snapshots import json_snapshot_reader, snapshot_rows
 from ..sources.tables import Warehouse
 
 
 def _streaming_snapshots(spark: SparkSession, landing_root: str, max_files: int | None) -> DataFrame:
-    schema = T.StructType(
-        list(SIRI_SNAPSHOT_SCHEMA.fields)
-        + [T.StructField("_corrupt_record", T.StringType())]
-    )
     reader = (
-        spark.readStream.schema(schema)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .option("multiLine", "true")
+        json_snapshot_reader(spark.readStream)
         .option("pathGlobFilter", "*.json")
         .option("recursiveFileLookup", "true")
     )
     if max_files is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files))
-    df = reader.json(landing_root)
-    return df.select(
-        F.regexp_extract(
-            F.input_file_name(), r"(\d{4}/\d{2}/\d{2}/\d{2}/\d{2})\.json", 1
-        ).alias("snapshot_id"),
-        "Siri",
-        "_corrupt_record",
-    )
+    return snapshot_rows(reader.json(landing_root))
 
 
 def start_snapshot_stream(
@@ -71,14 +59,8 @@ def start_snapshot_stream(
             r["snapshot_id"]
             for r in batch_df.select("snapshot_id").distinct().collect()
         ]
-        if not ids:
-            return
-        control.start_loading_bulk(wh, ids)
-        # run_core finds corrupt documents on its own parse scan
-        stats, corrupt_ids = run_core(wh, batch_df, ids)
-        control.mark_loaded_bulk(wh, stats)
-        for sid in sorted(corrupt_ids):
-            control.mark_error(wh, sid, "corrupt document")
+        if ids:
+            load_batch(wh, control.start_loading_bulk(wh, ids), lambda: batch_df)
 
     stream = _streaming_snapshots(spark, landing_root, max_files_per_trigger)
     writer = (
