@@ -95,7 +95,9 @@ def run_backfill(
 ) -> dict:
     """Drain all pending snapshots batch by batch with retry.
 
-    Returns {"processed": n, "failed": n, "batches": n}.
+    Returns {"processed": n, "failed": n, "batches": n}: an id that ends
+    ``error`` on its own (a corrupt document, a landed file that is gone)
+    counts as failed, the rest of its batch as processed.
     """
     batches = plan_batches(wh, batch_minutes).collect()
     processed = failed = 0
@@ -103,8 +105,9 @@ def run_backfill(
         ids = sorted(b["snapshot_ids"], reverse=True)
         for attempt in range(retry_attempts):
             try:
-                process_snapshots_bulk(spark, wh, ids, landing_root)
-                processed += len(ids)
+                loaded = process_snapshots_bulk(spark, wh, ids, landing_root)
+                processed += len(loaded)
+                failed += len(ids) - len(loaded)
                 break
             except Exception:
                 if attempt == retry_attempts - 1:

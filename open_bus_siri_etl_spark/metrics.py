@@ -74,8 +74,9 @@ def observed(df: DataFrame, name: str, **metrics) -> tuple[DataFrame, Observatio
 class SparkJobs:
     """with SparkJobs(spark) as jobs: ... — ``jobs.n`` is the number of Spark
     jobs launched inside the block, counted through a job group and the
-    status tracker.  Jobs started by other threads meanwhile are not
-    counted."""
+    status tracker.  Jobs of threads that inherit the block's job group
+    (``operators.upsert.concurrent_jobs`` wraps its calls so that they do)
+    are counted; jobs that other threads start meanwhile are not."""
 
     def __init__(self, spark: SparkSession):
         self.sc = spark.sparkContext

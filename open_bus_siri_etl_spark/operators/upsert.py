@@ -4,9 +4,13 @@ The reference's ObjectsMaker walks three dependency levels with a commit
 between each so Postgres sequences can assign parent ids before children
 reference them (reference process_snapshot.py:113-211).  With deterministic
 xxhash64 surrogate keys (functions.py) the child key is computable without
-waiting for the parent write, so the three levels become three independent
-anti-join appends over the *same* deduplicated batch — no barriers needed for
+waiting for the parent write, so the four dims are four independent
+anti-join upserts over the *same* deduplicated batch — no barriers needed for
 id assignment, only append ordering for referential integrity of readers.
+``get_or_create_objects`` therefore runs the four upserts at the same time
+on driver threads (``concurrent_jobs``): each computes and checkpoints its
+novelty at once, and appends only after its parents' upserts have returned
+(``DIM_PARENTS``), so a reader never sees a child row before its parent.
 
 Each ``derive_*`` row carries ``_first_snapshot_id``: the minimum
 ``snapshot_id`` among the rows that contribute its id.  The tag rides through
@@ -19,13 +23,54 @@ loaded one by one in id order.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import contextlib
+from collections.abc import Callable, Iterator
+from concurrent.futures import Future, ThreadPoolExecutor
+
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from .. import functions as fn
 from ..sources.tables import Warehouse
 
 FIRST_SNAPSHOT_COL = "_first_snapshot_id"
+
+# dim -> the dims whose upserts must return before it appends: a ride names
+# its route, a ride stop its ride and its stop
+DIM_PARENTS: dict[str, tuple[str, ...]] = {
+    "siri_route": (),
+    "siri_stop": (),
+    "siri_ride": ("siri_route",),
+    "siri_ride_stop": ("siri_ride", "siri_stop"),
+}
+
+
+@contextlib.contextmanager
+def concurrent_jobs(spark: SparkSession, n_tasks: int) -> Iterator[Callable[..., Future]]:
+    """Overlap independent Spark jobs from driver threads.
+
+    ``with concurrent_jobs(spark, n) as submit:`` yields ``submit(fn, *args,
+    **kwargs)``, which starts ``fn`` on a thread of a pool sized to the
+    ``n`` calls the block submits and returns its ``Future``, while the
+    caller's thread goes on with the block.  Each call is wrapped in
+    ``pyspark.util.inheritable_thread_target(spark)`` when it is submitted,
+    so it runs with a copy of the caller's local properties as they are at
+    that moment (job group, description, tags); the copy is per call,
+    because Spark sets per-execution properties on them.  The block ends
+    only after every call has ended, then re-raises the block's own error or
+    else the first failed call's, in submission order.
+    """
+    futures: list[Future] = []
+    with ThreadPoolExecutor(max_workers=n_tasks) as pool:
+
+        def submit(fn: Callable, *args, **kwargs) -> Future:
+            futures.append(pool.submit(inheritable_thread_target(spark)(fn), *args, **kwargs))
+            return futures[-1]
+
+        yield submit
+    for f in futures:
+        f.result()
 
 
 def with_surrogate_ids(pmsv: DataFrame) -> DataFrame:
@@ -132,15 +177,28 @@ def get_or_create_objects(wh: Warehouse, keyed: DataFrame) -> dict[str, DataFram
     them per snapshot for the num_added_* control counters).
 
     Matches ObjectsMaker.get_or_create_objects (reference
-    process_snapshot.py:205-211) but each level is one anti-join append.
+    process_snapshot.py:205-211) but each dim is one anti-join append, and
+    the four run at once (``concurrent_jobs``): each upsert's jobs start
+    immediately, and its append waits for its ``DIM_PARENTS`` (the ``after``
+    of ``Warehouse.upsert_dim``).  A parent that raises stops its children's
+    appends; the call raises once all four have ended.
     The anti-join key is the surrogate ``id`` (a pure function of the natural
     key), so one 8-byte column is shuffled/broadcast instead of the full key.
     """
-    return {
-        "siri_route": wh.upsert_dim("siri_route", derive_routes(keyed), ["id"]),
-        "siri_stop": wh.upsert_dim("siri_stop", derive_stops(keyed), ["id"]),
-        "siri_ride": wh.upsert_dim("siri_ride", derive_rides(keyed), ["id"]),
-        "siri_ride_stop": wh.upsert_dim(
-            "siri_ride_stop", derive_ride_stops(keyed), ["id"]
-        ),
+    derive = {
+        "siri_route": derive_routes,
+        "siri_stop": derive_stops,
+        "siri_ride": derive_rides,
+        "siri_ride_stop": derive_ride_stops,
     }
+    upserts: dict[str, Future] = {}
+    with concurrent_jobs(wh.spark, len(DIM_PARENTS)) as submit:
+        for name, parents in DIM_PARENTS.items():
+            upserts[name] = submit(
+                wh.upsert_dim,
+                name,
+                derive[name](keyed),
+                ["id"],
+                after=[upserts[p] for p in parents],
+            )
+    return {name: f.result() for name, f in upserts.items()}

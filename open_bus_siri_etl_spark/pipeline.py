@@ -3,9 +3,17 @@
 One declarative flow per batch:
 
     read.json → explode×2 → typed select/cast → valid/invalid split
-      → (distinct keys ⟕anti dims → append) ×4 → fact and dead-letter
-      writes (per-snapshot file groups, replaced on reload) → control-table
-      bookends
+      → ┬ (distinct keys ⟕anti dim → append) ×4, at once; each dim
+        │   appends after its parents: route → ride → ride_stop ← stop
+        └ dead-letter write (per-snapshot file groups, replaced on reload)
+      → ┬ fact write (per-snapshot file groups), after all four dims
+        └ per-snapshot counters collect
+      → control-table bookends
+
+The branches of each ┬ run at the same time from driver threads
+(``operators.upsert.concurrent_jobs``), and each ┬ ends when all of its
+jobs have, so readers never see a child dim row before its parent, or a
+fact before its dims.
 
 One bookended loader, ``load_batch``, serves the single-snapshot load
 (``process_snapshot``: the daemon tick, golden-test parity), the bulk batch
@@ -16,6 +24,7 @@ stats by groupBy on ``snapshot_id``) and the stream's ``foreachBatch``.
 from __future__ import annotations
 
 import functools
+import os
 import traceback
 from collections import defaultdict
 
@@ -29,6 +38,7 @@ from .operators.flatten import iterate_monitored_stop_visits
 from .operators.parse import dead_letters, parse_monitored_stop_visits, valid_pmsv
 from .operators.upsert import (
     FIRST_SNAPSHOT_COL,
+    concurrent_jobs,
     get_or_create_objects,
     with_surrogate_ids,
 )
@@ -102,6 +112,11 @@ def run_core(
     (``_ok``/``_bad`` by ``_valid``) — two jobs however many snapshots the
     batch holds.
 
+    After the parse, the core runs in two overlapped steps (module
+    docstring): the four dim upserts beside the dead-letter write, then the
+    fact write beside the counters collect.  A step that fails raises once
+    all of its jobs have ended, so the next step never starts.
+
     ``heartbeat_cb`` (T5): invoked between Spark actions so a long batch
     keeps its control-table heartbeat fresh (the reference beats throughout
     processing, :121-203; amortization lives in control.heartbeat*).
@@ -129,7 +144,13 @@ def run_core(
     keyed = with_surrogate_ids(valid_pmsv(parsed))
     invalid = dead_letters(parsed)
 
-    novelty = get_or_create_objects(wh, keyed)
+    with concurrent_jobs(wh.spark, 1) as submit:
+        # dead letters: clear-and-write per snapshot (reference :409-414,232-234)
+        if save_parse_errors:
+            submit(wh.write_snapshot_groups, _DEAD_LETTER_TABLE, invalid, good_ids)
+        novelty = get_or_create_objects(wh, keyed)
+    _beat()
+
     tagged = [
         rows.select(
             F.lit(table).alias("kind"), F.col(FIRST_SNAPSHOT_COL).alias("snapshot_id")
@@ -143,23 +164,17 @@ def run_core(
         )
     )
     counters: dict[str, dict[str, int]] = defaultdict(dict)
-    for r in (
-        functools.reduce(DataFrame.unionByName, tagged)
-        .groupBy("kind", "snapshot_id")
-        .count()
-        .collect()
-    ):
-        counters[r["kind"]][r["snapshot_id"]] = r["count"]
+    with concurrent_jobs(wh.spark, 1) as submit:
+        # facts: idempotent per-snapshot replace
+        submit(wh.write_facts, build_facts(keyed), good_ids)
+        for r in (
+            functools.reduce(DataFrame.unionByName, tagged)
+            .groupBy("kind", "snapshot_id")
+            .count()
+            .collect()
+        ):
+            counters[r["kind"]][r["snapshot_id"]] = r["count"]
     _beat()
-
-    # facts: idempotent per-snapshot replace
-    facts = build_facts(keyed)
-    wh.write_facts(facts, reload_snapshot_ids=good_ids)
-    _beat()
-
-    # dead letters: clear-and-write per snapshot (reference :409-414,232-234)
-    if save_parse_errors:
-        wh.write_snapshot_groups(_DEAD_LETTER_TABLE, invalid, good_ids)
 
     stats = {
         sid: {
@@ -178,35 +193,47 @@ def run_core(
 
 def _read_landed(
     spark: SparkSession, landing_root: str, snapshot_ids: list[str], download_url=None
-) -> DataFrame:
-    """The ids' landed documents, each file resolved (or first fetched from
-    ``download_url``) as ``resolve_snapshot_path`` does: the ``.json`` ids
-    in one ``read_snapshots`` scan, the ``.json.br`` ids in one
-    ``read_snapshots_brotli`` scan, unioned only when both are present."""
-    resolved = [
-        resolve_or_download_snapshot_path(landing_root, s, url_template=download_url)
+) -> tuple[DataFrame | None, set[str]]:
+    """The ids' landed documents and the ids with no landed file.
+
+    Each file is resolved (or first fetched from ``download_url``) as
+    ``resolve_snapshot_path`` does: the ``.json`` ids in one
+    ``read_snapshots`` scan, the ``.json.br`` ids in one
+    ``read_snapshots_brotli`` scan, unioned only when both are present.  An
+    id whose file is still not there after the download attempt is left
+    out of the scan and returned as missing; the frame is None when every
+    id is."""
+    resolved = {
+        s: resolve_or_download_snapshot_path(landing_root, s, url_template=download_url)
         for s in snapshot_ids
-    ]
-    plain = [path for path, is_br in resolved if not is_br]
-    compressed = [path for path, is_br in resolved if is_br]
+    }
+    missing = {s for s, (path, _) in resolved.items() if not os.path.exists(path)}
+    landed = [r for s, r in resolved.items() if s not in missing]
+    plain = [path for path, is_br in landed if not is_br]
+    compressed = [path for path, is_br in landed if is_br]
     frames = ([read_snapshots(spark, plain)] if plain else []) + (
         [read_snapshots_brotli(spark, compressed)] if compressed else []
     )
-    return functools.reduce(DataFrame.unionByName, frames)
+    frame = functools.reduce(DataFrame.unionByName, frames) if frames else None
+    return frame, missing
 
 
 def load_batch(
     wh: Warehouse, loading: list[dict], read, save_parse_errors: bool = True
-) -> tuple[dict[str, dict], set[str]]:
+) -> tuple[dict[str, dict], dict[str, str]]:
     """Run ``run_core`` between a batch's control bookends; returns its
-    ``(stats, corrupt_ids)``.
+    ``(stats, errors)``: the stats of every loaded id and the reason of
+    every id that ended ``error`` on its own (``corrupt document``,
+    ``snapshot file not found``).
 
     ``loading``: the loading rows written for the batch's ids; ``read()``
-    returns the batch's snapshot frame, inside the bookends so a read that
-    raises ends the ids in ``error``.  The heartbeat of every id is
-    amortized from the loading rows' ``last_heartbeat``.  Loaded and error
-    rows are built from each id's loading row, so they keep its pending and
-    start times.  On a raise every id is marked ``error`` and it re-raises.
+    returns the batch's snapshot frame (None for none) and the ids with no
+    landed file, inside the bookends so a read that raises ends the ids in
+    ``error``.  The rest of the batch loads without the missing ids.  The
+    heartbeat of every id is amortized from the loading rows'
+    ``last_heartbeat``.  Loaded and error rows are built from each id's
+    loading row, so they keep its pending and start times.  On a raise
+    every id is marked ``error`` and it re-raises.
     """
     by_id = {r["snapshot_id"]: r for r in loading}
     ids = list(by_id)
@@ -216,18 +243,29 @@ def load_batch(
         hb_last[0] = control.heartbeat_bulk(wh, ids, hb_last[0])
 
     try:
-        stats, corrupt_ids = run_core(
-            wh, read(), ids, save_parse_errors=save_parse_errors, heartbeat_cb=_hb
-        )
+        snapshots_df, missing = read()
+        stats, corrupt_ids = {}, set()
+        if snapshots_df is not None:
+            stats, corrupt_ids = run_core(
+                wh,
+                snapshots_df,
+                [s for s in ids if s not in missing],
+                save_parse_errors=save_parse_errors,
+                heartbeat_cb=_hb,
+            )
         control.mark_loaded_bulk(wh, {sid: {**by_id[sid], **s} for sid, s in stats.items()})
-        for sid in sorted(corrupt_ids):
-            control.mark_error(wh, sid, "corrupt document", by_id[sid])
+        errors = {
+            **dict.fromkeys(corrupt_ids, "corrupt document"),
+            **dict.fromkeys(missing, "snapshot file not found"),
+        }
+        for sid in sorted(errors):
+            control.mark_error(wh, sid, errors[sid], by_id[sid])
     except Exception:
         error = traceback.format_exc()
         for sid, row in by_id.items():
             control.mark_error(wh, sid, error, row)
         raise
-    return stats, corrupt_ids
+    return stats, errors
 
 
 def process_snapshot(
@@ -247,8 +285,8 @@ def process_snapshot(
     GET ``{download_url}/{id}.br`` into the landing root first (reference
     process_snapshot.py:324-348, ``download=True`` mode; any urllib scheme,
     ``file://`` in tests).  Returns the stats dict, or None when skipped; a
-    document that does not parse raises ``ValueError`` after its control
-    row is marked ``error``.
+    document that does not parse, or a file that is not there, raises
+    ``ValueError`` after its control row is marked ``error``.
     """
     existing = control.get_control_row(wh, snapshot_id)
     if only_missing and existing is not None and existing["etl_status"] == control.ETL_LOADED and not force_reload:
@@ -256,14 +294,14 @@ def process_snapshot(
     row = control.start_loading(
         wh, snapshot_id, force_reload=force_reload, existing=existing
     )
-    stats, corrupt_ids = load_batch(
+    stats, errors = load_batch(
         wh,
         [row],
         lambda: _read_landed(spark, landing_root, [snapshot_id], download_url),
         save_parse_errors=save_parse_errors,
     )
-    if corrupt_ids:
-        raise ValueError(f"snapshot {snapshot_id}: corrupt document")
+    if errors:
+        raise ValueError(f"snapshot {snapshot_id}: {errors[snapshot_id]}")
     return stats[snapshot_id]
 
 
@@ -281,11 +319,13 @@ def process_snapshots_bulk(
     anti-joins over the whole batch.  Per-snapshot status granularity is
     preserved via the path-derived snapshot_id: a corrupt document ends its
     own snapshot in ``error`` (``corrupt document``) with its earlier rows
-    untouched, and the rest of the batch loads.
+    untouched, as does a minute whose landed file is gone (``snapshot file
+    not found``), and the rest of the batch loads.  Returns the stats of the
+    ids that loaded.
     """
     if not snapshot_ids:
         return {}
-    stats, _corrupt_ids = load_batch(
+    stats, _errors = load_batch(
         wh,
         control.start_loading_bulk(wh, snapshot_ids),
         lambda: _read_landed(spark, landing_root, snapshot_ids),

@@ -39,6 +39,8 @@ import os
 import shutil
 import threading
 import time
+from collections.abc import Sequence
+from concurrent.futures import Future
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -304,7 +306,13 @@ class Warehouse:
         finally:
             self.fs.rmdir(lockdir)
 
-    def upsert_dim(self, name: str, candidates: DataFrame, key_cols: list[str]) -> DataFrame:
+    def upsert_dim(
+        self,
+        name: str,
+        candidates: DataFrame,
+        key_cols: list[str],
+        after: Sequence[Future] = (),
+    ) -> DataFrame:
         """Insert candidate rows whose natural key is absent; return the
         novelty rows actually added (materialized).
 
@@ -318,6 +326,12 @@ class Warehouse:
         The read-novelty-append sequence runs under the table lock so
         concurrent upserts serialize instead of double-inserting (see
         _table_lock).
+
+        ``after``: futures of the parent dims' upserts
+        (``operators.upsert.DIM_PARENTS``).  The novelty is computed and
+        checkpointed at once; the append waits until every parent has
+        returned, and a parent that raised re-raises here, so nothing is
+        appended.  Readers never see a row before the parent rows it names.
         """
         with self._table_lock(name):
             existing = self.read(name).select(*key_cols)
@@ -328,6 +342,8 @@ class Warehouse:
             # materialize novelty exactly once before appending to the files
             # the anti join reads from; the checkpoint's job also counts it
             novelty = novelty.localCheckpoint(eager=True)
+            for parent in after:
+                parent.result()
             if added.get["rows"]:
                 cols = [f.name for f in schemas.ALL_TABLES[name].fields]
                 self.append(name, novelty.select(*cols))

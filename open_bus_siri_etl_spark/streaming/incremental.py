@@ -17,6 +17,7 @@ import time
 from pyspark.sql import SparkSession
 
 from .. import control
+from ..operators.upsert import concurrent_jobs
 from ..pipeline import process_snapshot
 from ..sources.snapshots import list_snapshot_ids, resolve_snapshot_path
 from ..sources.tables import Warehouse
@@ -61,17 +62,22 @@ def process_new_snapshots(
 
     Mirrors reference :485-529: resume from max(loaded)+1min (T2), clamp to
     the lookback window when stale (T3), walk ascending minute-by-minute
-    (W5), skip missing snapshots, process existing ones.
+    (W5), skip missing snapshots, process existing ones.  Registering the
+    listed ids as pending and reading the resume point overlap
+    (``operators.upsert.concurrent_jobs``).
     """
     if now is None:
         now = datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None)
     now = now.replace(second=0, microsecond=0, tzinfo=None)
 
-    if register_pending:
-        control.register_pending(wh, list_snapshot_ids(landing_root))
+    # a pending row for a new id never changes the max loaded id, so the
+    # registration and the resume-point read run at the same time
+    with concurrent_jobs(spark, 1) as submit:
+        if register_pending:
+            submit(control.register_pending, wh, list_snapshot_ids(landing_root))
+        latest = control.latest_loaded_snapshot_id(wh)
 
     earliest_allowed = now - last_snapshots_timedelta
-    latest = control.latest_loaded_snapshot_id(wh)
     if latest is not None:
         resume = _id_to_dt(latest) + datetime.timedelta(minutes=1)
         if resume < earliest_allowed:

@@ -60,7 +60,7 @@ def start_snapshot_stream(
             for r in batch_df.select("snapshot_id").distinct().collect()
         ]
         if ids:
-            load_batch(wh, control.start_loading_bulk(wh, ids), lambda: batch_df)
+            load_batch(wh, control.start_loading_bulk(wh, ids), lambda: (batch_df, set()))
 
     stream = _streaming_snapshots(spark, landing_root, max_files_per_trigger)
     writer = (

@@ -63,6 +63,33 @@ def test_backfill_loads_brotli_only_minute(spark, warehouse, tmp_path):
     }
 
 
+def test_backfill_fails_only_the_minute_whose_file_is_gone(spark, warehouse, tmp_path):
+    """A registered minute with no landed file (neither ``.json`` nor
+    ``.json.br``) ends ``error`` with ``snapshot file not found``; the other
+    minutes of its batch load, and the backfill counts one failed, two
+    processed."""
+    landing = str(tmp_path / "landing")
+    ids = [f"2019/05/05/16/0{i}" for i in range(3)]
+    gone = ids[1]
+    for i, sid in enumerate(ids):
+        if sid != gone:
+            write_snapshot_fixture(landing, sid, get_test_snapshot_data(time_str=f"16:0{i}"))
+    control.register_pending(warehouse, ids)
+
+    result = run_backfill(spark, warehouse, landing, retry_attempts=1)
+    assert result == {"processed": 2, "failed": 1, "batches": 1}
+    row = control.get_control_row(warehouse, gone)
+    assert row["etl_status"] == control.ETL_ERROR
+    assert row["error"] == "snapshot file not found"
+    assert row["etl_pending_time"] is not None and row["etl_start_time"] is not None
+    loaded = [ids[0], ids[2]]
+    for sid in loaded:
+        row = control.get_control_row(warehouse, sid)
+        assert row["etl_status"] == control.ETL_LOADED, row["error"]
+        assert row["num_successful_parse_vehicle_locations"] == 3, sid
+    assert _per_snapshot(warehouse.read("siri_vehicle_location")) == dict.fromkeys(loaded, 3)
+
+
 def test_loaded_rows_keep_pending_and_start_times(spark, warehouse, tmp_path):
     """After ``register_pending``, the loaded row of a snapshot keeps its
     pending time and a start time between it and the end time, whether

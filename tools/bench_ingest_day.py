@@ -12,10 +12,17 @@ time, file counts before/after, row counts (must be identical), and query
 latency before/after.
 
 Run: python tools/bench_ingest_day.py [out.json]   (~10-20 min)
+
+Quick mode: python tools/bench_ingest_day.py --quick [out.json]   (~15 s)
+ingests 180 snapshots in three hourly batches and reports snapshots/min and
+the seconds of each batch only (no compaction, no flagship read), so a few
+alternating runs of two checkouts make an ingest A/B in about a minute.  It
+writes a file only when given one.
 """
 
 from __future__ import annotations
 
+import argparse
 import datetime
 import json
 import shutil
@@ -82,8 +89,15 @@ def _time_query(wh, repeats: int = 3) -> float:
     return round(best, 3)
 
 
-def main() -> None:
-    out_path = sys.argv[1] if len(sys.argv) > 1 else "BENCH_INGEST_DAY.json"
+def main(argv=None) -> None:
+    p = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    p.add_argument("out", nargs="?", help="result file (default BENCH_INGEST_DAY.json; none with --quick)")
+    p.add_argument(
+        "--quick", action="store_true", help="3 hourly batches (180 snapshots), ingest only"
+    )
+    args = p.parse_args(argv)
+    hours = 3 if args.quick else 24
+    out_path = args.out or (None if args.quick else "BENCH_INGEST_DAY.json")
 
     from fixtures import get_test_snapshot_data
 
@@ -99,7 +113,7 @@ def main() -> None:
     try:
         base = datetime.datetime(2019, 5, 5, 0, 0)
         ids = []
-        for i in range(1440):
+        for i in range(hours * 60):
             ts = base + datetime.timedelta(minutes=i)
             sid = ts.strftime("%Y/%m/%d/%H/%M")
             ids.append(sid)
@@ -116,12 +130,29 @@ def main() -> None:
         wh = Warehouse(spark, wh_path)
         t0 = time.time()
         loaded = 0
-        for h in range(24):
+        batch_sec = []
+        for h in range(hours):
+            tb = time.time()
             stats = pipeline.process_snapshots_bulk(
                 spark, wh, ids[h * 60 : (h + 1) * 60], landing
             )
+            batch_sec.append(round(time.time() - tb, 2))
             loaded += sum(1 for s in stats.values() if s.get("num_successful", 0) > 0)
         ingest_sec = time.time() - t0
+        if args.quick:
+            result = {
+                "metric": "ingest_quick",
+                "snapshots": len(ids),
+                "loaded": loaded,
+                "batches": hours,
+                "ingest_sec": round(ingest_sec, 2),
+                "snapshots_per_min": round(len(ids) / ingest_sec * 60, 1),
+                "batch_sec": batch_sec,
+            }
+            print(json.dumps(result))
+            if out_path:
+                Path(out_path).write_text(json.dumps(result, indent=2) + "\n")
+            return
 
         files_before = {t: _n_files(wh, t) for t in TABLES}
         rows_before = _flagship(wh).count()  # warm page cache for fairness
