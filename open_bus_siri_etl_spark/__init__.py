@@ -19,7 +19,7 @@ same semantics Spark-first:
 - ``control``    — the siri_snapshot state machine (pending/loading/loaded/
                    error, heartbeat; reference process_snapshot.py:240-321).
 - ``streaming``  — incremental daemon / backfill orchestration (EP2/EP3).
-- ``validate``   — DB-vs-raw full-outer diff (reference validate_snapshots.py).
+- ``validate``   — DB-vs-raw keyed diff (reference validate_snapshots.py).
 - ``plans``      — the query catalog surfaced through __spark_entry__.py.
 """
 

@@ -191,7 +191,7 @@ def run_core(
     return stats, corrupt_ids
 
 
-def _read_landed(
+def read_landed(
     spark: SparkSession, landing_root: str, snapshot_ids: list[str], download_url=None
 ) -> tuple[DataFrame | None, set[str]]:
     """The ids' landed documents and the ids with no landed file.
@@ -297,7 +297,7 @@ def process_snapshot(
     stats, errors = load_batch(
         wh,
         [row],
-        lambda: _read_landed(spark, landing_root, [snapshot_id], download_url),
+        lambda: read_landed(spark, landing_root, [snapshot_id], download_url),
         save_parse_errors=save_parse_errors,
     )
     if errors:
@@ -314,7 +314,7 @@ def process_snapshots_bulk(
     """EP3 inner loop, Spark-style: N snapshots in ONE multi-file job.
 
     The reference fans out over 4 OS processes (parallel_...py:91-118);
-    here a single multi-file read (``_read_landed``) schedules per-file
+    here a single multi-file read (``read_landed``) schedules per-file
     tasks across all executors and the set-oriented core amortizes the dim
     anti-joins over the whole batch.  Per-snapshot status granularity is
     preserved via the path-derived snapshot_id: a corrupt document ends its
@@ -328,7 +328,7 @@ def process_snapshots_bulk(
     stats, _errors = load_batch(
         wh,
         control.start_loading_bulk(wh, snapshot_ids),
-        lambda: _read_landed(spark, landing_root, snapshot_ids),
+        lambda: read_landed(spark, landing_root, snapshot_ids),
     )
     return stats
 

@@ -5,17 +5,18 @@ the raw snapshot JSON, and diffs the two keyed maps: duplicate-key detection
 (D3), key-set equality (W7), then per-field comparison on matched pairs (J5).
 Report rows go to a typed CSV (S7).
 
-Spark-first: both sides are DataFrames keyed on the 6-column observation key
+Spark-first: the report is one plan with two shuffles and no checkpoints.
+Both sides are tagged with a struct of their compared fields as strings,
+unioned, and grouped once on the snapshot and the 6-column observation key
 (recorded_at_time to the second + lon/lat/bearing/velocity/distance, exactly
-the reference's key at :28-35,58-65); the comparison is a full-outer join —
-unmatched rows ⇒ key-mismatch findings, matched rows filtered per field ⇒
-field findings.  One shuffle on the key; everything per-snapshot groupable,
-so validating a year of snapshots is a single job.
-
-``validate_snapshots`` materializes each side once (an eager local
-checkpoint) before building the report: the report is a union of about nine
-branches, and without it every branch would re-run the 4-way join and the
-JSON re-parse.
+the reference's key at :28-35,58-65) into one list of rows per side — the
+keyed maps.  Group-by keys compare NULLs as equal, so this is the null-safe
+key match.  Per key, list sizes give the duplicate-key (size > 1) and
+key-mismatch (one list empty) findings, and the cross product of the two
+lists gives the field findings.  A second group-by on the snapshot turns
+them into report rows, with one 'no errors' row per clean snapshot.  Each
+side is read once, so ``validate_snapshots`` materializes neither, and
+adaptive execution runs the raw JSON scan beside the warehouse join.
 """
 
 from __future__ import annotations
@@ -25,10 +26,14 @@ from pyspark.sql import functions as F
 
 from .operators.flatten import iterate_monitored_stop_visits
 from .operators.parse import parse_monitored_stop_visits, valid_pmsv
+from .pipeline import read_landed
+from .sources.snapshots import read_snapshots
 from .sources.tables import Warehouse
 
 KEY_COLS = ["key_ts", "lon", "lat", "bearing", "velocity", "distance_from_journey_start"]
 COMPARE_FIELDS = ["journey_ref", "vehicle_ref", "scheduled_start_time", "stop_code", "order"]
+# the report's position columns, taken from the db side of a finding
+_POSITION_COLS = KEY_COLS[1:]
 
 REPORT_COLUMNS = [
     "snapshot_id",
@@ -100,102 +105,99 @@ def raw_derived(snapshots_df: DataFrame) -> DataFrame:
     )
 
 
-def _dup_keys(df: DataFrame) -> DataFrame:
-    """D3: keys appearing more than once (num_items != len(keyed_map))."""
-    return (
-        df.groupBy("snapshot_id", *KEY_COLS)
-        .count()
-        .filter("count > 1")
-        .select("snapshot_id", *KEY_COLS)
+def _report_row(recorded_at_time, positions, field, expected, actual) -> F.Column:
+    """One report row after ``snapshot_id``: REPORT_COLUMNS[1:], all strings."""
+    return F.struct(
+        recorded_at_time.alias("recorded_at_time"),
+        *[p.alias(c) for p, c in zip(positions, _POSITION_COLS)],
+        field.alias("field"),
+        expected.alias("expected"),
+        actual.alias("actual"),
     )
+
+
+def _blank_row(expected: str, actual: str) -> F.Column:
+    blank = F.lit("")
+    return _report_row(blank, [blank] * len(_POSITION_COLS), blank, F.lit(expected), F.lit(actual))
 
 
 def validate(db: DataFrame, raw: DataFrame) -> DataFrame:
     """Full validation report (REPORT_COLUMNS, all strings like the reference).
 
-    Findings: 'duplicate db key' / 'duplicate raw key' (D3), 'missing in db' /
-    'missing in raw' (W7 key-set diff), per-field mismatches (J5), and one
-    'no errors' row per clean snapshot — mirroring the reference's report rows.
+    Findings: 'matching num_db_items' / 'matching num_pmsv_items' (D3, a
+    key held by more than one row of that side), 'matching db_data and
+    pmsv_data keys' (W7, a key held by one side only, or with a NULL
+    ``key_ts``), one row per field that differs between the two sides of
+    every (db row, raw row) pair of a key (J5), and one 'no errors' row per
+    snapshot in ``db`` with none of these — mirroring the reference's report
+    rows.  The three key-level findings are reported once per snapshot.
     """
-    spark = db.sparkSession
-
-    def blank_row_for(df: DataFrame, field: str, expected: str, actual: str) -> DataFrame:
-        return df.select("snapshot_id").distinct().select(
+    sides = db.select(
+        "snapshot_id",
+        *KEY_COLS,
+        F.struct(
+            *[F.col(c).cast("string").alias(c) for c in _POSITION_COLS + COMPARE_FIELDS]
+        ).alias("db"),
+    ).unionByName(
+        raw.select(
             "snapshot_id",
-            *[F.lit("").alias(c) for c in REPORT_COLUMNS[1:7]],
-            F.lit(field).alias("field"),
-            F.lit(expected).alias("expected"),
-            F.lit(actual).alias("actual"),
-        )
-
-    dup_db = blank_row_for(_dup_keys(db), "", "matching num_db_items", "mismatch")
-    dup_raw = blank_row_for(_dup_keys(raw), "", "matching num_pmsv_items", "mismatch")
-
-    joined = db.alias("db").join(
-        raw.alias("raw"),
-        on=[F.col(f"db.{c}").eqNullSafe(F.col(f"raw.{c}")) for c in ["snapshot_id", *KEY_COLS]],
-        how="full_outer",
-    )
-    key_mismatch_snapshots = (
-        joined.filter(F.col("db.key_ts").isNull() | F.col("raw.key_ts").isNull())
-        .select(
-            F.coalesce(F.col("db.snapshot_id"), F.col("raw.snapshot_id")).alias(
-                "snapshot_id"
-            )
-        )
-    )
-    key_mismatch = blank_row_for(
-        key_mismatch_snapshots, "", "matching db_data and pmsv_data keys", "mismatch"
-    )
-
-    matched = joined.filter(
-        F.col("db.key_ts").isNotNull() & F.col("raw.key_ts").isNotNull()
-    )
-    base = matched.select(
-        F.col("db.snapshot_id").alias("snapshot_id"),
-        F.col("db.key_ts").alias("recorded_at_time"),
-        F.col("db.lon").cast("string").alias("lon"),
-        F.col("db.lat").cast("string").alias("lat"),
-        F.col("db.bearing").cast("string").alias("bearing"),
-        F.col("db.velocity").cast("string").alias("velocity"),
-        F.col("db.distance_from_journey_start").cast("string").alias(
-            "distance_from_journey_start"
+            *KEY_COLS,
+            F.struct(*[F.col(c).cast("string").alias(c) for c in COMPARE_FIELDS]).alias("raw"),
         ),
-        *[F.col(f"db.{f}").cast("string").alias(f"db_{f}") for f in COMPARE_FIELDS],
-        *[F.col(f"raw.{f}").cast("string").alias(f"raw_{f}") for f in COMPARE_FIELDS],
+        allowMissingColumns=True,
     )
-    field_findings = None
-    for f_name in COMPARE_FIELDS:
-        finding = base.filter(
-            ~F.col(f"db_{f_name}").eqNullSafe(F.col(f"raw_{f_name}"))
-        ).select(
-            *REPORT_COLUMNS[:7],
-            F.lit(f_name).alias("field"),
-            F.col(f"raw_{f_name}").alias("expected"),
-            F.col(f"db_{f_name}").alias("actual"),
-        )
-        field_findings = finding if field_findings is None else field_findings.unionByName(finding)
+    # group-by keys compare NULLs as equal: the eqNullSafe key match
+    keyed = sides.groupBy("snapshot_id", *KEY_COLS).agg(
+        F.collect_list("db").alias("db"), F.collect_list("raw").alias("raw")
+    )
+    n_db, n_raw = F.size("db"), F.size("raw")
+    matched = (n_db > 0) & (n_raw > 0) & F.col("key_ts").isNotNull()
 
-    problem_snapshots = (
-        dup_db.select("snapshot_id")
-        .unionByName(dup_raw.select("snapshot_id"))
-        .unionByName(key_mismatch.select("snapshot_id"))
-        .unionByName(field_findings.select("snapshot_id"))
-        .distinct()
+    def differences(d: F.Column, r: F.Column) -> F.Column:
+        return F.array(
+            *[
+                F.when(
+                    ~d[f].eqNullSafe(r[f]),
+                    _report_row(
+                        F.col("key_ts"),
+                        [d[c] for c in _POSITION_COLS],
+                        F.lit(f),
+                        r[f],
+                        d[f],
+                    ),
+                )
+                for f in COMPARE_FIELDS
+            ]
+        )
+
+    pair_findings = F.flatten(
+        F.transform("db", lambda d: F.flatten(F.transform("raw", lambda r: differences(d, r))))
     )
-    clean = blank_row_for(
-        db.select("snapshot_id")
-        .distinct()
-        .join(problem_snapshots, "snapshot_id", "left_anti"),
-        "",
-        "no errors",
-        "no errors",
+    per_snapshot = keyed.groupBy("snapshot_id").agg(
+        F.max(n_db > 1).alias("dup_db"),
+        F.max(n_raw > 1).alias("dup_raw"),
+        F.max(~matched).alias("key_mismatch"),
+        F.max(n_db > 0).alias("in_db"),
+        F.flatten(F.collect_list(F.when(matched, F.array_compact(pair_findings)))).alias(
+            "findings"
+        ),
     )
-    return (
-        dup_db.unionByName(dup_raw)
-        .unionByName(key_mismatch)
-        .unionByName(field_findings)
-        .unionByName(clean)
+    problem = (
+        F.col("dup_db") | F.col("dup_raw") | F.col("key_mismatch") | (F.size("findings") > 0)
+    )
+    blank_rows = F.array_compact(
+        F.array(
+            F.when(F.col("dup_db"), _blank_row("matching num_db_items", "mismatch")),
+            F.when(F.col("dup_raw"), _blank_row("matching num_pmsv_items", "mismatch")),
+            F.when(
+                F.col("key_mismatch"),
+                _blank_row("matching db_data and pmsv_data keys", "mismatch"),
+            ),
+            F.when(F.col("in_db") & ~problem, _blank_row("no errors", "no errors")),
+        )
+    )
+    return per_snapshot.select(
+        "snapshot_id", F.inline(F.concat(blank_rows, F.col("findings")))
     )
 
 
@@ -211,20 +213,19 @@ def validate_snapshots(
     snapshot_ids: list[str],
     report_path: str | None = None,
 ) -> DataFrame:
-    """End-to-end: load both sides for the given snapshots, diff, report."""
-    from .sources.snapshots import read_snapshots, snapshot_path
-    import os
+    """End-to-end: load both sides for the given snapshots, diff, report.
 
-    paths = [
-        snapshot_path(landing_root, s)
-        for s in snapshot_ids
-        if os.path.exists(snapshot_path(landing_root, s))
-    ]
-    raw = raw_derived(
-        read_snapshots(spark, paths).filter(F.col("Siri").isNotNull())
-    ).localCheckpoint(eager=True)
-    db = db_derived(wh, snapshot_ids).localCheckpoint(eager=True)
-    report = validate(db, raw)
+    The raw side is every landed file of the ids, ``.json`` or ``.json.br``
+    (``read_landed``); ids with no landed file have no raw rows.  With a
+    ``report_path`` the report is computed once, written there, and
+    returned from that computation, so collecting it runs no validation
+    again."""
+    snapshots, _missing = read_landed(spark, landing_root, snapshot_ids)
+    if snapshots is None:
+        snapshots = read_snapshots(spark, [])
+    raw = raw_derived(snapshots.filter(F.col("Siri").isNotNull()))
+    report = validate(db_derived(wh, snapshot_ids), raw)
     if report_path:
+        report = report.localCheckpoint()
         write_report(report, report_path)
     return report

@@ -15,9 +15,10 @@ Run: python tools/bench_ingest_day.py [out.json]   (~10-20 min)
 
 Quick mode: python tools/bench_ingest_day.py --quick [out.json]   (~15 s)
 ingests 180 snapshots in three hourly batches and reports snapshots/min and
-the seconds of each batch only (no compaction, no flagship read), so a few
-alternating runs of two checkouts make an ingest A/B in about a minute.  It
-writes a file only when given one.
+the seconds of each batch (no compaction, no flagship read), then the seconds
+and Spark jobs of one ``validate_snapshots(...).collect()`` over the last
+batch, so a few alternating runs of two checkouts make an ingest or a
+validation A/B in about a minute.  It writes a file only when given one.
 """
 
 from __future__ import annotations
@@ -93,7 +94,9 @@ def main(argv=None) -> None:
     p = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     p.add_argument("out", nargs="?", help="result file (default BENCH_INGEST_DAY.json; none with --quick)")
     p.add_argument(
-        "--quick", action="store_true", help="3 hourly batches (180 snapshots), ingest only"
+        "--quick",
+        action="store_true",
+        help="3 hourly batches (180 snapshots) and one validation, no compaction",
     )
     args = p.parse_args(argv)
     hours = 3 if args.quick else 24
@@ -102,9 +105,11 @@ def main(argv=None) -> None:
     from fixtures import get_test_snapshot_data
 
     from open_bus_siri_etl_spark import pipeline
+    from open_bus_siri_etl_spark.metrics import SparkJobs
     from open_bus_siri_etl_spark.session import get_spark
     from open_bus_siri_etl_spark.sources.snapshots import write_snapshot_fixture
     from open_bus_siri_etl_spark.sources.tables import Warehouse
+    from open_bus_siri_etl_spark.validate import validate_snapshots
 
     spark = get_spark(app_name="bench-ingest-day")
     spark.sparkContext.setLogLevel("ERROR")
@@ -140,6 +145,11 @@ def main(argv=None) -> None:
             loaded += sum(1 for s in stats.values() if s.get("num_successful", 0) > 0)
         ingest_sec = time.time() - t0
         if args.quick:
+            last_batch = ids[-60:]
+            tv = time.time()
+            with SparkJobs(spark) as validate_jobs:
+                report = validate_snapshots(spark, wh, landing, last_batch).collect()
+            validate_sec = time.time() - tv
             result = {
                 "metric": "ingest_quick",
                 "snapshots": len(ids),
@@ -148,6 +158,10 @@ def main(argv=None) -> None:
                 "ingest_sec": round(ingest_sec, 2),
                 "snapshots_per_min": round(len(ids) / ingest_sec * 60, 1),
                 "batch_sec": batch_sec,
+                "validate_snapshots": len(last_batch),
+                "validate_sec": round(validate_sec, 2),
+                "validate_jobs": validate_jobs.n,
+                "validate_findings": sum(r["expected"] != "no errors" for r in report),
             }
             print(json.dumps(result))
             if out_path:
