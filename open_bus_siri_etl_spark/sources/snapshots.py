@@ -9,7 +9,9 @@ Spark-first: snapshots land under ``<root>/YYYY/MM/DD/HH/MM.json`` (or
 any number of snapshots in one job — Spark schedules per-file tasks across
 executors, which is what the reference's 4-process pool approximated (X1).
 ``snapshot_id`` is recovered from the file path, so per-snapshot status
-granularity survives bulk reads (SURVEY §3 EP3).
+granularity survives bulk reads (SURVEY §3 EP3).  A ``.json.br`` file is
+decoded once, in the task that reads it, through pyarrow's streaming brotli
+reader (``read_snapshots_brotli``), the one decoder of the package.
 
 Directory layout = partition pruning: a path glob ``<root>/2024/01/*/ * /
 *.json`` prunes at the listing level exactly like the reference's prefix
@@ -22,76 +24,23 @@ import json
 import os
 from collections.abc import Iterator
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..schemas import SIRI_SNAPSHOT_SCHEMA
 
-try:  # prefer the real module when installed (full-format decode)
-    import brotli  # type: ignore
-except ImportError:  # pragma: no cover
-    brotli = None
-
-try:  # pyarrow ships a full RFC 7932 codec (huffman + static dictionary)
-    import pyarrow as _pa
-
-    _PA_BROTLI = _pa.Codec("brotli") if _pa.Codec.is_available("brotli") else None
-except Exception:  # pragma: no cover
-    _PA_BROTLI = None
-
-from . import brotli_fallback
-
-
-def _pa_brotli_decompress(payload: bytes) -> bytes:
-    """Full-format decode through pyarrow's brotli codec.
-
-    The codec API needs the decompressed size up front, which a raw brotli
-    stream doesn't carry (RFC 7932 has no length header).  But the codec
-    fails for every undersized buffer and succeeds (zero-padded) for any
-    size ≥ actual, so the exact length is the minimal succeeding size:
-    exponential probe up from a typical-text-ratio guess, then binary
-    search down.  ~5-8 whole-stream decodes per document — executor-side
-    and per-file-parallel in read_snapshots_brotli, so throughput scales
-    out with the cluster rather than with this constant.
-    """
-    # invariant: lo fails (−1 ≡ "below any size"), hi succeeds
-    lo, hi = -1, max(64, len(payload) * 8)
-    while True:  # exponential: find a succeeding upper bound
-        try:
-            _PA_BROTLI.decompress(payload, hi)
-            break
-        except OSError:
-            lo, hi = hi, hi * 4
-            if hi > 1 << 34:  # 16 GiB: not a valid stream, not a size problem
-                raise
-    while lo + 1 < hi:  # minimal succeeding size == exact decoded length
-        mid = (lo + hi) // 2
-        try:
-            _PA_BROTLI.decompress(payload, mid)
-            hi = mid
-        except OSError:
-            lo = mid
-    return bytes(_PA_BROTLI.decompress(payload, hi))
-
 
 def brotli_decompress(payload: bytes) -> bytes:
-    """Decode brotli bytes — full format (huffman + dictionary meta-blocks):
-    the real module when installed, else pyarrow's bundled codec, else the
-    vendored stored-mode subset (RFC 7932 uncompressed meta-blocks) as the
-    last-resort floor."""
-    if brotli is not None:  # pragma: no cover
-        return brotli.decompress(payload)
-    if _PA_BROTLI is not None:
-        return _pa_brotli_decompress(payload)
-    return brotli_fallback.decompress(payload)
+    """Decode one brotli stream (RFC 7932, full format) in a single pass
+    through pyarrow's streaming reader, which needs no decoded size up front.
+    A payload that is not a valid stream raises ``OSError``."""
+    return pa.CompressedInputStream(pa.BufferReader(payload), "brotli").read()
 
 
 def brotli_compress(payload: bytes) -> bytes:
-    if brotli is not None:  # pragma: no cover
-        return brotli.compress(payload)
-    if _PA_BROTLI is not None:
-        return bytes(_PA_BROTLI.compress(payload))
-    return brotli_fallback.compress(payload)
+    return pa.Codec("brotli").compress(payload, asbytes=True)
 
 
 def snapshot_path(root: str, snapshot_id: str, compressed: bool = False) -> str:
@@ -206,8 +155,6 @@ def json_snapshot_reader(reader):
     bulk read (SURVEY §7 hard-part 4): corrupt documents surface as rows with
     NULL ``Siri`` which the caller can route to per-snapshot error status.
     """
-    from pyspark.sql import types as T
-
     # fresh StructType: .add() mutates in place, never touch the shared one
     schema = T.StructType(
         list(SIRI_SNAPSHOT_SCHEMA.fields) + [T.StructField("_corrupt_record", T.StringType())]
@@ -232,16 +179,24 @@ def read_snapshots(spark: SparkSession, paths: list[str] | str) -> DataFrame:
     return snapshot_rows(json_snapshot_reader(spark.read).json(paths))
 
 
+_DECODED_SCHEMA = T.StructType(
+    [T.StructField("path", T.StringType()), T.StructField("json_text", T.StringType())]
+)
+
+
 def read_snapshots_brotli(spark: SparkSession, paths: list[str] | str) -> DataFrame:
     """S2: read ``.json.br`` files via binaryFile + per-partition decode.
 
     The decode is the one step built-in sources can't express (the reference
     shells out to ``brotli -d``, process_snapshot.py:340-342).  It runs in
-    ``mapPartitions`` so each executor decodes its own files — no driver
-    bottleneck — then the decompressed text re-enters the declarative plan
-    through ``from_json`` with the explicit schema.  Decode uses the real
-    ``brotli`` module when installed, else the vendored RFC 7932 stored-mode
-    subset (``brotli_fallback``).
+    ``mapPartitions`` so each executor decodes its own files, once each, with
+    no driver bottleneck; the decompressed text re-enters the declarative plan
+    through ``from_json`` with the explicit schema.  The decoded rows carry an
+    explicit schema too, so building the frame launches no job.
+
+    A file that does not decode (not brotli, or brotli around non-UTF-8
+    bytes) yields NULL text and so a NULL ``Siri``: like a corrupt ``.json``
+    document it fails only its own snapshot, not the batch.
     """
     bin_df = (
         spark.read.format("binaryFile")
@@ -254,15 +209,18 @@ def read_snapshots_brotli(spark: SparkSession, paths: list[str] | str) -> DataFr
     )
 
     def decode(it: Iterator) -> Iterator:
-        # imported inside the task so the closure stays slim; resolves to the
-        # real module or the vendored fallback on each executor independently
+        # imported inside the task so the closure stays slim
         from open_bus_siri_etl_spark.sources.snapshots import brotli_decompress
 
         for row in it:
-            yield row.path, brotli_decompress(bytes(row.content)).decode("utf-8")
+            try:
+                text = brotli_decompress(bytes(row.content)).decode("utf-8")
+            except (OSError, UnicodeDecodeError):
+                text = None
+            yield row.path, text
 
     decoded = bin_df.select("path", "content").rdd.mapPartitions(decode).toDF(
-        ["path", "json_text"]
+        _DECODED_SCHEMA
     )
     return decoded.select(
         F.regexp_extract("path", r"(\d{4}/\d{2}/\d{2}/\d{2}/\d{2})\.json\.br", 1).alias(

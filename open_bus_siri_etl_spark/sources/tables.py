@@ -470,7 +470,7 @@ class Warehouse:
             self.fs.rename(src, os.path.join(dest_dir, fname))
         self.fs.rmtree(stage)
 
-    # -- keyed writes: the control log, whole-table overwrite, MERGE -------
+    # -- keyed writes: the control log, whole-table overwrite --------------
 
     @staticmethod
     def _resolve_log(df: DataFrame, key_cols: list[str]) -> DataFrame:
@@ -491,45 +491,6 @@ class Warehouse:
         keys = T.StructType([schema[k] for k in LOG_TABLES[name]])
         return self.spark.read.schema(keys).parquet(self.table_path(name))
 
-    def read_as_of(self, name: str, as_of_seq: int,
-                   schema: T.StructType | None = None) -> DataFrame:
-        """Time travel on a log-structured table: the latest row per key
-        considering only appends with ``log_seq <= as_of_seq`` — i.e. the
-        table exactly as a reader at that sequence saw it.
-
-        The append-only log IS the version history (the same property
-        Delta/Iceberg expose as snapshot reads), so time travel costs one
-        extra pushed-down filter; ``compact()`` collapses history, after
-        which only post-compaction sequences remain addressable — run it on
-        a retention cadence, exactly like VACUUM.
-        """
-        log_keys = LOG_TABLES.get(name)
-        if not log_keys:
-            raise ValueError(f"{name!r} is not a log-structured table")
-        schema = schema or schemas.ALL_TABLES.get(name)
-        if not self.exists(name):
-            return self.spark.createDataFrame([], schema)
-        df = self.spark.read.parquet(self.table_path(name))
-        df = df.filter(F.col(_LOG_SEQ_COL) <= int(as_of_seq))
-        df = self._resolve_log(df, log_keys).drop(_LOG_SEQ_COL)
-        if schema is not None:
-            df = df.select(
-                *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
-            )
-        return df
-
-    def log_versions(self, name: str) -> DataFrame:
-        """The addressable history of a log table: distinct ``log_seq``
-        values (ascending) — feed one to ``read_as_of``."""
-        if name not in LOG_TABLES:
-            raise ValueError(f"{name!r} is not a log-structured table")
-        return (
-            self.spark.read.parquet(self.table_path(name))
-            .select(F.col(_LOG_SEQ_COL).alias("log_seq"))
-            .distinct()
-            .orderBy("log_seq")
-        )
-
     def upsert_rows(self, name: str, rows: DataFrame, key_cols: list[str]) -> None:
         """Replace rows matching ``key_cols`` in a log-structured table
         (LOG_TABLES, i.e. the control table): APPEND the replacement rows
@@ -537,14 +498,13 @@ class Warehouse:
         sibling rows; the latest-per-key resolution on ``key_cols``
         happens on read and the daily compact() bounds log growth.
         Production analog: Delta MERGE keyed on ``key_cols``.  Any other
-        table raises ``ValueError``: whole-row replacement there is
-        ``merge_table``'s job (facts and dead letters are replaced per
-        snapshot by ``write_snapshot_groups``).
+        table raises ``ValueError``: facts and dead letters are replaced per
+        snapshot by ``write_snapshot_groups``, a whole table by ``overwrite``.
         """
         if name not in LOG_TABLES:
             raise ValueError(
                 f"upsert_rows: {name!r} is not a log-structured table "
-                f"({sorted(LOG_TABLES)}); use merge_table or overwrite"
+                f"({sorted(LOG_TABLES)}); use write_snapshot_groups or overwrite"
             )
         self._sync_log_seq(name)
         self.append(name, rows.withColumn(_LOG_SEQ_COL, F.lit(_next_log_seq())))
@@ -556,59 +516,6 @@ class Warehouse:
         df.localCheckpoint(eager=True).write.mode("overwrite").parquet(
             self.table_path(name)
         )
-
-    def merge_table(
-        self, name: str, source: DataFrame, key_cols: list[str]
-    ) -> None:
-        """True upsert (update-or-insert) via MERGE emulation: full-outer
-        join source against the stored table, matched rows take the source's
-        values, everything else passes through, rewrite.
-
-        merge_frames handles column-level update rules and is the shape a
-        Delta ``MERGE`` replaces 1:1 on a lakehouse; ``upsert_rows`` is the
-        append-only twin for log-structured tables.
-        """
-        from ..operators.upsert import merge_frames
-
-        existing = self.read(name, schemas.ALL_TABLES.get(name))
-        merged = merge_frames(existing, source, key_cols)
-        self.overwrite(name, merged)
-
-    # -- bucketed tables: shuffle-free co-located joins ---------------------
-
-    def save_bucketed(
-        self,
-        df: DataFrame,
-        name: str,
-        bucket_cols: list[str],
-        num_buckets: int = 8,
-        sort_cols: list[str] | None = None,
-    ) -> None:
-        """Persist a table hash-bucketed on ``bucket_cols`` via the session
-        catalog (Spark's native bucketing needs table metadata — files alone
-        can't carry the bucket spec).
-
-        Two tables bucketed on their join key with the same bucket count
-        sort-merge-join with NO Exchange on either side: at 100 TB that's
-        the difference between re-shuffling the fact table every query and
-        reading it pre-placed.  Sorted buckets additionally skip the
-        per-partition sort.  The reference has no analog (Postgres indexes
-        play this role); on a cluster the same call works against a Hive
-        metastore unchanged.
-        """
-        writer = (
-            df.write.mode("overwrite")
-            .format("parquet")
-            .option("path", self.table_path(f"bucketed_{name}"))
-            .bucketBy(num_buckets, *bucket_cols)
-        )
-        if sort_cols:
-            writer = writer.sortBy(*sort_cols)
-        self.spark.sql(f"DROP TABLE IF EXISTS {name}")
-        writer.saveAsTable(name)
-
-    def read_bucketed(self, name: str) -> DataFrame:
-        return self.spark.table(name)
 
     # -- maintenance: small-file compaction ---------------------------------
 

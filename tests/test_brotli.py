@@ -1,19 +1,22 @@
 """S2 — the brotli input codec, exercised end-to-end.
 
 The reference's real inputs are ``.br`` files (process_snapshot.py:324-342).
-Full-format decode (huffman + dictionary meta-blocks) rides pyarrow's
-bundled brotli codec; the vendored RFC 7932 stored-mode subset remains the
-dependency-free floor.  Stored-mode vectors below are hand-derived from the
-RFC, independent of the encoder, so encoder and decoder cannot be wrong
-together.
+They decode in one pass through pyarrow's streaming brotli reader.  The
+literal vectors below are hand-derived from RFC 7932, independent of any
+encoder, so encoder and decoder cannot be wrong together.
 """
 
+import random
+
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from open_bus_siri_etl_spark.sources import brotli_fallback
+from open_bus_siri_etl_spark.metrics import SparkJobs
 from open_bus_siri_etl_spark.sources.snapshots import (
+    brotli_compress,
+    brotli_decompress,
     read_snapshots_brotli,
     write_snapshot_fixture,
 )
@@ -21,102 +24,69 @@ from open_bus_siri_etl_spark.sources.snapshots import (
 from .fixtures import TEST_SNAPSHOT_DATA, TEST_SNAPSHOT_ID
 
 
-# -- codec unit vectors ------------------------------------------------------
+# -- RFC 7932 literal vectors ------------------------------------------------
 
 
 def test_decode_known_empty_streams():
     # 0x3b: WBITS=22, ISLAST=1, ISLASTEMPTY=1 — the canonical empty stream
-    # real brotli emits; 0x06: same with WBITS=16 (our encoder's header).
-    assert brotli_fallback.decompress(b"\x3b") == b""
-    assert brotli_fallback.decompress(b"\x06") == b""
+    # real brotli emits; 0x06: same with WBITS=16.
+    assert brotli_decompress(b"\x3b") == b""
+    assert brotli_decompress(b"\x06") == b""
 
 
 def test_decode_hand_built_stored_stream():
     # bits (LSB-first): 0 WBITS=16 | 0 ISLAST | 00 MNIBBLES=4 |
     # 16x0 MLEN-1=0 | 1 ISUNCOMPRESSED | pad-to-byte | 'A' | 1 ISLAST,
     # 1 ISLASTEMPTY  →  00 00 10 41 03
-    stream = b"\x00\x00\x10\x41\x03"
-    assert brotli_fallback.decompress(stream) == b"A"
-    # the encoder makes the identical choices
-    assert brotli_fallback.compress(b"A") == stream
+    assert brotli_decompress(b"\x00\x00\x10\x41\x03") == b"A"
 
 
 def test_entropy_coded_stream_raises():
-    # ISLAST=1 meta-block with MNIBBLES=4: content would be entropy-coded
-    with pytest.raises(brotli_fallback.UnsupportedBrotliData):
-        brotli_fallback.decompress(b"\x02\x00\x00\x00")
-
-
-@settings(max_examples=50, deadline=None)
-@given(st.binary(max_size=300))
-def test_roundtrip_property(data):
-    assert brotli_fallback.decompress(brotli_fallback.compress(data)) == data
-
-
-def test_roundtrip_multi_metablock():
-    data = bytes(range(256)) * 600  # ~150 KiB → 3 uncompressed meta-blocks
-    out = brotli_fallback.compress(data)
-    assert brotli_fallback.decompress(out) == data
+    # ISLAST=1 meta-block with MNIBBLES=4 whose entropy-coded content is cut
+    # off: not a valid stream
+    with pytest.raises(OSError):
+        brotli_decompress(b"\x02\x00\x00\x00")
 
 
 def test_metadata_metablock_skipped():
-    # splice a metadata meta-block (MNIBBLES code 3, skip 2 bytes) between
-    # the header and a stored block: 0 WBITS | 0 ISLAST | 11 MNIBBLES=0 |
-    # 0 reserved | 01 MSKIPBYTES=1 | 8 bits MSKIPLEN-1=1 | pad | 2 junk bytes
-    w = brotli_fallback._BitWriter()
-    w.write(0, 1)
-    w.write(0, 1)
-    w.write(3, 2)
-    w.write(0, 1)
-    w.write(1, 2)
-    w.write(1, 8)
-    w.align()
-    w.write_bytes(b"\xde\xad")
-    # then a normal stored block for b"hi" + last-empty
-    w.write(0, 1)
-    w.write(0, 2)
-    w.write(1, 16)
-    w.write(1, 1)
-    w.align()
-    w.write_bytes(b"hi")
-    w.write(1, 1)
-    w.write(1, 1)
-    assert brotli_fallback.decompress(bytes(w.out)) == b"hi"
+    # a metadata meta-block between the header and a stored block:
+    # 0 WBITS | 0 ISLAST | 11 MNIBBLES=0 | 0 reserved | 01 MSKIPBYTES=1 |
+    # 8 bits MSKIPLEN-1=1 | pad | 2 skipped bytes (de ad), then a stored
+    # block for b"hi" (0 ISLAST | 00 MNIBBLES=4 | MLEN-1=1 | 1
+    # ISUNCOMPRESSED | pad | "hi") and ISLAST=1, ISLASTEMPTY=1
+    assert brotli_decompress(b"\xac\x00\xde\xad\x08\x00\x08hi\x03") == b"hi"
 
 
-# -- full-format decode via pyarrow's bundled codec --------------------------
+# -- full-format round trips -------------------------------------------------
 
 
 def test_full_format_decode_entropy_coded():
     """Real huffman/dictionary-coded streams (what the reference's S3 bucket
-    actually serves) decode through the pyarrow codec path — the stored-mode
-    fallback alone would raise UnsupportedBrotliData on these."""
-    import pyarrow as pa
-
-    from open_bus_siri_etl_spark.sources.snapshots import brotli_decompress
-
-    if not pa.Codec.is_available("brotli"):
-        pytest.skip("pyarrow built without brotli")
+    actually serves) decode."""
     # compressible text → the encoder emits entropy-coded meta-blocks
     data = b'{"Siri": {"ServiceDelivery": {"StopMonitoringDelivery": []}}}' * 500
-    comp = bytes(pa.Codec("brotli").compress(data))
+    comp = pa.Codec("brotli").compress(data, asbytes=True)
     assert len(comp) < len(data) // 10  # genuinely entropy-coded, not stored
-    with pytest.raises(brotli_fallback.UnsupportedBrotliData):
-        brotli_fallback.decompress(comp)  # fallback can't — codec must
+    assert brotli_decompress(comp) == data
+
+
+def test_roundtrip_multi_metablock():
+    # 150 KiB of incompressible bytes: the encoder spreads them over several
+    # meta-blocks, so the first one's ISLAST bit (right after the 1-, 4- or
+    # 7-bit WBITS field) is 0
+    data = random.Random(0).randbytes(150 * 1024)
+    comp = brotli_compress(data)
+    head = comp[0]
+    wbits_len = 7 if head & 0x0F == 1 else 4 if head & 1 else 1
+    assert not head >> wbits_len & 1
     assert brotli_decompress(comp) == data
 
 
 @settings(max_examples=25, deadline=None)
 @given(st.binary(max_size=2000))
 def test_full_format_roundtrip_property(data):
-    """brotli_compress→brotli_decompress roundtrip through whichever codec
-    is active (pyarrow here), incl. the empty payload and incompressible
-    random bytes (exercises the exact-size search on both branches)."""
-    from open_bus_siri_etl_spark.sources.snapshots import (
-        brotli_compress,
-        brotli_decompress,
-    )
-
+    """brotli_compress→brotli_decompress round trip, incl. the empty payload
+    and incompressible random bytes."""
     assert brotli_decompress(brotli_compress(data)) == data
 
 
@@ -154,29 +124,14 @@ def test_process_snapshot_from_brotli_golden(spark, warehouse, tmp_path):
     assert row["etl_status"] == control.ETL_LOADED
 
 
-def test_pyarrow_codec_oversized_buffer_contract():
-    """_pa_brotli_decompress leans on an undocumented pyarrow codec
-    behavior: decompress succeeds (zero-padded) for ANY declared size >=
-    the actual decoded length and raises for any smaller size.  Pin that
-    assumption directly so a pyarrow upgrade that starts enforcing exact
-    decompressed_size fails HERE, obviously, instead of making every decode
-    probe to the 16 GiB cap and die confusingly."""
-    import pytest
-
-    from open_bus_siri_etl_spark.sources import snapshots
-
-    if snapshots._PA_BROTLI is None:
-        pytest.skip("pyarrow brotli codec unavailable")
-
-    plain = b"the quick brown fox jumps over the lazy dog" * 10
-    payload = bytes(snapshots._PA_BROTLI.compress(plain))
-
-    # exact size: succeeds and round-trips
-    assert bytes(snapshots._PA_BROTLI.decompress(payload, len(plain))) == plain
-    # oversized: succeeds, zero-padded to the declared size
-    over = snapshots._PA_BROTLI.decompress(payload, len(plain) + 37)
-    assert bytes(over)[: len(plain)] == plain
-    assert len(bytes(over)) in (len(plain), len(plain) + 37)
-    # undersized: must raise (the probe's bisection invariant)
-    with pytest.raises(OSError):
-        snapshots._PA_BROTLI.decompress(payload, len(plain) - 1)
+def test_brotli_frame_build_launches_no_job(spark, tmp_path):
+    """The decoded rows carry an explicit schema: building the frame infers
+    nothing, so no file is decoded before the frame's own action runs."""
+    landing = str(tmp_path / "landing")
+    paths = [
+        write_snapshot_fixture(landing, sid, TEST_SNAPSHOT_DATA, compressed=True)
+        for sid in (TEST_SNAPSHOT_ID, "2019/05/05/16/01")
+    ]
+    with SparkJobs(spark) as jobs:
+        read_snapshots_brotli(spark, paths)
+    assert jobs.n == 0

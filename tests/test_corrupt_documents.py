@@ -1,6 +1,7 @@
 """A snapshot whose document does not parse ends ``error`` with
 ``corrupt document`` and writes nothing to the warehouse, on all three ingest
-paths: the single-snapshot load, the bulk batch and the stream.  The rest of
+paths: the single-snapshot load, the bulk batch and the stream.  A landed
+``.json.br`` that does not decode counts as a corrupt document too.  The rest of
 a batch loads as if the corrupt snapshot were not there, and a corrupt reload
 of a loaded snapshot keeps its earlier facts and dead letters."""
 
@@ -27,8 +28,9 @@ COUNTERS = [
 ]
 
 
-def _land_corrupt(root, snapshot_id):
-    path = snapshot_path(root, snapshot_id)
+def _land_corrupt(root, snapshot_id, compressed=False):
+    # as a .json.br the same bytes are not a brotli stream
+    path = snapshot_path(root, snapshot_id, compressed=compressed)
     os.makedirs(os.path.dirname(path), exist_ok=True)
     with open(path, "w") as f:
         f.write("<html>502 Bad Gateway</html>")
@@ -66,20 +68,21 @@ def _shifted(i):
 def test_bulk_batch_isolates_corrupt_document(spark, warehouse, tmp_path):
     landing = str(tmp_path / "landing")
     ids = []
-    for i in range(3):
+    for i in range(4):
         sid, doc = _shifted(i)
         ids.append(sid)
-        if i == 1:
-            _land_corrupt(landing, sid)
+        if i in (1, 3):
+            _land_corrupt(landing, sid, compressed=i == 3)
         else:
             write_snapshot_fixture(landing, sid, doc)
     good = [ids[0], ids[2]]
 
     stats = process_snapshots_bulk(spark, warehouse, ids, landing)
     assert set(stats) == set(good)
-    _assert_corrupt(warehouse, ids[1])
-    assert ids[1] not in _facts(warehouse)
-    assert ids[1] not in _dead_letters(warehouse)
+    for bad in (ids[1], ids[3]):
+        _assert_corrupt(warehouse, bad)
+        assert bad not in _facts(warehouse)
+        assert bad not in _dead_letters(warehouse)
 
     # the other two load exactly as a batch without the corrupt one does
     clean = Warehouse(spark, str(tmp_path / "clean"))
@@ -95,10 +98,13 @@ def test_bulk_batch_isolates_corrupt_document(spark, warehouse, tmp_path):
 
 def test_process_snapshot_corrupt_document_writes_nothing(spark, warehouse, tmp_path):
     landing = str(tmp_path / "landing")
+    br_id, _ = _shifted(1)
     _land_corrupt(landing, TEST_SNAPSHOT_ID)
-    with pytest.raises(ValueError, match="corrupt document"):
-        process_snapshot(spark, warehouse, TEST_SNAPSHOT_ID, landing)
-    _assert_corrupt(warehouse, TEST_SNAPSHOT_ID)
+    _land_corrupt(landing, br_id, compressed=True)
+    for sid in (TEST_SNAPSHOT_ID, br_id):
+        with pytest.raises(ValueError, match="corrupt document"):
+            process_snapshot(spark, warehouse, sid, landing)
+        _assert_corrupt(warehouse, sid)
     # only the control log was written: no table, not even an empty one
     assert sorted(os.listdir(warehouse.path)) == ["siri_snapshot"]
 

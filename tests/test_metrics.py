@@ -1,14 +1,9 @@
 from pyspark.sql import functions as F
 
-from open_bus_siri_etl_spark.metrics import DebugTime, observed, print_debug_time_stats
+from open_bus_siri_etl_spark.metrics import observed
 
 
-def test_debug_time_and_observe(spark, capsys):
-    with DebugTime("unit-test-phase"):
-        pass
-    print_debug_time_stats()
-    assert "unit-test-phase" in capsys.readouterr().out
-
+def test_observe(spark):
     df = spark.range(100)
     df, obs = observed(df, "m", rows=F.count(F.lit(1)), total=F.sum("id"))
     df.count()

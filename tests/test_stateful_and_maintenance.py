@@ -181,65 +181,6 @@ def test_approx_percentile_tracks_exact(spark):
             )
 
 
-def test_merge_table_updates_and_inserts(spark, warehouse):
-    warehouse.overwrite(
-        "siri_route",
-        spark.createDataFrame(
-            [(1, 10, 100), (2, 20, 200)], "id long, operator_ref int, line_ref int"
-        ),
-    )
-    warehouse.merge_table(
-        "siri_route",
-        spark.createDataFrame(
-            [(2, 21, 201), (3, 30, 300)], "id long, operator_ref int, line_ref int"
-        ),
-        ["id"],
-    )
-    got = sorted(tuple(r) for r in warehouse.read("siri_route").collect())
-    # row 1 untouched, row 2 updated in place, row 3 inserted
-    assert got == [(1, 10, 100), (2, 21, 201), (3, 30, 300)]
-
-
-def test_bucketed_join_has_no_exchange(spark, warehouse):
-    """Both sides bucketed on the join key with the same bucket count must
-    sort-merge-join with zero Exchange — the co-located-join contract that
-    saves re-shuffling the fact table on every query at 100 TB."""
-    sf = "/root/testdata/sf0.001"
-    orders = spark.read.parquet(f"{sf}/orders.parquet").coalesce(1)
-    lineitem = spark.read.parquet(f"{sf}/lineitem.parquet").coalesce(1)
-    warehouse.save_bucketed(
-        orders, "orders_b", ["o_orderkey"], num_buckets=4, sort_cols=["o_orderkey"]
-    )
-    warehouse.save_bucketed(
-        lineitem, "lineitem_b", ["l_orderkey"], num_buckets=4, sort_cols=["l_orderkey"]
-    )
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = warehouse.read_bucketed("lineitem_b").join(
-            warehouse.read_bucketed("orders_b"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        plan = joined._sc._jvm.PythonSQLUtils.explainString(
-            joined._jdf.queryExecution(), "formatted"
-        )
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan
-        expected = (
-            spark.read.parquet(f"{sf}/lineitem.parquet")
-            .join(
-                spark.read.parquet(f"{sf}/orders.parquet"),
-                F.col("l_orderkey") == F.col("o_orderkey"),
-            )
-            .count()
-        )
-        assert joined.count() == expected
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS orders_b")
-        spark.sql("DROP TABLE IF EXISTS lineitem_b")
-
-
 @pytest.mark.slow
 def test_stream_stream_join(spark, tmp_path):
     """Click at t+5min matches the view; click at t+40min is outside the
@@ -1198,36 +1139,6 @@ def test_group_state_running_stats(spark, tmp_path):
     f1, f2 = final[1], final[2]
     assert (f1.n, f1.total, f1.vmin, f1.vmax) == (3, 60.0, 10.0, 30.0)
     assert (f2.n, f2.total, f2.vmin, f2.vmax) == (2, 4.0, -1.0, 5.0)
-
-
-@pytest.mark.slow
-def test_log_table_time_travel(spark, warehouse):
-    """read_as_of reconstructs a log table exactly as a reader at that
-    log_seq saw it — the append-only log IS the version history."""
-    import pytest as _pytest
-
-    from open_bus_siri_etl_spark import control
-
-    sid = "2024/01/01/00/10"
-    control.register_pending(warehouse, [sid])
-    v1 = [r.log_seq for r in warehouse.log_versions("siri_snapshot").collect()]
-    control.start_loading(warehouse, sid)
-    control.mark_loaded(warehouse, sid, {"num_successful": 3, "num_failed": 0})
-    versions = [r.log_seq for r in warehouse.log_versions("siri_snapshot").collect()]
-    assert len(versions) >= 3 and versions == sorted(versions)
-
-    def status_at(seq):
-        rows = warehouse.read_as_of("siri_snapshot", seq).filter(
-            F.col("snapshot_id") == sid
-        ).collect()
-        return rows[0]["etl_status"] if rows else None
-
-    assert status_at(v1[-1]) == control.ETL_PENDING
-    assert status_at(versions[-1]) == control.ETL_LOADED
-    assert status_at(versions[0] - 1) is None  # before the first append
-
-    with _pytest.raises(ValueError):
-        warehouse.read_as_of("siri_vehicle_location", 1)
 
 
 @pytest.mark.slow

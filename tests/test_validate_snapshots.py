@@ -21,8 +21,8 @@ SID_JSON, SID_BR = "2019/05/05/16/00", "2019/05/05/16/01"
 IDS = [SID_JSON, SID_BR]
 
 # Spark jobs of one validate_snapshots(...).collect() over the two minutes,
-# as measured with the report as one plan: 6 with both minutes as .json, 7
-# with one as .json.br (the brotli read infers its decoded rows' schema).
+# as measured with the report as one plan: 6 with both minutes as .json, and
+# 6 with one as .json.br (the brotli read builds its frame without a job).
 # The report as a union of nine branches over two checkpointed sides
 # launched 25 and 26.
 VALIDATE_JOB_BUDGET = 8
